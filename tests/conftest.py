@@ -48,17 +48,36 @@ def pytest_configure(config):
     )
 
 
+def _oracle_slot(item) -> tuple[str, str] | None:
+    """(tier, oracle name) of a differential test item, else None."""
+    if "[" not in item.nodeid:
+        return None
+    param = item.nodeid.rsplit("[", 1)[1].rstrip("]")
+    if param not in ORACLES:
+        return None
+    if "test_queries_differential.py::test_query_matches_oracle" in item.nodeid:
+        return "smoke", param
+    if "test_sf001_heavy" in item.nodeid:
+        return "heavy", param
+    return None
+
+
 def pytest_collection_modifyitems(config, items):
     for it in items:
-        if "[" not in it.nodeid:
-            continue
-        param = it.nodeid.rsplit("[", 1)[1].rstrip("]")
-        if param not in ORACLES:
-            continue
-        if "test_queries_differential.py::test_query_matches_oracle" in it.nodeid:
-            _COLLECTED_ORACLES["smoke"].add(param)
-        elif "test_sf001_heavy" in it.nodeid:
-            _COLLECTED_ORACLES["heavy"].add(param)
+        slot = _oracle_slot(it)
+        if slot is not None:
+            _COLLECTED_ORACLES[slot[0]].add(slot[1])
+
+
+def pytest_deselected(items):
+    """``-m``/``-k`` deselect after collection registered the items'
+    oracles; drop those so a ``-m "not sf001"`` run never computes
+    the heavy oracles in the background (each tier holds one item
+    per oracle name)."""
+    for it in items:
+        slot = _oracle_slot(it)
+        if slot is not None:
+            _COLLECTED_ORACLES[slot[0]].discard(slot[1])
 
 
 @pytest.fixture(scope="session")

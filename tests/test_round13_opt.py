@@ -35,46 +35,6 @@ def _store(spark, tmp_path, name="r13store", rows=None, split=3):
     return path
 
 
-def test_batch_pruned_pair_collect_overflow_routes_exhaustive(spark, tmp_path):
-    """r12 judge finding #1: the (query_id, term) pair collect is
-    bounded by max_query_terms * 8 + 1 rows; a legal eval set (many
-    queries over a small shared vocabulary) can exceed the cap while
-    passing both the max_queries and max_query_terms guards. A
-    truncated pair set would silently score queries WITHOUT their
-    dropped terms. The fix routes the whole batch to the exhaustive
-    plan (which never collects pairs). Drive >cap pairs through a
-    shrunken cap and assert bit-identity with the exhaustive batch."""
-    from docker_etl_spark.operators.search import (
-        search_bm25_topk_batch,
-        search_bm25_topk_batch_pruned,
-    )
-
-    path = _store(spark, tmp_path)
-    # max_query_terms=2 -> pair cap = 16. 9 queries x 2 shared terms
-    # = 18 pairs: over the cap, yet only 2 distinct terms (passes the
-    # term guard) and 9 queries (passes the query guard).
-    q = spark.createDataFrame(
-        [(i, ["spark", "join"]) for i in range(9)],
-        "query_id long, terms array<string>",
-    )
-    diag = {}
-    got = sorted(
-        tuple(r)
-        for r in search_bm25_topk_batch_pruned(
-            q, path, k=3, max_query_terms=2, _diag=diag
-        ).collect()
-    )
-    assert diag["mode"] == "exhaustive", diag
-    assert "pair" in diag["reason"], diag
-    ref = sorted(
-        tuple(r)
-        for r in search_bm25_topk_batch(
-            q, path, k=3, max_query_terms=2
-        ).collect()
-    )
-    assert got == ref and len(got) > 0
-
-
 def test_batch_pruned_at_cap_not_over_still_prunes(spark, tmp_path):
     """Exactly AT the cap (not over) the pruned path must still run:
     the overflow check fires only when the +1 sentinel row arrives."""

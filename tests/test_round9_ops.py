@@ -376,9 +376,7 @@ def test_search_bm25_topk_batch_matches_single_query_calls(spark, tmp_path):
     for qid, terms in qdefs:
         single = [
             (r["doc_id"], r["n_terms"], r["score_scaled"], r["rank"])
-            for r in search_bm25_topk(
-                spark, path, tuple(dict.fromkeys(terms)), k=7
-            ).collect()
+            for r in search_bm25_topk(spark, path, tuple(terms), k=7).collect()
         ]
         want = sorted(single, key=lambda t: t[3])
         have = sorted(got.get(qid, []), key=lambda t: t[3])

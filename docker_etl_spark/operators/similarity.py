@@ -2378,6 +2378,7 @@ def write_ivfpq_store(
     fixed symmetrically here).
     """
     from docker_etl_spark.sources.stores import (
+        reject_at_or_below_horizon,
         store_writer_lock,
         write_repartition,
         write_sidecar_rows,
@@ -2397,7 +2398,7 @@ def write_ivfpq_store(
     with store_writer_lock(path, owner="write_ivfpq_store"):
         # horizon check under the lease (a concurrent compaction could
         # otherwise raise the horizon between check and write)
-        _check_ivfpq_horizon(spark, path, batch_id, caller="write_ivfpq_store")
+        reject_at_or_below_horizon(spark, path, batch_id, "write_ivfpq_store")
         (
             index.select(
                 F.col(id_col),
@@ -2418,13 +2419,9 @@ def write_ivfpq_store(
             .partitionBy("__cell", "__batch_id")
             .parquet(path + "/codes")
         )
-        # The quantizer rows are a local Python collection already —
-        # land them driver-direct (write_sidecar_rows contract); the
-        # Spark fallback pays one scheduled job (repartition(1), NOT
-        # coalesce(1): a coalesced single task evaluates all
-        # defaultParallelism local-collection partitions sequentially
-        # through one python worker, ~5 s for 13 rows).
-        if not write_sidecar_rows(
+        # the quantizer rows are a local Python collection already
+        write_sidecar_rows(
+            spark,
             path + "/quantizer",
             qrows,
             [
@@ -2433,53 +2430,18 @@ def write_ivfpq_store(
                 ("idx1", "int32"),
                 ("vals", "list<int64>"),
             ],
-        ):
-            (
-                spark.createDataFrame(
-                    qrows,
-                    "part string, idx0 int, idx1 int, vals array<bigint>",
-                )
-                .repartition(1)
-                .write.mode("overwrite")
-                .parquet(path + "/quantizer")
-            )
+        )
 
 
 def read_ivfpq_horizon(spark, path: str) -> int | None:
     """The store's compaction horizon (highest ``up_to_batch`` any
-    :func:`compact_ivfpq_store` folded), or None if never compacted.
-    Its own 1-row ``{path}/horizon`` sidecar (the search-store
-    pattern): rewritten per compaction, and an incomplete rewrite
-    degrades to "no guard until the next compaction", never to a
-    corrupted quantizer sidecar."""
-    from docker_etl_spark.sources.stores import (
-        parquet_write_completed,
-        read_sidecar_rows,
-    )
+    :func:`compact_ivfpq_store` folded), or None if never compacted —
+    the shared ``{path}/horizon`` marker
+    (:func:`~docker_etl_spark.sources.stores.read_horizon`), kept
+    apart from the quantizer sidecar."""
+    from docker_etl_spark.sources.stores import read_horizon
 
-    if not parquet_write_completed(spark, path + "/horizon"):
-        return None
-    rows = read_sidecar_rows(path + "/horizon")
-    if rows is not None:
-        return int(rows[0]["compacted_through"])
-    row = spark.read.parquet(path + "/horizon").collect()[0]
-    return int(row["compacted_through"])
-
-
-def _check_ivfpq_horizon(
-    spark, path: str, batch_id: int | None, caller: str
-) -> None:
-    horizon = read_ivfpq_horizon(spark, path)
-    bid = -1 if batch_id is None else batch_id
-    if horizon is not None and bid <= horizon:
-        raise ValueError(
-            f"{caller}: batch_id={batch_id} is at or below the store's "
-            f"compaction horizon {horizon} at {path} — those partitions "
-            "were folded into the base, so this write would land "
-            "duplicate code rows beside their folded copies; redeliver "
-            "only batches above the horizon (pick compaction horizons "
-            "older than any batch your source can still redeliver)"
-        )
+    return read_horizon(spark, path)
 
 
 def read_ivfpq_deletes(
@@ -2487,18 +2449,13 @@ def read_ivfpq_deletes(
 ) -> DataFrame | None:
     """The store's PENDING tombstones (one id per deleted vector per
     delete batch, ``{path}/deletes`` partitioned by ``__batch_id``)
-    or None when it carries none — the search-store sidecar pattern
-    (:func:`~docker_etl_spark.operators.search.read_search_deletes`),
-    gated on the sidecar being committed so the crash window reads as
+    or None when it carries none — the shared tombstone sidecar
+    (:func:`~docker_etl_spark.sources.stores.read_tombstones`), gated
+    on the sidecar being committed so the crash window reads as
     absent. ``as_of_batch`` snapshot-reads the delete history."""
-    from docker_etl_spark.sources.stores import parquet_write_completed
+    from docker_etl_spark.sources.stores import read_tombstones
 
-    if not parquet_write_completed(spark, path + "/deletes"):
-        return None
-    d = spark.read.parquet(path + "/deletes")
-    if as_of_batch is not None:
-        d = d.filter(F.col("__batch_id") <= as_of_batch)
-    return d
+    return read_tombstones(spark, path, as_of_batch)
 
 
 def delete_from_ivfpq_store(
@@ -2523,42 +2480,11 @@ def delete_from_ivfpq_store(
     re-ingested (its tombstone excludes the new copy too —
     ``ivfpq_append(assume_new_ids=False)`` keeps treating deleted
     ids as seen)."""
-    from docker_etl_spark.sources.stores import store_writer_lock
+    from docker_etl_spark.sources.stores import delete_from_store
 
-    if isinstance(vec_ids, DataFrame):
-        ids = vec_ids.select(
-            F.col(vec_ids.columns[0]).alias(id_col)
-        ).distinct()
-    else:
-        vals = list(vec_ids)
-        if not vals:
-            raise ValueError("delete_from_ivfpq_store: empty vec_ids")
-        ids = spark.createDataFrame(
-            [(v,) for v in vals], [id_col]
-        ).distinct()
-    with store_writer_lock(path, owner="delete_from_ivfpq_store"):
-        horizon = read_ivfpq_horizon(spark, path)
-        if horizon is not None and batch_id <= horizon:
-            raise ValueError(
-                f"delete_from_ivfpq_store: batch_id={batch_id} is at or "
-                f"below the store's compaction horizon {horizon} at "
-                f"{path} — tombstones at that height were already "
-                "applied physically and cleared; issue deletes only "
-                "above the horizon"
-            )
-        # bounded tombstone batch: driver-direct write, Spark
-        # fallback (write_tombstone_sidecar contract)
-        from docker_etl_spark.sources.stores import write_tombstone_sidecar
-
-        if not write_tombstone_sidecar(ids, path + "/deletes", batch_id):
-            (
-                ids.withColumn("__batch_id", F.lit(int(batch_id)))
-                .repartition(1)
-                .write.option("partitionOverwriteMode", "dynamic")
-                .mode("overwrite")
-                .partitionBy("__batch_id")
-                .parquet(path + "/deletes")
-            )
+    delete_from_store(
+        spark, path, vec_ids, batch_id, id_col, "delete_from_ivfpq_store"
+    )
 
 
 def load_ivfpq_store(
@@ -2579,11 +2505,7 @@ def load_ivfpq_store(
     """
     from docker_etl_spark.sources.stores import read_sidecar_rows
 
-    # bounded quantizer sidecar (n_cells·dim + m·k·(dim/m) rows):
-    # driver-direct read, Spark fallback for non-local stores
-    q = read_sidecar_rows(path + "/quantizer")
-    if q is None:
-        q = spark.read.parquet(path + "/quantizer").collect()
+    q = read_sidecar_rows(spark, path + "/quantizer")
     meta_row = next(r for r in q if r["part"] == "meta")
     n_cells, m, k, d, quant_scale = (int(x) for x in meta_row["vals"])
     coarse_rows = {r["idx1"]: list(r["vals"]) for r in q if r["part"] == "coarse"}
@@ -2656,13 +2578,14 @@ def ivfpq_append(
     (see :func:`write_ivfpq_store`).
     """
     from docker_etl_spark.sources.stores import (
+        reject_at_or_below_horizon,
         store_writer_lock,
         write_repartition,
     )
 
     spark = new_vecs.sparkSession
     # fail-fast pre-check; re-checked under the lease before the write
-    _check_ivfpq_horizon(spark, path, batch_id, caller="ivfpq_append")
+    reject_at_or_below_horizon(spark, path, batch_id, "ivfpq_append")
     # raw view (apply_deletes=False): a deleted id stays "seen", so
     # assume_new_ids=False filters re-ingests of purged ids — their
     # tombstone would exclude the new copy anyway
@@ -2688,7 +2611,7 @@ def ivfpq_append(
         quant_scale=meta["quant_scale"],
     )
     with store_writer_lock(path, owner="ivfpq_append"):
-        _check_ivfpq_horizon(spark, path, batch_id, caller="ivfpq_append")
+        reject_at_or_below_horizon(spark, path, batch_id, "ivfpq_append")
         (
             enc.select(
                 F.col(id_col),
@@ -2800,7 +2723,8 @@ def compact_ivfpq_store(
     backup rename → live rename, with roll-forward/roll-back
     recovery on entry), and takes the writer lease on the STORE ROOT
     — the same lock write/append use — so compaction serializes
-    against concurrent ingest.
+    against concurrent ingest. Local stores only: any other path
+    raises ``ValueError`` before anything is written.
 
     Trade (explicit): ``as_of_batch`` snapshot reads remain exact
     for horizons >= ``up_to_batch``; below it the per-batch
@@ -2818,126 +2742,37 @@ def compact_ivfpq_store(
     re-running the compaction completes it.
     """
     from docker_etl_spark.sources.stores import (
+        clear_tombstones,
         compact_partitioned_store,
-        store_writer_lock,
-        write_sidecar_rows,
+        fold_below_horizon,
+        pinned_tombstones,
+        record_horizon,
     )
 
-    with store_writer_lock(path, owner="compact_ivfpq_store"):
-        prior = read_ivfpq_horizon(spark, path)
-        if prior is None or up_to_batch > prior:
-            # 1-row marker: driver-direct write, Spark-job fallback
-            # for non-local stores (write_sidecar_rows contract)
-            if not write_sidecar_rows(
-                path + "/horizon",
-                [(int(up_to_batch),)],
-                [("compacted_through", "int64")],
-            ):
-                (
-                    spark.createDataFrame(
-                        [(int(up_to_batch),)], "compacted_through long"
-                    )
-                    .repartition(1)
-                    .write.mode("overwrite")
-                    .parquet(path + "/horizon")
-                )
-
+    owner = "compact_ivfpq_store"
+    record_horizon(spark, path, up_to_batch, owner)
     # tombstones at or below the horizon are applied PHYSICALLY here
-    # (FAISS remove_ids semantics, the search-store r12 recipe): the
-    # codes fold anti-joins them and the applied entries are cleared
-    # from the sidecar LAST — a crash between the folds leaves them
-    # pending, which is safe (probes keep anti-joining ids whose rows
-    # are gone) and a re-run completes the clear
-    del_ids = None
-    del_id_col = None
-    from docker_etl_spark.sources.stores import (
-        parquet_write_completed as _pwc,
-        read_sidecar_rows as _rsr,
-    )
-
-    if _pwc(spark, path + "/deletes"):
-        # bounded tombstone sidecar: driver-direct read + literal
-        # frame replaces the localCheckpoint + probe-count jobs (the
-        # compact_search_index recipe); Spark fallback for
-        # non-local/oversized sidecars
-        drows = _rsr(path + "/deletes")
-        if drows is not None:
-            sel = [
-                r
-                for r in drows
-                if int(r.get("__batch_id", -1)) <= up_to_batch
-            ]
-            if sel:
-                del_id_col = [c for c in sel[0] if c != "__batch_id"][0]
-                vals = sorted({r[del_id_col] for r in sel})
-                del_ids = spark.createDataFrame(
-                    [(v,) for v in vals], [del_id_col]
-                )
-        else:
-            dels = read_ivfpq_deletes(spark, path, as_of_batch=up_to_batch)
-            if dels is not None:
-                del_id_col = [
-                    c for c in dels.columns if c != "__batch_id"
-                ][0]
-                ids = dels.select(del_id_col).distinct().localCheckpoint()
-                if ids.limit(1).count() > 0:
-                    del_ids = ids
-
-    def fold(df: DataFrame) -> DataFrame:
-        out = df.withColumn(
-            "__batch_id",
-            F.when(
-                F.col("__batch_id") <= up_to_batch, F.lit(-1)
-            ).otherwise(F.col("__batch_id")),
-        )
-        if del_ids is not None:
-            id_name = [
-                c for c in df.columns
-                if c not in ("__cell", "pq_code", "__batch_id")
-            ][0]
-            out = out.join(
-                del_ids.select(F.col(del_id_col).alias(id_name)),
-                id_name,
-                "left_anti",
-            )
-        return out
-
+    # (FAISS remove_ids semantics, the search-store recipe): the codes
+    # fold anti-joins them and the applied entries are cleared from
+    # the sidecar LAST
+    del_ids = pinned_tombstones(spark, path, up_to_batch)
     res = compact_partitioned_store(
         spark,
         path + "/codes",
         ("__cell", "__batch_id"),
         target_rows_per_file=target_rows_per_file,
-        owner="compact_ivfpq_store",
-        transform=fold,
+        owner=owner,
+        transform=lambda df: fold_below_horizon(
+            df,
+            up_to_batch,
+            del_ids,
+            next(
+                c for c in df.columns
+                if c not in ("__cell", "pq_code", "__batch_id")
+            ),
+        ),
         lock_path=path,
     )
     if del_ids is not None:
-        # clear-applied-tombstones = pure partition filtering: the
-        # driver-direct tiered path copies surviving delta files
-        # byte-for-byte and folds nothing (Spark fallback for
-        # non-local/oversized sidecars).
-        from docker_etl_spark.sources.stores import (
-            compact_sidecar_partitioned,
-        )
-
-        cleared = compact_sidecar_partitioned(
-            spark,
-            path + "/deletes",
-            up_to_batch,
-            lambda _gk, _tables: None,
-            owner="compact_ivfpq_store",
-            lock_path=path,
-        )
-        if cleared is None:
-            compact_partitioned_store(
-                spark,
-                path + "/deletes",
-                ("__batch_id",),
-                target_rows_per_file=target_rows_per_file,
-                owner="compact_ivfpq_store",
-                transform=lambda df: df.filter(
-                    F.col("__batch_id") > up_to_batch
-                ),
-                lock_path=path,
-            )
+        clear_tombstones(spark, path, up_to_batch, owner)
     return res

@@ -1,4 +1,5 @@
-"""Shared-store write discipline: single-writer lease + compaction.
+"""Shared-store write discipline: single-writer lease, the delta-store
+lifecycle, bounded sidecars and compaction.
 
 The incremental digest/signature/vector stores
 (operators/dedupe.write_digest_store, text_dedup.write_signature_store,
@@ -21,17 +22,52 @@ fxci_etl/loaders/bigquery.py:26-28). Compaction preserves the
 partition layout (band / tbl / digest_prefix directories) so the
 partition-pruned probe plans are unchanged, and sizes itself from
 parquet FOOTER metadata — never a full-scan ``count()``.
+
+DELTA-STORE LIFECYCLE. The search index (``{path}/postings``) and the
+IVF-PQ store (``{path}/codes``) share one on-disk lifecycle beside
+their data: a 1-row ``{path}/horizon`` marker (the highest batch a
+compaction folded; :func:`read_horizon`, :func:`reject_at_or_below_
+horizon`, :func:`record_horizon`) and a ``{path}/deletes`` tombstone
+sidecar partitioned by ``__batch_id`` (:func:`delete_from_store`,
+:func:`read_tombstones`, :func:`pinned_tombstones`,
+:func:`clear_tombstones`). Compaction records the horizon FIRST and
+clears the applied tombstones LAST, so a crash anywhere between leaves
+a read-consistent store that a re-run completes.
+
+THE ARM RULE. Bounded sidecar reads and writes
+(:func:`read_sidecar_rows`, :func:`write_sidecar_rows`,
+:func:`write_tombstone_sidecar`), the existence probes
+(:func:`parquet_path_exists`, :func:`parquet_write_completed`) and the
+layout batch count (:func:`batch_count`) each have two arms, and
+:func:`_driver_direct` alone picks one: a LOCAL path runs driver-direct
+— pyarrow, the directory listing and parquet footers, no Spark job
+(metadata reads and writes should not be jobs, the table-format
+manifest lesson) — and any other path runs as Spark jobs or a Hadoop
+FileSystem listing. A tombstone batch given as a DataFrame also takes
+the Spark arm past its row bound or for an id type outside
+:data:`_SIDECAR_TYPES`. Both arms write the same files with the same
+column types.
+
+COMPACTION IS LOCAL-ONLY. The two-rename swap needs a POSIX rename;
+:func:`compact_partitioned_store`, :func:`compact_sidecar_partitioned`
+and :func:`record_horizon` raise ``ValueError`` on any other path —
+``record_horizon`` before it writes, so a non-local compaction fails
+before it changes anything. Object-store layouts need a table format
+(Delta/Iceberg) for safe swaps.
 """
 
 from __future__ import annotations
 
 import contextlib
-import glob
 import logging
 import os
 import shutil
 import time
-from urllib.parse import urlparse
+from urllib.parse import unquote, urlparse
+
+from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 log = logging.getLogger(__name__)
 
@@ -247,11 +283,68 @@ def write_repartition(df, partition_cols):
     return df.repartition(max(n, floor, 1), *[str(c) for c in partition_cols])
 
 
+def _driver_direct(path: str) -> str | None:
+    """The arm rule (module docstring): the local filesystem path of
+    ``path`` when its bounded store operations run driver-direct, None
+    when they run as Spark jobs."""
+    return _local_path(path)
+
+
+def _local_store(path: str, caller: str) -> str:
+    """The local filesystem path of a store about to be compacted;
+    ``ValueError`` for any other path (compaction is local-only)."""
+    local = _local_path(path)
+    if local is None:
+        raise ValueError(
+            f"{caller} requires a local store path; object-store layouts "
+            "need a table format (Delta/Iceberg) for safe swaps"
+        )
+    return local
+
+
 def _hidden_component(name: str) -> bool:
     """Spark's listing convention (InMemoryFileIndex): "."-led names
     are always hidden; "_"-led names are hidden unless they contain
     "=" (partition directories like ``__pfx=ab``)."""
     return name.startswith(".") or (name.startswith("_") and "=" not in name)
+
+
+def _committed_files(local: str, keep=None):
+    """Yield ``(file, components)`` for every committed ``.parquet``
+    file of a local layout, in sorted path order: ``components`` are
+    the file's directory names below ``local``, still escaped as on
+    disk (:func:`_partition_values` decodes them). Hidden and staging
+    names are skipped with Spark's own listing rule, so the walk sees
+    exactly the files a Spark read would; ``keep(dirname)`` prunes
+    directories (partition pruning). A ``local`` that is itself a
+    file yields just that file."""
+    if os.path.isfile(local):
+        yield local, ()
+        return
+    for root, dirs, fns in os.walk(local):
+        dirs[:] = sorted(
+            d for d in dirs
+            if not _hidden_component(d) and (keep is None or keep(d))
+        )
+        rel = os.path.relpath(root, local)
+        comps = () if rel == "." else tuple(rel.split(os.sep))
+        for fn in sorted(fns):
+            if fn.endswith(".parquet") and not _hidden_component(fn):
+                yield os.path.join(root, fn), comps
+
+
+def _partition_values(comps) -> dict[str, str]:
+    """``key=value`` directory names → {key: percent-decoded value}."""
+    return {
+        k: unquote(v)
+        for k, _, v in (c.partition("=") for c in comps if "=" in c)
+    }
+
+
+def _footer_rows(f: str) -> int:
+    import pyarrow.parquet as pq
+
+    return pq.ParquetFile(f).metadata.num_rows
 
 
 def parquet_row_count(path: str) -> int | None:
@@ -265,224 +358,7 @@ def parquet_row_count(path: str) -> int | None:
     local = _local_path(path)
     if local is None or not os.path.exists(local):
         return None
-    if os.path.isfile(local):
-        files = [local]
-    else:
-        files = []
-        for root, dirs, fns in os.walk(local):
-            dirs[:] = [d for d in dirs if not _hidden_component(d)]
-            files.extend(
-                os.path.join(root, fn)
-                for fn in fns
-                if fn.endswith(".parquet") and not _hidden_component(fn)
-            )
-    if not files:
-        return 0
-    try:
-        import pyarrow.parquet as pq
-
-        return sum(pq.ParquetFile(f).metadata.num_rows for f in files)
-    except Exception:  # pragma: no cover - pyarrow always present here
-        return None
-
-
-def read_sidecar_rows(
-    path: str,
-    max_rows: int = 100_000,
-    partition_filter: dict[str, set[str]] | None = None,
-) -> list[dict] | None:
-    """Driver-direct read of a BOUNDED sidecar parquet layout (1-row
-    meta/horizon markers, quantizer tables, stats/dict deltas) — the
-    pyarrow twin of :func:`parquet_row_count`.
-
-    These sidecars are bounded BY CONSTRUCTION (or bounded after
-    ``partition_filter`` pruning), yet a
-    ``spark.read.parquet(...).collect()`` per read pays schema
-    inference + job scheduling (~0.3-0.7 s each, several reads per
-    store probe — pure fixed overhead at any scale; the manifest-read
-    lesson from table formats: metadata reads should not be jobs).
-    Returns None when the path is not locally readable (object
-    stores) or the selected slice exceeds ``max_rows`` — callers MUST
-    fall back to the Spark read in that case. Hidden/staging files
-    are skipped with Spark's own listing convention, matching what
-    the Spark read would see.
-
-    ``partition_filter`` maps partition-column names to allowed
-    STRING values and prunes ``key=value`` directories during the
-    walk (directory pruning, like the Spark read's partition
-    filters). Partition values parsed from the directory names are
-    injected into every returned row AS STRINGS (both the escaped
-    directory form and its percent-decoded form are matched; callers
-    cast) — mirroring how Spark derives partition columns."""
-    from urllib.parse import unquote
-
-    local = _local_path(path)
-    if local is None or not os.path.isdir(local):
-        return None
-
-    def _hidden(name: str) -> bool:
-        return name.startswith(".") or (
-            name.startswith("_") and "=" not in name
-        )
-
-    def _keep(dirname: str) -> bool:
-        if partition_filter and "=" in dirname:
-            key, _, val = dirname.partition("=")
-            allowed = partition_filter.get(key)
-            if allowed is not None and not (
-                val in allowed or unquote(val) in allowed
-            ):
-                return False
-        return True
-
-    files: list[tuple[str, dict]] = []
-    for root, dirs, fns in os.walk(local):
-        dirs[:] = [d for d in dirs if not _hidden(d) and _keep(d)]
-        parts: dict[str, str] = {}
-        rel = os.path.relpath(root, local)
-        if rel != ".":
-            for comp in rel.split(os.sep):
-                if "=" in comp:
-                    key, _, val = comp.partition("=")
-                    parts[key] = unquote(val)
-        files.extend(
-            (os.path.join(root, fn), parts)
-            for fn in fns
-            if fn.endswith(".parquet") and not _hidden(fn)
-        )
-    if not files:
-        return None
-    try:
-        import pyarrow.parquet as pq
-
-        if (
-            sum(pq.ParquetFile(f).metadata.num_rows for f, _ in files)
-            > max_rows
-        ):
-            return None
-        rows: list[dict] = []
-        for f, parts in sorted(files):
-            for r in pq.read_table(f).to_pylist():
-                if parts:
-                    r.update(parts)
-                rows.append(r)
-        return rows
-    except Exception:  # pragma: no cover - pyarrow always present here
-        return None
-
-
-def write_sidecar_rows(
-    path: str,
-    rows: list[tuple],
-    schema: list[tuple[str, str]],
-    partition: dict[str, object] | None = None,
-) -> bool:
-    """Driver-direct pyarrow write of a BOUNDED sidecar parquet
-    layout — the write twin of :func:`read_sidecar_rows`. A 1-row
-    meta/horizon marker or per-batch stats delta written through a
-    Spark job pays shuffle + scheduling + commit protocol (~0.3-0.7 s
-    per write at ANY scale; several per store mutation); metadata
-    writes should not be jobs (the table-format manifest lesson).
-
-    ``schema`` is ``[(name, arrow_type_str)]`` with types matching
-    what the replaced Spark write produced (``int32`` for Spark
-    ``int``, ``int64`` for ``long``, ``bool``, ``string``) so the
-    Spark fallback read and any pre-existing Spark-written files in
-    the same layout stay type-consistent. ``partition`` appends
-    ``key=value`` directory levels and replaces ONLY that directory
-    (Spark's dynamic partition overwrite); None replaces the whole
-    sidecar directory (Spark's plain overwrite).
-
-    Crash ordering matches the Spark writes it replaces: the new file
-    lands under a hidden dot-name first, existing committed files are
-    removed, then the hidden file renames into place — a crash before
-    the unlink leaves the old sidecar intact; a crash between unlink
-    and rename leaves a directory :func:`parquet_write_completed`
-    reports ABSENT, which every sidecar reader already self-heals.
-    All call sites run under the store writer lease.
-
-    Returns False when the path is not local (object stores) or
-    pyarrow is unavailable — the caller MUST fall back to its Spark
-    write in that case."""
-    local = _local_path(path)
-    if local is None:
-        return False
-    try:
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-    except Exception:  # pragma: no cover - pyarrow always present here
-        return False
-    target = local.rstrip("/")
-    if partition:
-        for k, v in partition.items():
-            target = os.path.join(target, f"{k}={v}")
-    os.makedirs(target, exist_ok=True)
-    typemap = {
-        "int32": pa.int32(),
-        "int64": pa.int64(),
-        "bool": pa.bool_(),
-        "string": pa.string(),
-        "double": pa.float64(),
-        # Spark writes array<bigint> as a 3-level list of
-        # field name "element" — match it so mixed layouts and the
-        # Spark fallback read stay schema-identical
-        "list<int64>": pa.list_(pa.field("element", pa.int64())),
-    }
-    arrays = [
-        pa.array([r[i] for r in rows], type=typemap[t])
-        for i, (_n, t) in enumerate(schema)
-    ]
-    table = pa.table(arrays, names=[n for n, _t in schema])
-    final = os.path.join(target, f"part-00000-{os.getpid()}.parquet")
-    tmp = os.path.join(target, f".{os.path.basename(final)}.tmp")
-    pq.write_table(table, tmp)
-    for fn in os.listdir(target):
-        if fn.endswith(".parquet") and not fn.startswith((".", "_")):
-            os.unlink(os.path.join(target, fn))
-    os.rename(tmp, final)
-    return True
-
-
-def write_tombstone_sidecar(
-    ids_df, path: str, batch_id: int, max_rows: int = 100_000
-) -> bool:
-    """Driver-direct write of a bounded delete-tombstone batch under
-    its ``__batch_id`` partition — the delete twin of
-    :func:`write_sidecar_rows`. A takedown batch is bounded by
-    construction (ids only), yet the Spark write paid repartition +
-    job scheduling + commit protocol per delete call. Collects the
-    (distinct) ids under ``max_rows`` and lands them with
-    :func:`write_sidecar_rows`'s crash discipline; returns False —
-    the caller MUST fall back to its Spark write — when the path is
-    non-local, the batch exceeds the bound, or the id type has no
-    arrow mapping. Same dynamic-overwrite-one-partition semantics:
-    redelivery of the same batch replaces its own partition."""
-    if _local_path(path) is None:
-        return False
-    col = ids_df.columns[0]
-    amap = {
-        "bigint": "int64",
-        "int": "int32",
-        "string": "string",
-        "double": "double",
-    }
-    dtype = dict(ids_df.dtypes)[col]
-    if dtype not in amap:
-        return False
-    rows = ids_df.limit(max_rows + 1).collect()
-    if len(rows) > max_rows:
-        return False
-    vals = sorted({r[0] for r in rows}, key=lambda v: (v is None, v))
-    if not vals:
-        # an empty batch writes no partition (dynamic overwrite of
-        # nothing), exactly like the Spark write it replaces
-        return True
-    return write_sidecar_rows(
-        path,
-        [(v,) for v in vals],
-        [(col, amap[dtype])],
-        partition={"__batch_id": int(batch_id)},
-    )
+    return sum(_footer_rows(f) for f, _ in _committed_files(local))
 
 
 def parquet_file_count(path: str) -> int | None:
@@ -492,15 +368,404 @@ def parquet_file_count(path: str) -> int | None:
     local = _local_path(path)
     if local is None or not os.path.exists(local):
         return None
-    n = 0
-    for root, dirs, fns in os.walk(local):
-        dirs[:] = [d for d in dirs if not _hidden_component(d)]
-        n += sum(
-            1
-            for fn in fns
-            if fn.endswith(".parquet") and not _hidden_component(fn)
+    return sum(1 for _ in _committed_files(local))
+
+
+#: Sidecar column types: arrow type string → Spark DDL type. One table
+#: serves both arms, so a sidecar carries the same column types
+#: whichever arm wrote it (``int32`` is Spark's ``int``, ``int64`` its
+#: ``bigint``).
+_SIDECAR_TYPES = {
+    "int32": "int",
+    "int64": "bigint",
+    "bool": "boolean",
+    "string": "string",
+    "double": "double",
+    "list<int64>": "array<bigint>",
+}
+
+
+def _arrow_type(name: str):
+    import pyarrow as pa
+
+    if name == "list<int64>":
+        # Spark writes array<bigint> as a 3-level list whose element
+        # field is named "element" — match it so mixed layouts stay
+        # schema-identical
+        return pa.list_(pa.field("element", pa.int64()))
+    return pa.type_for_alias(name)
+
+
+def _id_type(vals) -> str:
+    """The sidecar type of a Python id list, as ``createDataFrame``
+    infers it: int → ``int64`` (bigint), str → ``string``, float →
+    ``double``."""
+    kinds = {type(v) for v in vals if v is not None}
+    for py, arrow in ((int, "int64"), (str, "string"), (float, "double")):
+        if kinds <= {py}:
+            return arrow
+    raise TypeError(
+        "ids must be all int, all str or all float; got "
+        + ", ".join(sorted(k.__name__ for k in kinds))
+    )
+
+
+def _local_frame(spark, rows: list[tuple], schema: StructType) -> DataFrame:
+    """A small driver-side relation (a query set, a per-term table, a
+    pinned tombstone set), built from a pandas frame — Arrow-serialized
+    when the session enables it, as the engine's does. A Python row
+    list plans a pickled-RDD scan instead, and joining that as a
+    broadcast measured about 0.2 s slower per relation (4 cores,
+    local[2]) — per probe, for a few rows."""
+    import pandas as pd
+
+    return spark.createDataFrame(
+        pd.DataFrame(rows, columns=schema.names), schema
+    )
+
+
+def read_sidecar_rows(
+    spark,
+    path: str,
+    max_rows: int | None = None,
+    partition_filter: dict[str, set[str]] | None = None,
+) -> list[dict] | None:
+    """All rows of a BOUNDED sidecar parquet layout (1-row meta/horizon
+    markers, quantizer tables, stats/dict deltas, tombstones) as
+    dicts. Returns None when ``max_rows`` is given and the selected
+    slice exceeds it; an absent or empty layout reads as no rows.
+
+    ``partition_filter`` maps partition-column names to allowed
+    STRING values and prunes ``key=value`` directories (both the
+    escaped directory form and its percent-decoded form match).
+    Partition values come back as strings on the driver-direct arm
+    and with Spark's inferred types on the Spark arm — callers cast.
+
+    Driver-direct arm: walk + footers + pyarrow, no job (a
+    ``spark.read.parquet(...).collect()`` pays schema inference + job
+    scheduling, ~0.3-0.7 s per read at any scale)."""
+    local = _driver_direct(path)
+    if local is None:
+        d = spark.read.parquet(path)
+        for key, allowed in (partition_filter or {}).items():
+            d = d.filter(F.col(key).cast("string").isin(sorted(allowed)))
+        if max_rows is not None:
+            d = d.limit(max_rows + 1)
+        rows = [r.asDict() for r in d.collect()]
+        return None if max_rows is not None and len(rows) > max_rows else rows
+    import pyarrow.parquet as pq
+
+    def keep(dirname: str) -> bool:
+        key, eq, val = dirname.partition("=")
+        allowed = (partition_filter or {}).get(key) if eq else None
+        return allowed is None or val in allowed or unquote(val) in allowed
+
+    files = list(_committed_files(local, keep))
+    if max_rows is not None and (
+        sum(_footer_rows(f) for f, _ in files) > max_rows
+    ):
+        return None
+    rows: list[dict] = []
+    for f, comps in files:
+        parts = _partition_values(comps)
+        for r in pq.read_table(f).to_pylist():
+            r.update(parts)
+            rows.append(r)
+    return rows
+
+
+def write_sidecar_rows(
+    spark,
+    path: str,
+    rows: list[tuple],
+    schema: list[tuple[str, str]],
+    partition: dict[str, object] | None = None,
+) -> None:
+    """Write a BOUNDED sidecar parquet layout from driver rows.
+    ``schema`` is ``[(name, arrow_type_str)]`` over
+    :data:`_SIDECAR_TYPES`. ``partition`` appends ``key=value``
+    directory levels and replaces ONLY that directory (Spark's dynamic
+    partition overwrite); None replaces the whole sidecar directory
+    (Spark's plain overwrite). All call sites run under the store
+    writer lease.
+
+    Driver-direct arm crash ordering matches the Spark write: the new
+    file lands under a hidden dot-name first, existing committed files
+    are removed, then the hidden file renames into place — a crash
+    before the unlink leaves the old sidecar intact; a crash between
+    unlink and rename leaves a directory :func:`parquet_write_completed`
+    reports ABSENT, which every sidecar reader already self-heals."""
+    local = _driver_direct(path)
+    if local is None:
+        frame = spark.createDataFrame(
+            rows, ", ".join(f"`{n}` {_SIDECAR_TYPES[t]}" for n, t in schema)
         )
-    return n
+        if partition:
+            frame = frame.withColumns(
+                {k: F.lit(v) for k, v in partition.items()}
+            )
+        w = frame.repartition(1).write.mode("overwrite")
+        if partition:
+            w = w.option("partitionOverwriteMode", "dynamic").partitionBy(
+                *partition
+            )
+        w.parquet(path)
+        return
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    target = local.rstrip("/")
+    for k, v in (partition or {}).items():
+        target = os.path.join(target, f"{k}={v}")
+    os.makedirs(target, exist_ok=True)
+    table = pa.table(
+        [
+            pa.array([r[i] for r in rows], type=_arrow_type(t))
+            for i, (_n, t) in enumerate(schema)
+        ],
+        names=[n for n, _t in schema],
+    )
+    final = os.path.join(target, f"part-00000-{os.getpid()}.parquet")
+    tmp = os.path.join(target, f".{os.path.basename(final)}.tmp")
+    pq.write_table(table, tmp)
+    for fn in os.listdir(target):
+        if fn.endswith(".parquet") and not fn.startswith((".", "_")):
+            os.unlink(os.path.join(target, fn))
+    os.rename(tmp, final)
+
+
+def write_tombstone_sidecar(
+    spark, ids_df, path: str, batch_id: int, max_rows: int = 100_000
+) -> None:
+    """Land one delete batch's distinct ids — the first column of
+    ``ids_df`` — under its ``__batch_id`` partition of the tombstone
+    sidecar at ``path``: dynamic overwrite of that one partition, so
+    redelivery of the same batch replaces its own tombstones. The
+    driver-direct arm pays one bounded collect; past ``max_rows``, or
+    for an id type outside :data:`_SIDECAR_TYPES`, a Spark job writes
+    the batch. (A Python id list needs no collect:
+    :func:`delete_from_store` writes it without a job.)"""
+    col = ids_df.columns[0]
+    arrow = {s: a for a, s in _SIDECAR_TYPES.items()}.get(
+        dict(ids_df.dtypes)[col]
+    )
+    got = None
+    if _driver_direct(path) is not None and arrow is not None:
+        got = [r[0] for r in ids_df.limit(max_rows + 1).collect()]
+    if got is None or len(got) > max_rows:
+        (
+            ids_df.select(col)
+            .distinct()
+            .withColumn("__batch_id", F.lit(int(batch_id)))
+            .repartition(1)
+            .write.option("partitionOverwriteMode", "dynamic")
+            .mode("overwrite")
+            .partitionBy("__batch_id")
+            .parquet(path)
+        )
+        return
+    _write_tombstone_rows(spark, path, batch_id, col, arrow, got)
+
+
+def _write_tombstone_rows(
+    spark, path: str, batch_id: int, id_col: str, arrow: str, ids
+) -> None:
+    """A delete batch's distinct Python ``ids`` (sidecar type
+    ``arrow``) as ``id_col`` under the batch's partition, through
+    :func:`write_sidecar_rows`. An empty batch writes no partition,
+    like the Spark write."""
+    vals = sorted(set(ids), key=lambda v: (v is None, v))
+    if vals:
+        write_sidecar_rows(
+            spark, path, [(v,) for v in vals], [(id_col, arrow)],
+            partition={"__batch_id": int(batch_id)},
+        )
+
+
+def batch_count(spark, path: str, as_of_batch: int | None = None) -> int:
+    """Distinct ``__batch_id`` partition values holding at least one
+    row (at or below ``as_of_batch`` when given) — what
+    ``countDistinct(__batch_id)`` over the raw scan returns. The
+    driver-direct arm reads it off the directory names and footers."""
+    local = _driver_direct(path)
+    if local is None:
+        d = spark.read.parquet(path)
+        if as_of_batch is not None:
+            d = d.filter(F.col("__batch_id") <= as_of_batch)
+        return int(d.agg(F.countDistinct("__batch_id")).collect()[0][0])
+    seen: set[int] = set()
+    for f, comps in _committed_files(local):
+        bid = int(_partition_values(comps)["__batch_id"])
+        if bid in seen or (as_of_batch is not None and bid > as_of_batch):
+            continue
+        if _footer_rows(f) > 0:
+            seen.add(bid)
+    return len(seen)
+
+
+# ---------------------------------------------------------------------------
+# Delta-store lifecycle: horizon marker + tombstone sidecar
+# ---------------------------------------------------------------------------
+
+
+def read_horizon(spark, path: str) -> int | None:
+    """The store's compaction horizon (highest ``up_to_batch`` any
+    compaction folded), or None if never compacted. Kept as its OWN
+    1-row sidecar at ``{path}/horizon`` rather than a meta column: it
+    is rewritten on every compaction, and an incomplete rewrite
+    degrades to "no guard until the next compaction rewrites it",
+    never to corrupted build parameters."""
+    if not parquet_write_completed(spark, path + "/horizon"):
+        return None
+    row = read_sidecar_rows(spark, path + "/horizon")[0]
+    return int(row["compacted_through"])
+
+
+def reject_at_or_below_horizon(
+    spark, path: str, batch_id: int | None, caller: str
+) -> None:
+    """Raise ``ValueError`` when ``batch_id`` (None = the -1 base) is
+    at or below the compaction horizon. Batches there were folded into
+    the base (relabeled away, so dynamic overwrite would land a
+    redelivered copy BESIDE its folded rows, double-counting them) and
+    their tombstones applied and cleared. Callers hold the writer
+    lease, so a concurrent compaction cannot raise the horizon between
+    this check and the write."""
+    horizon = read_horizon(spark, path)
+    bid = -1 if batch_id is None else batch_id
+    if horizon is not None and bid <= horizon:
+        raise ValueError(
+            f"{caller}: batch_id={batch_id} is at or below the store's "
+            f"compaction horizon {horizon} at {path} — batches there were "
+            "folded into the base and their tombstones applied, so this "
+            "batch would double-count rows or name rows already gone; "
+            "issue batches only above the horizon (pick compaction "
+            "horizons older than any batch your source can still "
+            "redeliver)"
+        )
+
+
+def record_horizon(spark, path: str, up_to_batch: int, owner: str) -> None:
+    """Compaction's FIRST step: raise the ``{path}/horizon`` marker to
+    ``up_to_batch`` under the writer lease (never lowering it), so
+    writes at or below it are rejected before any fold runs — a crash
+    between this and the fold leaves the guard active and the fold
+    pending, and re-running the compaction completes it. Raises
+    ``ValueError`` for a non-local store before anything is written
+    (compaction is local-only)."""
+    _local_store(path, owner)
+    with store_writer_lock(path, owner=owner):
+        prior = read_horizon(spark, path)
+        if prior is None or up_to_batch > prior:
+            write_sidecar_rows(
+                spark, path + "/horizon", [(int(up_to_batch),)],
+                [("compacted_through", "int64")],
+            )
+
+
+def delete_from_store(
+    spark, path: str, ids, batch_id: int, id_col: str, caller: str
+) -> None:
+    """Tombstone ``ids`` as delete batch ``batch_id`` of the store at
+    ``path``: writer-lease-guarded, rejected at or below the
+    compaction horizon, idempotent under redelivery (dynamic
+    overwrite of the batch's own partition). ``ids`` is a DataFrame
+    whose first column holds them (see :func:`write_tombstone_sidecar`)
+    or a Python list, typed as ``createDataFrame`` infers it (int →
+    bigint, str → string) and written with no Spark job on the
+    driver-direct arm."""
+    if isinstance(ids, DataFrame):
+        ids = ids.select(F.col(ids.columns[0]).alias(id_col))
+    else:
+        ids = list(ids)
+        if not ids:
+            raise ValueError(f"{caller}: no ids to delete")
+        arrow = _id_type(ids)
+    with store_writer_lock(path, owner=caller):
+        reject_at_or_below_horizon(spark, path, batch_id, caller)
+        if isinstance(ids, DataFrame):
+            write_tombstone_sidecar(spark, ids, path + "/deletes", batch_id)
+        else:
+            _write_tombstone_rows(
+                spark, path + "/deletes", batch_id, id_col, arrow, ids
+            )
+
+
+def read_tombstones(
+    spark, path: str, as_of_batch: int | None = None
+) -> DataFrame | None:
+    """The store's PENDING tombstones — one id per deleted row per
+    delete batch, ``{path}/deletes`` partitioned by ``__batch_id`` —
+    as a lazy frame for a probe's anti-join, or None when it carries
+    none. Gated on the sidecar being COMMITTED (a crash between mkdir
+    and commit reads as absent — the sidecar self-heal contract).
+    ``as_of_batch`` snapshot-reads the delete history."""
+    if not parquet_write_completed(spark, path + "/deletes"):
+        return None
+    d = spark.read.parquet(path + "/deletes")
+    if as_of_batch is not None:
+        d = d.filter(F.col("__batch_id") <= as_of_batch)
+    return d
+
+
+def pinned_tombstones(spark, path: str, up_to_batch: int) -> DataFrame | None:
+    """The distinct tombstone ids at or below ``up_to_batch`` as a
+    literal one-column frame, or None when none are pending there.
+    Read once into the driver, the set cannot change under the fold
+    it feeds; a delete batch that lands meanwhile is above the horizon
+    :func:`record_horizon` already raised."""
+    if not parquet_write_completed(spark, path + "/deletes"):
+        return None
+    sel = [
+        r for r in read_sidecar_rows(spark, path + "/deletes")
+        if int(r["__batch_id"]) <= up_to_batch
+    ]
+    if not sel:
+        return None
+    idc = next(c for c in sel[0] if c != "__batch_id")
+    vals = sorted({r[idc] for r in sel if r[idc] is not None})
+    schema = StructType.fromDDL(f"`{idc}` {_SIDECAR_TYPES[_id_type(vals)]}")
+    return _local_frame(spark, [(v,) for v in vals], schema)
+
+
+def fold_below_horizon(
+    df: DataFrame, up_to_batch: int, tombstones: DataFrame | None, id_col: str
+) -> DataFrame:
+    """The data fold of a compaction: relabel ``__batch_id`` at or
+    below the horizon to the -1 base and drop the rows the pinned
+    ``tombstones`` name (Lucene's deletes-at-merge, FAISS
+    ``remove_ids``)."""
+    out = df.withColumn(
+        "__batch_id",
+        F.when(F.col("__batch_id") <= up_to_batch, F.lit(-1)).otherwise(
+            F.col("__batch_id")
+        ),
+    )
+    if tombstones is not None:
+        out = out.join(
+            tombstones.select(F.col(tombstones.columns[0]).alias(id_col)),
+            id_col,
+            "left_anti",
+        )
+    return out
+
+
+def clear_tombstones(spark, path: str, up_to_batch: int, owner: str) -> dict:
+    """Compaction's LAST step: drop the applied tombstone partitions
+    (``__batch_id <= up_to_batch``). Pure partition filtering — the
+    surviving delta files are copied byte-for-byte and nothing is
+    folded — so it reads no data. A crash before it leaves the applied
+    tombstones pending, which is safe (probes anti-join ids whose rows
+    are already gone) and a re-run completes the clear."""
+    return compact_sidecar_partitioned(
+        spark, path + "/deletes", up_to_batch, lambda _gk, _tables: None,
+        owner=owner, lock_path=path,
+    )
+
+
+# ---------------------------------------------------------------------------
+# Compaction (local-only)
+# ---------------------------------------------------------------------------
 
 
 def _recover_interrupted_swap(local: str, tmp: str, bak: str, label: str) -> None:
@@ -543,7 +808,7 @@ def compact_sidecar_partitioned(
     fold,
     group_levels: int = 0,
     always_fold_root: bool = False,
-    max_rows: int = 100_000,
+    max_rows: int | None = None,
     owner: str | None = None,
     lock_path: str | None = None,
 ) -> dict | None:
@@ -569,67 +834,44 @@ def compact_sidecar_partitioned(
     table (written under ``__batch_id=-1``) or None (nothing to
     write — the delete-clear shape). ``always_fold_root=True`` calls
     the fold even when no at-or-below-horizon files exist (the stats
-    fold always emits a base row, like its Spark twin's
-    ungrouped aggregate).
+    fold always emits a base row).
 
     Crash story is IDENTICAL to :func:`compact_partitioned_store`:
     the new tree is built under ``.__compact`` with a ``_SUCCESS``
     marker, the same two-rename swap runs under the writer lease, and
-    entry recovery rolls an interrupted swap forward or back. Returns
-    None — callers MUST fall back to the Spark compaction — when the
-    path is not local, the layout is not the expected
-    ``[group dirs/]__batch_id=K`` shape, or the store exceeds
-    ``max_rows`` (footer metadata check, no data read)."""
-    local = _local_path(path)
-    if local is None or not os.path.isdir(local):
-        return None
-    try:
-        import pyarrow.parquet as pq
-    except Exception:  # pragma: no cover - pyarrow always present here
-        return None
+    entry recovery rolls an interrupted swap forward or back.
+    Local-only (``ValueError`` otherwise); a file outside the
+    ``[group dirs/]__batch_id=K`` layout raises ``ValueError``.
+    Returns None, changing nothing, when ``max_rows`` is given and
+    the store exceeds it (footer metadata check, no data read)."""
+    import pyarrow.parquet as pq
+
+    local = _local_store(path, "compact_sidecar_partitioned")
     tmp = local.rstrip("/") + ".__compact"
     bak = local.rstrip("/") + ".__bak"
     with store_writer_lock(lock_path or path, owner=owner or "compact_sidecar"):
         _recover_interrupted_swap(local, tmp, bak, path)
-        entries: list[tuple[tuple[str, ...], int, list[str]]] = []
+        entries: dict[tuple[tuple[str, ...], int], list[str]] = {}
         total_rows = 0
-        for root, dirs, fns in os.walk(local):
-            dirs[:] = [d for d in dirs if not _hidden_component(d)]
-            pfiles = [
-                fn
-                for fn in fns
-                if fn.endswith(".parquet") and not _hidden_component(fn)
-            ]
-            if not pfiles:
-                continue
-            rel = os.path.relpath(root, local)
-            comps = [] if rel == "." else rel.split(os.sep)
+        for f, comps in _committed_files(local):
             if len(comps) != group_levels + 1 or not comps[-1].startswith(
                 "__batch_id="
             ):
-                return None
-            try:
-                bid = int(comps[-1].split("=", 1)[1])
-            except ValueError:
-                return None
-            files = sorted(os.path.join(root, f) for f in pfiles)
-            try:
-                total_rows += sum(
-                    pq.ParquetFile(f).metadata.num_rows for f in files
+                raise ValueError(
+                    f"compact_sidecar_partitioned: {f} is outside the "
+                    f"expected [group dirs/]__batch_id=K layout of {path}"
                 )
-            except Exception:
+            bid = int(comps[-1].split("=", 1)[1])
+            entries.setdefault((comps[:-1], bid), []).append(f)
+            total_rows += _footer_rows(f)
+            if max_rows is not None and total_rows > max_rows:
                 return None
-            if total_rows > max_rows:
-                return None
-            entries.append((tuple(comps[:-1]), bid, files))
-        if not entries:
-            return None
-        files_before = sum(len(fs) for _, _, fs in entries)
+        files_before = sum(len(fs) for fs in entries.values())
         shutil.rmtree(tmp, ignore_errors=True)
         os.makedirs(tmp)
         files_after = 0
         fold_groups: dict[tuple[str, ...], list[str]] = {}
-        for gk, bid, files in entries:
+        for (gk, bid), files in sorted(entries.items()):
             if bid <= up_to_batch:
                 fold_groups.setdefault(gk, []).extend(files)
             else:
@@ -638,8 +880,8 @@ def compact_sidecar_partitioned(
                 for f in files:
                     shutil.copy2(f, os.path.join(dst, os.path.basename(f)))
                     files_after += 1
-        if always_fold_root and group_levels == 0 and () not in fold_groups:
-            fold_groups[()] = []
+        if always_fold_root and group_levels == 0:
+            fold_groups.setdefault((), [])
         for gk in sorted(fold_groups):
             tables = [pq.read_table(f) for f in sorted(fold_groups[gk])]
             base = fold(gk, tables)
@@ -706,12 +948,7 @@ def compact_partitioned_store(
     store root differs from the compacted subdirectory (the IVF-PQ
     codes/ layout) must serialize against writers locking the root.
     """
-    local = _local_path(path)
-    if local is None:
-        raise ValueError(
-            "compact_partitioned_store requires a local store path; object-"
-            "store layouts need a table format (Delta/Iceberg) for safe swaps"
-        )
+    local = _local_store(path, "compact_partitioned_store")
     tmp = local.rstrip("/") + ".__compact"
     bak = local.rstrip("/") + ".__bak"
     with store_writer_lock(lock_path or path, owner=owner or "compact"):
@@ -737,13 +974,18 @@ def compact_partitioned_store(
     return {"rows": rows, "files_before": files_before, "files_after": files_after}
 
 
+# ---------------------------------------------------------------------------
+# Existence probes
+# ---------------------------------------------------------------------------
+
+
 def parquet_path_exists(spark, path: str) -> bool:
     """Scheme-agnostic existence check via the Hadoop FileSystem —
     the narrow 'first batch: no store yet' test the streaming sinks
     need instead of a catch-all around the read (ADVICE r5: a bare
     except around the store read turned transient read errors into
     silent dedup bypass)."""
-    local = _local_path(path)
+    local = _driver_direct(path)
     if local is not None:
         return os.path.exists(local)
     jvm = spark._jvm
@@ -771,26 +1013,14 @@ def parquet_write_completed(spark, path: str) -> bool:
     rewrite self-heal. An incomplete sidecar is reported absent, so
     the next writer rewrites it under the store lease.
 
-    Non-local (object-store) paths get the same data-file check via
-    a recursive Hadoop FileSystem listing — bounded for the 1-row
-    sidecars this guards (a handful of objects per prefix)."""
-    def _hidden(name: str) -> bool:
-        # Spark's own listing convention (InMemoryFileIndex): "."-led
-        # names are ALWAYS hidden; "_"-led names are hidden unless
-        # they contain "=" (partition directories like "__pfx=ab")
-        return name.startswith(".") or (
-            name.startswith("_") and "=" not in name
-        )
-
-    local = _local_path(path)
+    The Spark arm runs the same data-file check as a recursive Hadoop
+    FileSystem listing — bounded for the 1-row sidecars this guards
+    (a handful of objects per prefix)."""
+    local = _driver_direct(path)
     if local is not None:
-        if not os.path.isdir(local):
-            return False
-        for root, dirs, files in os.walk(local):
-            dirs[:] = [d for d in dirs if not _hidden(d)]
-            if any(f.endswith(".parquet") for f in files):
-                return True
-        return False
+        return os.path.isdir(local) and next(
+            _committed_files(local), None
+        ) is not None
     jvm = spark._jvm
     hpath = jvm.org.apache.hadoop.fs.Path(path)
     fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
@@ -806,12 +1036,12 @@ def parquet_write_completed(spark, path: str) -> bool:
     while it.hasNext():
         f = it.next().getPath()
         name = f.getName()
-        if not name.endswith(".parquet"):
+        if not name.endswith(".parquet") or _hidden_component(name):
             continue
         # skip task-staging files under _temporary/.hidden dirs
         parent, staged = f.getParent(), False
         while parent is not None and str(parent) != root:
-            if _hidden(parent.getName()):
+            if _hidden_component(parent.getName()):
                 staged = True
                 break
             parent = parent.getParent()

@@ -913,62 +913,12 @@ def search_delete_stream(
     if all are absent the deletes were applied and cleared, and the
     skip is safe (an id never ingested is also absent, and its
     tombstone is a no-op by contract either way)."""
-    from docker_etl_spark.operators.search import (
-        delete_from_search_index,
-        read_search_index_horizon,
+    from docker_etl_spark.operators.search import delete_from_search_index
+
+    return _delete_stream(
+        store_path, id_col, "/postings", delete_from_search_index,
+        "search_delete_stream",
     )
-
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        horizon = read_search_index_horizon(spark, store_path)
-        if horizon is not None and batch_id <= horizon:
-            # Probe EVERY id in the batch (r12 ADVICE: a 16-row
-            # sorted sample lets a batch whose lowest ids happen to
-            # be never-ingested no-ops pass verification while other
-            # ids are still present — a silently dropped purge). A
-            # delete batch is bounded, so one semi-join of the store
-            # scan against the batch ids suffices; note this is an
-            # O(store) read by design — ids are not a partition
-            # column, and this path runs only on the rare
-            # redelivered-below-horizon anomaly.
-            present = [
-                r[0]
-                for r in spark.read.parquet(store_path + "/postings")
-                .select(id_col)
-                .join(
-                    F.broadcast(batch_df.select(id_col).distinct()),
-                    id_col,
-                    "left_semi",
-                )
-                .limit(4)
-                .collect()
-            ]
-            if present:
-                raise ValueError(
-                    f"search_delete_stream: batch {batch_id} is at or "
-                    f"below the compaction horizon {horizon} at "
-                    f"{store_path} but its documents (e.g. ids "
-                    f"{present[:4]}) are STILL PRESENT — the horizon "
-                    "was advanced past a delete batch this stream "
-                    "never landed (out-of-band compaction?); skipping "
-                    "would silently drop a purge request. Re-issue the "
-                    "deletes above the horizon."
-                )
-            log.warning(
-                "search_delete_stream: skipping redelivered delete "
-                "batch %d at or below the compaction horizon %d "
-                "(every batch id verified absent at %s)",
-                batch_id, horizon, store_path,
-            )
-            return
-        if batch_df.limit(1).count() == 0:
-            return  # empty micro-batch: nothing to tombstone
-        delete_from_search_index(
-            spark, store_path, batch_df.select(id_col), batch_id,
-            id_col=id_col,
-        )
-
-    return _sink
 
 
 def ivfpq_delete_stream(
@@ -982,21 +932,38 @@ def ivfpq_delete_stream(
     covering compaction drops the code rows physically. Same batch-
     clock contract and verified-skip discipline on redelivery below
     the horizon (presence probed against ``codes/``)."""
-    from docker_etl_spark.operators.similarity import (
-        delete_from_ivfpq_store,
-        read_ivfpq_horizon,
+    from docker_etl_spark.operators.similarity import delete_from_ivfpq_store
+
+    return _delete_stream(
+        store_path, id_col, "/codes", delete_from_ivfpq_store,
+        "ivfpq_delete_stream",
     )
+
+
+def _delete_stream(
+    store_path: str, id_col: str, data_dir: str, delete, name: str
+) -> Callable[[DataFrame, int], None]:
+    """The tombstone-stream sink both delete streams share; they
+    differ only in the data subdirectory a below-horizon redelivery
+    is verified against and the delete function."""
+    from docker_etl_spark.sources.stores import read_horizon
 
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        horizon = read_ivfpq_horizon(spark, store_path)
+        horizon = read_horizon(spark, store_path)
         if horizon is not None and batch_id <= horizon:
-            # Probe EVERY batch id (r12 ADVICE — see
-            # search_delete_stream): semi-join beats a sorted sample,
-            # which could verify only never-ingested no-op ids.
+            # Probe EVERY id in the batch (r12 ADVICE: a 16-row
+            # sorted sample lets a batch whose lowest ids happen to
+            # be never-ingested no-ops pass verification while other
+            # ids are still present — a silently dropped purge). A
+            # delete batch is bounded, so one semi-join of the store
+            # scan against the batch ids suffices; note this is an
+            # O(store) read by design — ids are not a partition
+            # column, and this path runs only on the rare
+            # redelivered-below-horizon anomaly.
             present = [
                 r[0]
-                for r in spark.read.parquet(store_path + "/codes")
+                for r in spark.read.parquet(store_path + data_dir)
                 .select(id_col)
                 .join(
                     F.broadcast(batch_df.select(id_col).distinct()),
@@ -1008,25 +975,24 @@ def ivfpq_delete_stream(
             ]
             if present:
                 raise ValueError(
-                    f"ivfpq_delete_stream: batch {batch_id} is at or "
-                    f"below the compaction horizon {horizon} at "
-                    f"{store_path} but its vectors (e.g. ids "
-                    f"{present[:4]}) are STILL PRESENT — out-of-band "
-                    "compaction advanced the horizon past a delete "
-                    "batch this stream never landed; skipping would "
-                    "silently drop a purge request. Re-issue the "
-                    "deletes above the horizon."
+                    f"{name}: batch {batch_id} is at or below the "
+                    f"compaction horizon {horizon} at {store_path} but "
+                    f"its ids (e.g. {present[:4]}) are STILL PRESENT — "
+                    "the horizon was advanced past a delete batch this "
+                    "stream never landed (out-of-band compaction?); "
+                    "skipping would silently drop a purge request. "
+                    "Re-issue the deletes above the horizon."
                 )
             log.warning(
-                "ivfpq_delete_stream: skipping redelivered delete "
-                "batch %d at or below the compaction horizon %d "
-                "(every batch id verified absent at %s)",
-                batch_id, horizon, store_path,
+                "%s: skipping redelivered delete batch %d at or below "
+                "the compaction horizon %d (every batch id verified "
+                "absent at %s)",
+                name, batch_id, horizon, store_path,
             )
             return
         if batch_df.limit(1).count() == 0:
-            return
-        delete_from_ivfpq_store(
+            return  # empty micro-batch: nothing to tombstone
+        delete(
             spark, store_path, batch_df.select(id_col), batch_id,
             id_col=id_col,
         )

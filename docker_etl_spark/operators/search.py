@@ -44,7 +44,10 @@ single-query twin. :func:`search_bm25_topk`,
 and :func:`fuzzy_term_suggest` are each their ``_batch`` twin over a
 batch of one — a Python literal query, so no job reads a query
 frame — ranked by orderBy+limit and returned without the query
-column.
+column. Every probe reads the store through one
+:class:`~docker_etl_spark.sources.stores.StoreSnapshot` (declared
+read schemas, pinned batches and tombstones) and takes one in place
+of the path, so a query running several probes opens it once.
 
 Integer BM25 (the cross-engine discipline): with k1 = 5/4 and
 b = 3/4 (exact binary fractions) the saturation term
@@ -84,7 +87,15 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from docker_etl_spark.sources.stores import _local_frame
+from docker_etl_spark.sources.stores import (
+    StoreSnapshot,
+    _local_frame,
+    as_snapshot,
+    # the shared delta-store lifecycle's horizon marker and pending
+    # tombstones, under their search-store names
+    read_horizon as read_search_index_horizon,  # noqa: F401
+    read_tombstones as read_search_deletes,  # noqa: F401
+)
 
 #: BM25 constants as exact fractions: k1 = 5/4, b = 3/4.
 _LN_SCALE = 1_000_000
@@ -320,127 +331,84 @@ def _observe_stats(docs: DataFrame):
 
 def read_search_index_meta(spark, path: str) -> dict | None:
     """The store's build parameters from its meta sidecar, or None
-    for a store written before the sidecar existed (r8 layouts) —
-    callers then fall back to their explicit/default arguments.
+    when the store has no committed meta yet.
 
     A meta DIRECTORY left by a crashed partial write (exists, but no
     ``_SUCCESS`` marker and no committed data file) is reported
     absent too — :func:`write_search_index` then rewrites it under
     the writer lease, so first-batch redelivery self-heals instead
-    of failing every later read (r9 ADVICE)."""
-    from docker_etl_spark.sources.stores import (
-        parquet_write_completed,
-        read_sidecar_rows,
-    )
+    of failing every later read (r9 ADVICE). Every store carries a
+    term dictionary, so ``has_dict`` is always True."""
+    from docker_etl_spark.sources.stores import read_store_meta
 
-    if not parquet_write_completed(spark, path + "/meta"):
+    got = read_store_meta(spark, path)
+    if got is None:
         return None
-    row = read_sidecar_rows(spark, path + "/meta")[0]
+    row = got[0]
     return {
         "prefix_len": int(row["prefix_len"]),
         "min_token_len": int(row["min_token_len"]),
-        # r9.0 sidecars predate the flag; absent means plain postings
-        "positional": bool(row.get("positional", False)),
-        # r10 sidecars predate the dictionary; absent means the store
-        # carries no {path}/dict deltas and readers fall back to
-        # aggregating postings (see read_search_dictionary)
-        "has_dict": bool(row.get("has_dict", False)),
+        "positional": bool(row["positional"]),
+        "has_dict": True,
     }
 
 
-def read_search_index_horizon(spark, path: str) -> int | None:
-    """The store's compaction horizon (highest ``up_to_batch`` any
-    :func:`compact_search_index` folded), or None if never compacted
-    — the shared ``{path}/horizon`` marker
-    (:func:`~docker_etl_spark.sources.stores.read_horizon`), kept
-    apart from the immutable build parameters in ``{path}/meta``."""
-    from docker_etl_spark.sources.stores import read_horizon
+def _term_dictionary(snap: StoreSnapshot, where=None) -> DataFrame:
+    """The snapshot's folded term dictionary — (term, df, sum_tf,
+    max_tf) summed/maxed across batch deltas — over the rows matching
+    ``where`` (a predicate on ``__pfx``/``term``, applied before the
+    fold so it prunes directories). In the crash window where meta
+    committed but the first dictionary write did not, the same
+    aggregates come from the raw postings until a redelivered write
+    heals the sidecar; every dictionary reader goes through here.
 
-    return read_horizon(spark, path)
+    The fold is exact by construction: each batch's delta counted its
+    own postings, batches never share (doc, term) rows (the
+    append-only id contract), and compaction SUM/MAX-folds the same
+    columns — so SUM(df) always equals the posting-row count."""
+    if snap.batches["dict"]:
+        d = snap.read("dict", where)
+        cols = (F.sum("df"), F.sum("sum_tf"), F.max("max_tf"))
+    else:
+        d = snap.read("postings", where)
+        cols = (F.count("*"), F.sum("tf"), F.max("tf"))
+    names = ("df", "sum_tf", "max_tf")
+    return d.groupBy("term").agg(
+        *(c.cast("long").alias(n) for c, n in zip(cols, names))
+    )
+
+
+def _terms_pred(prefixes, terms):
+    """``__pfx``/``term`` IN predicate of a bounded term lookup (None
+    when neither is given)."""
+    pred = None
+    for col, vals in (("__pfx", prefixes), ("term", terms)):
+        if vals is not None:
+            c = F.col(col).isin(list(vals))
+            pred = c if pred is None else pred & c
+    return pred
 
 
 def read_search_dictionary(
     spark,
-    path: str,
+    path,
     as_of_batch: int | None = None,
     prefixes: list[str] | None = None,
     terms: list[str] | None = None,
 ) -> DataFrame | None:
     """The store's folded term dictionary — (term, df, sum_tf,
-    max_tf) aggregated across batch deltas — or None for a store
-    written before the dictionary existed (pre-r11 layouts; callers
-    then fall back to aggregating the postings, the old corpus-scale
-    path). ``prefixes``/``terms`` prune the read to the named
-    ``__pfx`` directories / terms BEFORE the fold (the probe shape:
-    a bounded term lookup reads a few directories of vocab-scale
-    rows, never the corpus). ``as_of_batch`` snapshot-reads like
-    every store surface.
-
-    The fold is exact by construction: each batch's delta counted
-    its own postings, batches never share (doc, term) rows (the
-    append-only id contract), and compaction SUM/MAX-folds the same
-    columns — so SUM(df) here always equals the posting-row count
-    the pre-dictionary readers derived."""
-    from docker_etl_spark.sources.stores import parquet_write_completed
-
-    meta = read_search_index_meta(spark, path)
-    if meta is None or not meta["has_dict"]:
+    max_tf) aggregated across batch deltas — or None while its first
+    dictionary write is uncommitted (the crash window; the redelivered
+    write heals it). ``prefixes``/``terms`` prune the read to the
+    named ``__pfx`` directories / terms BEFORE the fold (the probe
+    shape: a bounded term lookup reads a few directories of
+    vocab-scale rows, never the corpus). ``path`` is a store path or
+    a :class:`~docker_etl_spark.sources.stores.StoreSnapshot`;
+    ``as_of_batch`` snapshot-reads like every store surface."""
+    snap = as_snapshot(spark, path, as_of_batch)
+    if not snap.batches["dict"]:
         return None
-    # crash window: meta committed but the first dict write did not —
-    # report "no dictionary" (callers fall back to postings) and let
-    # the redelivered write heal it, the sidecar self-heal contract
-    if not parquet_write_completed(spark, path + "/dict"):
-        return None
-    d = spark.read.parquet(path + "/dict")
-    if prefixes is not None:
-        d = d.filter(F.col("__pfx").isin(list(prefixes)))
-    if terms is not None:
-        d = d.filter(F.col("term").isin(list(terms)))
-    if as_of_batch is not None:
-        d = d.filter(F.col("__batch_id") <= as_of_batch)
-    return d.groupBy("term").agg(
-        F.sum("df").cast("long").alias("df"),
-        F.sum("sum_tf").cast("long").alias("sum_tf"),
-        F.max("max_tf").cast("long").alias("max_tf"),
-    )
-
-
-def read_search_deletes(
-    spark, path: str, as_of_batch: int | None = None
-) -> DataFrame | None:
-    """The store's PENDING tombstones — one document id per deleted
-    document per delete batch, under ``{path}/deletes`` partitioned
-    by ``__batch_id`` — or None when the store carries none (never
-    deleted from, or every delete already applied physically by
-    compaction). Gated on the sidecar being COMMITTED (crash between
-    mkdir and job commit reads as absent — the sidecar self-heal
-    contract). ``as_of_batch`` snapshot-reads: a probe pinned at
-    batch N sees exactly the deletes issued at or before N, so
-    snapshots replay history."""
-    from docker_etl_spark.sources.stores import read_tombstones
-
-    return read_tombstones(spark, path, as_of_batch)
-
-
-def _live_postings(
-    p: DataFrame, spark, path: str, id_col: str,
-    as_of_batch: int | None = None,
-) -> DataFrame:
-    """Tombstone filter every probe applies to its (pruned) postings
-    scan: anti-join against the bounded deletes sidecar (ids only —
-    broadcast when small). An id tombstoned by two delete batches
-    needs no dedupe: an anti-join keeps a row iff NO build row
-    matches, so duplicates change nothing, and a distinct would add
-    a shuffle job to every probe. Catalyst pushes the caller's
-    term/prefix filters through the anti-join's left side, so
-    partition pruning on the scan is unchanged. Stores with no
-    pending tombstones return the frame untouched (one committed-
-    sidecar existence probe, no plan change)."""
-    dels = read_search_deletes(spark, path, as_of_batch=as_of_batch)
-    if dels is None:
-        return p
-    idc = [c for c in dels.columns if c != "__batch_id"][0]
-    return p.join(dels.select(F.col(idc).alias(id_col)), id_col, "left_anti")
+    return _term_dictionary(snap, _terms_pred(prefixes, terms))
 
 
 def delete_from_search_index(
@@ -500,29 +468,22 @@ def delete_from_search_index(
 
 
 def _resolve_search_meta(
-    spark,
+    meta: dict,
     path: str,
     min_token_len: int | None,
     prefix_len: int | None,
     caller: str,
 ) -> tuple[int, int]:
-    """Resolve (min_token_len, prefix_len) from the store's meta
-    sidecar, validating any EXPLICITLY-passed value against it — a
-    probe or append running with a different prefix_len than the
-    build would silently miss every stored ``__pfx`` directory, and a
-    different min_token_len makes dl/tf inconsistent across batches
-    (r8 ADVICE). None means "use the stored value"; stores without a
-    sidecar fall back to the build defaults (3, 2)."""
-    meta = read_search_index_meta(spark, path)
-    if meta is None:
-        return (
-            3 if min_token_len is None else min_token_len,
-            2 if prefix_len is None else prefix_len,
-        )
-    for name, passed, stored in (
-        ("min_token_len", min_token_len, meta["min_token_len"]),
-        ("prefix_len", prefix_len, meta["prefix_len"]),
+    """Resolve (min_token_len, prefix_len) from the store's meta,
+    validating any EXPLICITLY-passed value against it — a probe or
+    append running with a different prefix_len than the build would
+    silently miss every stored ``__pfx`` directory, and a different
+    min_token_len makes dl/tf inconsistent across batches (r8
+    ADVICE). None means "use the stored value"."""
+    for name, passed in (
+        ("min_token_len", min_token_len), ("prefix_len", prefix_len)
     ):
+        stored = int(meta[name])
         if passed is not None and passed != stored:
             raise ValueError(
                 f"{caller}: {name}={passed} conflicts with the store's "
@@ -531,7 +492,21 @@ def _resolve_search_meta(
                 "value; pass None (the default) to use it, or rebuild "
                 "the index at a fresh path to change it"
             )
-    return meta["min_token_len"], meta["prefix_len"]
+    return int(meta["min_token_len"]), int(meta["prefix_len"])
+
+
+def _dict_delta(p: DataFrame, bid: int) -> DataFrame:
+    """A batch's term-dictionary delta, (``__pfx``, term, df, sum_tf,
+    max_tf, ``__batch_id``), from its postings."""
+    return (
+        p.groupBy("__pfx", "term")
+        .agg(
+            F.count("*").cast("long").alias("df"),
+            F.sum("tf").cast("long").alias("sum_tf"),
+            F.max("tf").cast("long").alias("max_tf"),
+        )
+        .withColumn("__batch_id", F.lit(bid))
+    )
 
 
 def write_search_index(
@@ -542,7 +517,6 @@ def write_search_index(
     min_token_len: int = 3,
     prefix_len: int = 2,
     positional: bool = False,
-    write_dict: bool | None = None,
 ) -> None:
     """Persist a posting batch + its stats delta + its term-
     dictionary delta (see the dict write below for the contract).
@@ -554,12 +528,14 @@ def write_search_index(
     land under ``__batch_id`` alone and merge by SUM at read.
     Writer-lease-guarded like every store mutation.
 
-    The build parameters (``prefix_len``, ``min_token_len``) persist
-    in a 1-row meta sidecar at ``{path}/meta`` (the IVF-PQ quantizer-
-    sidecar pattern) the first time a store is written; probes and
-    appends default from it and REJECT conflicting explicit values.
-    They must match how ``postings`` was actually built — pass the
-    same values given to :func:`build_postings`.
+    The build parameters (``prefix_len``, ``min_token_len``,
+    ``positional``) and the read schemas of ``postings`` and ``dict``
+    persist in a 1-row meta sidecar at ``{path}/meta`` the first time
+    a store is written; probes and appends default from it and REJECT
+    conflicting explicit values, and every read declares its schema
+    from it (no schema-inference job). They must match how
+    ``postings`` was actually built — pass the same values given to
+    :func:`build_postings`.
 
     REBUILD CONTRACT: dynamic overwrite replaces only the partitions
     present in THIS batch — redelivery of the same batch is
@@ -584,67 +560,53 @@ def write_search_index(
     — pass the builder's own stats frame, or postings built elsewhere
     (no observation) so that ``stats`` is collected."""
     from docker_etl_spark.sources.stores import (
+        read_schema,
+        read_store_meta,
         reject_at_or_below_horizon,
         store_writer_lock,
+        write_repartition,
         write_sidecar_rows,
+        write_store_meta,
     )
 
     spark = postings.sparkSession
     bid = -1 if batch_id is None else batch_id
+    batch = postings.withColumn("__batch_id", F.lit(bid))
+    layout = ("__pfx", "__batch_id")
     with store_writer_lock(path, owner="write_search_index"):
         reject_at_or_below_horizon(spark, path, batch_id, "write_search_index")
-        existing = read_search_index_meta(spark, path)
-        if existing is not None and (
-            existing["prefix_len"] != prefix_len
-            or existing["min_token_len"] != min_token_len
-            or existing["positional"] != positional
-        ):
-            raise ValueError(
-                f"write_search_index: store at {path} was built with "
-                f"prefix_len={existing['prefix_len']}, min_token_len="
-                f"{existing['min_token_len']}, positional="
-                f"{existing['positional']} but this write carries "
-                f"prefix_len={prefix_len}, min_token_len={min_token_len}, "
-                f"positional={positional} — mixed layouts corrupt "
-                "df/dl/phrase probes; rebuild at a fresh path to change "
-                "build parameters"
-            )
-        # ``write_dict``: None follows the store (True for a new one);
-        # an explicit value at CREATION is recorded in meta like
-        # ``positional`` — a store that will never serve dictionary
-        # reads (pure-probe pipelines, scrub-only positional stores)
-        # opts out of the per-batch delta write it would otherwise
-        # pay forever (r11 judge item #3). On an existing store an
-        # explicit value conflicting with meta raises: a half-
-        # dictionaried store silently under-counts df.
-        if (
-            write_dict is not None
-            and existing is not None
-            and existing["has_dict"] != bool(write_dict)
-        ):
-            raise ValueError(
-                f"write_search_index: store at {path} was created with "
-                f"write_dict={existing['has_dict']} but this write "
-                f"carries write_dict={write_dict} — a partial dictionary "
-                "would silently under-count df; pass None (the default) "
-                "to follow the store, or rebuild at a fresh path"
-            )
-        if existing is not None:
-            has_dict = existing["has_dict"]
-        else:
-            has_dict = True if write_dict is None else bool(write_dict)
-        if existing is None:
-            write_sidecar_rows(
-                spark,
-                path + "/meta",
-                [(prefix_len, min_token_len, positional, has_dict)],
+        got = read_store_meta(spark, path)
+        if got is None:
+            schemas = {
+                "postings": read_schema(batch, layout),
+                "dict": read_schema(_dict_delta(batch, bid), layout),
+            }
+            write_store_meta(
+                spark, path,
                 [
-                    ("prefix_len", "int32"),
-                    ("min_token_len", "int32"),
-                    ("positional", "bool"),
-                    ("has_dict", "bool"),
+                    ("prefix_len", "int32", prefix_len),
+                    ("min_token_len", "int32", min_token_len),
+                    ("positional", "bool", positional),
                 ],
+                schemas,
             )
+        else:
+            existing, schemas = got
+            if (
+                existing["prefix_len"] != prefix_len
+                or existing["min_token_len"] != min_token_len
+                or bool(existing["positional"]) != positional
+            ):
+                raise ValueError(
+                    f"write_search_index: store at {path} was built with "
+                    f"prefix_len={existing['prefix_len']}, min_token_len="
+                    f"{existing['min_token_len']}, positional="
+                    f"{bool(existing['positional'])} but this write "
+                    f"carries prefix_len={prefix_len}, min_token_len="
+                    f"{min_token_len}, positional={positional} — mixed "
+                    "layouts corrupt df/dl/phrase probes; rebuild at a "
+                    "fresh path to change build parameters"
+                )
         # Hash-distribute on the partition column first (the
         # write_digest_store discipline / Iceberg's
         # write.distribution-mode=hash): without it every upstream
@@ -654,15 +616,11 @@ def write_search_index(
         # count (write_repartition) so AQE cannot coalesce the batch
         # to one task that pays every prefix directory's commit
         # serially.
-        from docker_etl_spark.sources.stores import write_repartition
-
         (
-            write_repartition(
-                postings.withColumn("__batch_id", F.lit(bid)), ("__pfx",)
-            )
+            write_repartition(batch, ("__pfx",))
             .write.option("partitionOverwriteMode", "dynamic")
             .mode("overwrite")
-            .partitionBy("__pfx", "__batch_id")
+            .partitionBy(*layout)
             .parquet(path + "/postings")
         )
         # The stats delta is 1 row by construction (one aggregate over
@@ -688,39 +646,31 @@ def write_search_index(
             [("n_docs", "int64"), ("sum_dl", "int64")],
             partition={"__batch_id": bid},
         )
-        if has_dict:
-            # Dictionary delta (the Lucene terms-dictionary analogue):
-            # (term, df, sum_tf, max_tf) per batch, derived from the
-            # postings JUST WRITTEN (a column-pruned re-read of this
-            # batch's files — never a second tokenize pass; measured
-            # cheaper than persist()-ing the postings frame across the
-            # two writes), under the postings' own (__pfx, __batch_id)
-            # layout so prefix-pruned term lookups and idempotent
-            # redelivery both hold. The aggregate's map-side combine
-            # makes the shuffle vocab-scale. Dictionary-shaped reads
-            # (fuzzy suggest, census, prefix expansion guards,
-            # stopword skip) then aggregate VOCAB-scale rows instead
-            # of corpus-scale postings (r10 judge item #1). Stores
-            # written before r11 (meta lacks the flag) skip this — a
-            # partial dictionary would silently under-count df.
-            (
-                spark.read.parquet(path + "/postings")
-                .filter(F.col("__batch_id") == bid)
-                .groupBy("__pfx", "term")
-                .agg(
-                    F.count("*").cast("long").alias("df"),
-                    F.sum("tf").cast("long").alias("sum_tf"),
-                    F.max("tf").cast("long").alias("max_tf"),
-                )
-                .withColumn("__batch_id", F.lit(bid))
-                # one file per prefix directory, not one per
-                # (aggregate task × prefix) — see the postings write
-                .transform(lambda d: write_repartition(d, ("__pfx",)))
-                .write.option("partitionOverwriteMode", "dynamic")
-                .mode("overwrite")
-                .partitionBy("__pfx", "__batch_id")
-                .parquet(path + "/dict")
-            )
+        # Dictionary delta (the Lucene terms-dictionary analogue):
+        # (term, df, sum_tf, max_tf) per batch, derived from the
+        # postings JUST WRITTEN (a column-pruned re-read of this
+        # batch's files — never a second tokenize pass; measured
+        # cheaper than persist()-ing the postings frame across the
+        # two writes), under the postings' own (__pfx, __batch_id)
+        # layout so prefix-pruned term lookups and idempotent
+        # redelivery both hold. The aggregate's map-side combine
+        # makes the shuffle vocab-scale. Dictionary-shaped reads
+        # (fuzzy suggest, census, prefix expansion guards,
+        # stopword skip) then aggregate VOCAB-scale rows instead
+        # of corpus-scale postings (r10 judge item #1).
+        written = spark.read.schema(schemas["postings"]).parquet(
+            path + "/postings"
+        )
+        (
+            _dict_delta(written.filter(F.col("__batch_id") == bid), bid)
+            # one file per prefix directory, not one per
+            # (aggregate task × prefix) — see the postings write
+            .transform(lambda d: write_repartition(d, ("__pfx",)))
+            .write.option("partitionOverwriteMode", "dynamic")
+            .mode("overwrite")
+            .partitionBy(*layout)
+            .parquet(path + "/dict")
+        )
 
 
 def append_search_index(
@@ -741,7 +691,9 @@ def append_search_index(
 
     Build parameters default from the store's meta sidecar (explicit
     values are validated against it — see
-    :func:`_resolve_search_meta`).
+    :func:`_resolve_search_meta`); the first append to an empty path
+    creates a plain store with the explicit values or the build
+    defaults (3, 2).
 
     ID CONTRACT (append-only ids): batches must carry ids the store
     has never seen. Probes derive df by COUNTING posting rows per
@@ -754,26 +706,41 @@ def append_search_index(
     store's existing ids (one column-pruned scan of the postings —
     the ``incremental_content_dedup`` pattern) and only genuinely new
     documents land."""
-    from docker_etl_spark.sources.stores import parquet_path_exists
+    from docker_etl_spark.sources.stores import (
+        parquet_path_exists,
+        read_store_meta,
+    )
 
     spark = new_docs.sparkSession
-    meta = read_search_index_meta(spark, path)
-    positional = bool(meta["positional"]) if meta is not None else False
-    min_token_len, prefix_len = _resolve_search_meta(
-        spark, path, min_token_len, prefix_len, "append_search_index"
-    )
-    if not assume_new_ids and parquet_path_exists(spark, path + "/postings"):
-        seen = (
-            spark.read.parquet(path + "/postings")
-            .select(F.col(id_col))
-            .distinct()
+    got = read_store_meta(spark, path)
+    if got is None:
+        positional = False
+        min_token_len = 3 if min_token_len is None else min_token_len
+        prefix_len = 2 if prefix_len is None else prefix_len
+    else:
+        meta, schemas = got
+        positional = bool(meta["positional"])
+        min_token_len, prefix_len = _resolve_search_meta(
+            meta, path, min_token_len, prefix_len, "append_search_index"
         )
-        # Eager barrier (r9 ADVICE): the anti-join reads the same
-        # postings root the write below dynamically overwrites — the
-        # read-then-overwrite-same-path hazard. Materializing the
-        # surviving batch here (batch-sized, the curation_stream
-        # discipline) means no store scan is live during the write.
-        new_docs = new_docs.join(seen, id_col, "left_anti").localCheckpoint()
+        if not assume_new_ids and parquet_path_exists(
+            spark, path + "/postings"
+        ):
+            seen = (
+                spark.read.schema(schemas["postings"])
+                .parquet(path + "/postings")
+                .select(F.col(id_col))
+                .distinct()
+            )
+            # Eager barrier (r9 ADVICE): the anti-join reads the same
+            # postings root the write below dynamically overwrites —
+            # the read-then-overwrite-same-path hazard. Materializing
+            # the surviving batch here (batch-sized, the
+            # curation_stream discipline) means no store scan is live
+            # during the write.
+            new_docs = new_docs.join(
+                seen, id_col, "left_anti"
+            ).localCheckpoint()
     builder = build_positional_postings if positional else build_postings
     postings, stats = builder(
         new_docs, text_col, id_col, min_token_len, prefix_len
@@ -785,15 +752,16 @@ def append_search_index(
     )
 
 
-def _store_totals(spark, path: str, as_of_batch: int | None) -> tuple[int, int]:
-    """(Σ n_docs, Σ sum_dl) across the stats sidecar's batch deltas —
-    one bounded row per batch by construction, summed on the driver."""
+def _store_totals(snap: StoreSnapshot) -> tuple[int, int]:
+    """(Σ n_docs, Σ sum_dl) across the stats sidecar's batch deltas in
+    the snapshot — one bounded row per batch by construction, summed
+    on the driver."""
     from docker_etl_spark.sources.stores import read_sidecar_rows
 
     sel = [
         r
-        for r in read_sidecar_rows(spark, path + "/stats")
-        if as_of_batch is None or int(r.get("__batch_id", -1)) <= as_of_batch
+        for r in read_sidecar_rows(snap.spark, snap.path + "/stats")
+        if snap.upto is None or int(r["__batch_id"]) <= snap.upto
     ]
     return (
         sum(int(r["n_docs"] or 0) for r in sel),
@@ -802,52 +770,38 @@ def _store_totals(spark, path: str, as_of_batch: int | None) -> tuple[int, int]:
 
 
 def _collect_term_stats(
-    spark,
-    path: str,
-    terms: list[str],
-    prefix_len: int,
-    as_of_batch: int | None,
+    snap: StoreSnapshot, terms: list[str], prefix_len: int
 ) -> dict[str, tuple[int, int]]:
     """Per-term (df, max_tf) for a bounded query-term set as a driver
-    dict (≤ |terms| rows). Stores with the r11 dictionary sidecar
-    fold it vocab-scale — on the driver from the prefix-pruned dict
-    directories (``read_sidecar_rows`` with the same ``__pfx``
-    pruning the Spark read gets from partition filters), else through
-    :func:`read_search_dictionary`'s Spark fold when the slice exceeds
-    the driver bound; both fold SUM(df) and
-    MAX(max_tf) across batch deltas. Older stores pay ONE
-    aggregate-only job over the prefix-pruned postings. Terms absent
-    from the store are absent from the result. Dictionary df counts
-    posting rows as WRITTEN — i.e. it ignores pending tombstones
-    until compaction physically applies them (Lucene's docFreq
-    contract: deleted docs keep counting until merge); the postings
-    aggregate reads the raw, pre-tombstone rows for the same count."""
-    from docker_etl_spark.sources.stores import (
-        parquet_write_completed,
-        read_sidecar_rows,
-    )
+    dict (≤ |terms| rows), folded from the dictionary vocab-scale: on
+    the driver from the prefix-pruned dict directories
+    (``read_sidecar_rows`` with the same ``__pfx`` pruning the Spark
+    read gets from partition filters), else through
+    :func:`_term_dictionary`'s Spark fold when the slice exceeds the
+    driver bound; both fold SUM(df) and MAX(max_tf) across batch
+    deltas. Terms absent from the store are absent from the result.
+    Dictionary df counts posting rows as WRITTEN — i.e. it ignores
+    pending tombstones until compaction physically applies them
+    (Lucene's docFreq contract: deleted docs keep counting until
+    merge)."""
+    from docker_etl_spark.sources.stores import read_sidecar_rows
 
     if not terms:
         return {}
     prefixes = sorted({t[:prefix_len] for t in terms})
-    meta = read_search_index_meta(spark, path)
     raw = None
-    if (
-        meta is not None
-        and meta["has_dict"]
-        and parquet_write_completed(spark, path + "/dict")
-    ):
+    if snap.batches["dict"]:
         raw = read_sidecar_rows(
-            spark, path + "/dict", max_rows=100_000,
+            snap.spark, snap.path + "/dict", max_rows=100_000,
             partition_filter={"__pfx": set(prefixes)},
+            schema=snap.schemas["dict"],
         )
     if raw is not None:
         tset = set(terms)
         folded: dict[str, tuple[int, int]] = {}
         for r in raw:
             if r["term"] not in tset or (
-                as_of_batch is not None
-                and int(r.get("__batch_id", -1)) > as_of_batch
+                snap.upto is not None and int(r["__batch_id"]) > snap.upto
             ):
                 continue
             df, max_tf = folded.get(r["term"], (0, 0))
@@ -855,20 +809,7 @@ def _collect_term_stats(
                 df + int(r["df"]), max(max_tf, int(r["max_tf"]))
             )
         return folded
-    d = read_search_dictionary(
-        spark, path, as_of_batch=as_of_batch, prefixes=prefixes,
-        terms=terms,
-    )
-    if d is None:
-        raw_p = spark.read.parquet(path + "/postings").filter(
-            F.col("__pfx").isin(prefixes) & F.col("term").isin(terms)
-        )
-        if as_of_batch is not None:
-            raw_p = raw_p.filter(F.col("__batch_id") <= as_of_batch)
-        d = raw_p.groupBy("term").agg(
-            F.count("*").cast("long").alias("df"),
-            F.max("tf").cast("long").alias("max_tf"),
-        )
+    d = _term_dictionary(snap, _terms_pred(prefixes, terms))
     return {
         r["term"]: (int(r["df"]), int(r["max_tf"]))
         for r in d.select("term", "df", "max_tf").collect()
@@ -981,62 +922,43 @@ def _top_k(
 
 
 def _pruned_postings(
-    spark,
-    path: str,
-    terms,
-    prefix_len: int,
-    as_of_batch: int | None,
-    id_col: str,
+    snap: StoreSnapshot, terms, prefix_len: int, id_col: str
 ) -> DataFrame:
     """The live postings of ``terms`` — the scan every term-keyed
     probe shares: a static ``__pfx`` IN partition filter (directory
-    pruning), a term IN pushed filter, the ``as_of_batch`` snapshot
-    and the tombstone anti-join (:func:`_live_postings`)."""
+    pruning), a term IN pushed filter, the snapshot's batches and its
+    tombstone anti-join."""
     terms = sorted(set(terms))
-    p = spark.read.parquet(path + "/postings").filter(
+    p = snap.read(
+        "postings",
         F.col("__pfx").isin(sorted({t[:prefix_len] for t in terms}))
-        & F.col("term").isin(terms)
+        & F.col("term").isin(terms),
     )
-    if as_of_batch is not None:
-        p = p.filter(F.col("__batch_id") <= as_of_batch)
-    return _live_postings(p, spark, path, id_col, as_of_batch)
+    return snap.live(p, id_col)
+
+
+def _probe_meta(
+    snap: StoreSnapshot, prefix_len: int | None, caller: str
+) -> tuple[int, int]:
+    """(min_token_len, prefix_len) of the store a probe reads — the
+    recorded values, an explicit ``prefix_len`` validated against
+    them."""
+    return _resolve_search_meta(snap.meta, snap.path, None, prefix_len, caller)
 
 
 def _positional_meta(
-    spark, path: str, prefix_len: int | None, caller: str
+    snap: StoreSnapshot, prefix_len: int | None, caller: str
 ) -> tuple[int, int]:
-    """(min_token_len, prefix_len) of a store a positional probe
-    reads; raises when the meta sidecar records a non-positional
-    layout."""
-    meta = read_search_index_meta(spark, path)
-    if meta is not None and not meta["positional"]:
+    """:func:`_probe_meta` of a store a positional probe reads; raises
+    when the meta sidecar records a non-positional layout."""
+    if not snap.meta["positional"]:
         raise ValueError(
-            f"{caller}: store at {path} is not positional — build it "
+            f"{caller}: store at {snap.path} is not positional — build it "
             "with build_positional_postings (and "
             "write_search_index(positional=True)) to enable positional "
             "probes"
         )
-    return _resolve_search_meta(spark, path, None, prefix_len, caller)
-
-
-def _positional_postings(
-    spark,
-    path: str,
-    terms,
-    prefix_len: int,
-    as_of_batch: int | None,
-    id_col: str,
-    caller: str,
-) -> DataFrame:
-    """:func:`_pruned_postings` of a positional store (raises when
-    the postings carry no ``pos`` column)."""
-    p = _pruned_postings(spark, path, terms, prefix_len, as_of_batch, id_col)
-    if "pos" not in p.columns:
-        raise ValueError(
-            f"{caller}: postings at {path} carry no 'pos' column — not a "
-            "positional store"
-        )
-    return p
+    return _probe_meta(snap, prefix_len, caller)
 
 
 def _reject_short(caller: str, terms, min_token_len: int) -> None:
@@ -1079,7 +1001,10 @@ def _query_set(
     it."""
     q = queries.select(query_id_col, *cols)
     if max_queries is not None:
-        q = q.limit(max_queries + 1)
+        # a driver-local frame collects with no job; any other is read
+        # as ONE partition: a bounded take over many near-empty ones (a
+        # row-list createDataFrame) scans them in waves, a job each
+        q = (q if queries.isLocal() else q.coalesce(1)).limit(max_queries + 1)
     rows = [tuple(r) for r in q.collect()]
     if max_queries is not None and len(rows) > max_queries:
         raise ValueError(
@@ -1099,13 +1024,11 @@ def _query_set(
 
 
 def _bm25_scored(
-    spark,
-    path: str,
+    snap: StoreSnapshot,
     pairs: list[tuple],
     qfield: StructField,
     id_col: str,
     prefix_len: int,
-    as_of_batch: int | None,
     skip_zero_weight_terms: bool = False,
 ) -> DataFrame:
     """Exact-integer BM25 of a driver-side query set: ``pairs`` are
@@ -1118,21 +1041,21 @@ def _bm25_scored(
     broadcast however many queries there are. Terms absent from the
     store (and, with ``skip_zero_weight_terms``, zero-idf terms)
     leave the scan."""
-    nd, sdl = _store_totals(spark, path, as_of_batch)
+    nd, sdl = _store_totals(snap)
     present = _collect_term_stats(
-        spark, path, sorted({t for _q, t in pairs}), prefix_len, as_of_batch
+        snap, sorted({t for _q, t in pairs}), prefix_len
     )
     keep = {
         t for t, (df, _m) in present.items()
         if not skip_zero_weight_terms or _lw_py(nd, df) > 0
     }
     table = _local_frame(
-        spark,
+        snap.spark,
         [(q, t, present[t][0], nd, sdl) for q, t in pairs if t in keep],
         StructType([qfield, *_DF_FIELDS]),
     )
     scored = _integer_term_scores(
-        _pruned_postings(spark, path, keep, prefix_len, as_of_batch, id_col),
+        _pruned_postings(snap, keep, prefix_len, id_col),
         table,
         id_col,
         extra=(qfield.name,),
@@ -1197,19 +1120,20 @@ def search_bm25_topk_batch(
     ``prefix_len`` defaults from the store's meta sidecar (an
     explicit value is validated against it — probing with the wrong
     prefix length would silently miss every stored directory).
+    ``path`` is a store path or a
+    :class:`~docker_etl_spark.sources.stores.StoreSnapshot` (every
+    probe takes either: a query running several probes opens one
+    snapshot and passes it to each).
     """
-    spark = queries.sparkSession
-    _mtl, prefix_len = _resolve_search_meta(
-        spark, path, None, prefix_len, "search_bm25_topk_batch"
-    )
+    snap = as_snapshot(queries.sparkSession, path, as_of_batch)
+    _mtl, prefix_len = _probe_meta(snap, prefix_len, "search_bm25_topk_batch")
     qfield, rows = _query_set(
         queries, query_id_col, [terms_col], "search_bm25_topk_batch",
         max_queries, max_query_terms,
     )
     pairs = list(dict.fromkeys((q, t) for q, ts in rows for t in ts or ()))
     scored = _bm25_scored(
-        spark, path, pairs, qfield, id_col, prefix_len, as_of_batch,
-        skip_zero_weight_terms,
+        snap, pairs, qfield, id_col, prefix_len, skip_zero_weight_terms
     )
     return _top_k(
         scored, [F.desc("score_scaled"), F.asc(id_col)], k, by=query_id_col
@@ -1232,12 +1156,11 @@ def search_bm25_topk(
     orderBy+limit and returned without the query column.
 
     Output: (id_col, n_terms, score_scaled, rank)."""
-    _mtl, prefix_len = _resolve_search_meta(
-        spark, path, None, prefix_len, "search_bm25_topk"
-    )
+    snap = as_snapshot(spark, path, as_of_batch)
+    _mtl, prefix_len = _probe_meta(snap, prefix_len, "search_bm25_topk")
     scored = _bm25_scored(
-        spark, path, [(0, t) for t in dict.fromkeys(query_terms)],
-        _ONE_QUERY, id_col, prefix_len, as_of_batch, skip_zero_weight_terms,
+        snap, [(0, t) for t in dict.fromkeys(query_terms)],
+        _ONE_QUERY, id_col, prefix_len, skip_zero_weight_terms,
     )
     return _top_k(scored, [F.desc("score_scaled"), F.asc(id_col)], k).select(
         id_col, "n_terms", "score_scaled", "rank"
@@ -1245,13 +1168,11 @@ def search_bm25_topk(
 
 
 def _phrase_scored(
-    spark,
-    path: str,
+    snap: StoreSnapshot,
     phrases: list[tuple],
     qfield: StructField,
     id_col: str,
     prefix_len: int | None,
-    as_of_batch: int | None,
     caller: str,
 ) -> DataFrame:
     """Exact phrase matches of a driver-side phrase set: ``phrases``
@@ -1265,12 +1186,12 @@ def _phrase_scored(
     array_intersect over the shifted lists (associative and
     commutative, so the unordered collect is safe) holds the 1-based
     match starts: phrase_tf is its size, ``match_starts`` it sorted."""
-    mtl, prefix_len = _positional_meta(spark, path, prefix_len, caller)
+    mtl, prefix_len = _positional_meta(snap, prefix_len, caller)
     terms = {t for _q, ph in phrases for t in ph}
     _reject_short(caller, terms, mtl)
     qcol = qfield.name
     slots = _local_frame(
-        spark,
+        snap.spark,
         [(q, t, i, len(ph)) for q, ph in phrases for i, t in enumerate(ph)],
         StructType(
             [
@@ -1281,9 +1202,7 @@ def _phrase_scored(
             ]
         ),
     )
-    p = _positional_postings(
-        spark, path, terms, prefix_len, as_of_batch, id_col, caller
-    )
+    p = _pruned_postings(snap, terms, prefix_len, id_col)
     g = p.join(F.broadcast(slots), "term").groupBy(qcol, id_col).agg(
         F.count("*").alias("__ns"),
         F.first("__len").alias("__len"),
@@ -1324,8 +1243,8 @@ def phrase_search_topk(
 
     Output: (id_col, phrase_tf, rank)."""
     scored = _phrase_scored(
-        spark, path, [(0, tuple(phrase))], _ONE_QUERY, id_col, prefix_len,
-        as_of_batch, "phrase_search_topk",
+        as_snapshot(spark, path, as_of_batch), [(0, tuple(phrase))],
+        _ONE_QUERY, id_col, prefix_len, "phrase_search_topk",
     )
     return _top_k(scored, [F.desc("phrase_tf"), F.asc(id_col)], k).select(
         id_col, "phrase_tf", "rank"
@@ -1372,14 +1291,14 @@ def phrase_search_topk_batch(
     on phrase terms shorter than the store's min_token_len (never
     indexed — the phrase cannot match; filter such phrases out
     upstream)."""
-    spark = queries.sparkSession
+    snap = as_snapshot(queries.sparkSession, path, as_of_batch)
     qfield, rows = _query_set(
         queries, query_id_col, [phrase_col], "phrase_search_topk_batch",
         max_queries, max_query_terms,
     )
     scored = _phrase_scored(
-        spark, path, [(q, tuple(ph or ())) for q, ph in rows], qfield,
-        id_col, prefix_len, as_of_batch, "phrase_search_topk_batch",
+        snap, [(q, tuple(ph or ())) for q, ph in rows], qfield,
+        id_col, prefix_len, "phrase_search_topk_batch",
     )
     return _top_k(
         scored, [F.desc("phrase_tf"), F.asc(id_col)], k, by=query_id_col
@@ -1530,13 +1449,11 @@ def _check_span_terms(caller: str, terms, query_id=None) -> None:
 
 
 def _span_scored(
-    spark,
-    path: str,
+    snap: StoreSnapshot,
     queries: list[tuple],
     qfield: StructField,
     id_col: str,
     prefix_len: int | None,
-    as_of_batch: int | None,
     max_positions_per_term: int,
     sweep,
     out: str,
@@ -1554,12 +1471,12 @@ def _span_scored(
     measures them: :func:`_min_span_sweep` (unordered MinSpan — slot
     order is irrelevant to it) or :func:`_ordered_window_sweep` (the
     terms as a subsequence in query order)."""
-    mtl, prefix_len = _positional_meta(spark, path, prefix_len, caller)
+    mtl, prefix_len = _positional_meta(snap, prefix_len, caller)
     terms = {t for _q, ts, _s in queries for t in ts}
     _reject_short(caller, terms, mtl)
     qcol = qfield.name
     qt = _local_frame(
-        spark,
+        snap.spark,
         [
             (q, t, i, len(ts), slop)
             for q, ts, slop in queries
@@ -1575,9 +1492,7 @@ def _span_scored(
             ]
         ),
     )
-    p = _positional_postings(
-        spark, path, terms, prefix_len, as_of_batch, id_col, caller
-    )
+    p = _pruned_postings(snap, terms, prefix_len, id_col)
     g = p.join(F.broadcast(qt), "term").groupBy(qcol, id_col).agg(
         F.count("*").alias("__nt"),
         F.first("__len").alias("__len"),
@@ -1631,9 +1546,9 @@ def proximity_search_topk(
     caller = "proximity_search_topk"
     _check_span_terms(caller, terms)
     scored = _span_scored(
-        spark, path, [(0, tuple(terms), slop)], _ONE_QUERY, id_col,
-        prefix_len, as_of_batch, max_positions_per_term, _min_span_sweep,
-        "min_span", caller,
+        as_snapshot(spark, path, as_of_batch), [(0, tuple(terms), slop)],
+        _ONE_QUERY, id_col, prefix_len, max_positions_per_term,
+        _min_span_sweep, "min_span", caller,
     )
     return _top_k(scored, [F.asc("min_span"), F.asc(id_col)], k).select(
         id_col, "min_span", "rank"
@@ -1660,8 +1575,8 @@ def ordered_window_search_topk(
     caller = "ordered_window_search_topk"
     _check_span_terms(caller, terms)
     scored = _span_scored(
-        spark, path, [(0, tuple(terms), slop)], _ONE_QUERY, id_col,
-        prefix_len, as_of_batch, max_positions_per_term,
+        as_snapshot(spark, path, as_of_batch), [(0, tuple(terms), slop)],
+        _ONE_QUERY, id_col, prefix_len, max_positions_per_term,
         _ordered_window_sweep, "min_window", caller,
     )
     return _top_k(scored, [F.asc("min_window"), F.asc(id_col)], k).select(
@@ -1690,6 +1605,7 @@ def _span_search_batch(
     """The two proximity batch probes: the query-set front, the
     per-query term guard, :func:`_span_scored` and the per-query
     top-k."""
+    snap = as_snapshot(queries.sparkSession, path, as_of_batch)
     cols = [terms_col] + ([slop_col] if slop_col is not None else [])
     qfield, rows = _query_set(
         queries, query_id_col, cols, caller, max_queries, max_query_terms
@@ -1700,8 +1616,8 @@ def _span_search_batch(
         _check_span_terms(caller, ts, query_id=r[0])
         qs.append((r[0], ts, r[2] if slop_col is not None else slop))
     scored = _span_scored(
-        queries.sparkSession, path, qs, qfield, id_col, prefix_len,
-        as_of_batch, max_positions_per_term, sweep, out, caller,
+        snap, qs, qfield, id_col, prefix_len, max_positions_per_term, sweep,
+        out, caller,
     )
     return _top_k(
         scored, [F.asc(out), F.asc(id_col)], k, by=query_id_col
@@ -1837,8 +1753,8 @@ def phrase_match_positions(
     like every positional probe. The probe is
     :func:`phrase_search_topk_batch`'s over a batch of one."""
     scored = _phrase_scored(
-        spark, path, [(0, tuple(phrase))], _ONE_QUERY, id_col, prefix_len,
-        as_of_batch, "phrase_match_positions",
+        as_snapshot(spark, path, as_of_batch), [(0, tuple(phrase))],
+        _ONE_QUERY, id_col, prefix_len, "phrase_match_positions",
     )
     if k is None:
         return scored.select(id_col, "phrase_tf", "match_starts")
@@ -1867,21 +1783,29 @@ def bm25_topk_batch_from_postings(
     ``stats`` may carry MULTIPLE delta rows (e.g. un-folded
     ``{path}/stats`` reads): it is SUM-folded to one (n_docs, sum_dl)
     row here before the crossJoin — a multi-row stats frame would
-    otherwise silently duplicate every scored row (r9 ADVICE)."""
+    otherwise silently duplicate every scored row (r9 ADVICE). When
+    ``postings`` carries the builder's ``_stats_observation``, the
+    barrier is eager and the totals are read from that observation
+    instead — the identical numbers, with no second pass over the
+    corpus (``write_search_index``'s STATS SOURCE rule)."""
+    obs = getattr(postings, "_stats_observation", None)
     pf = postings.join(
         F.broadcast(query_terms.select("term").distinct()),
         "term",
         "left_semi",
-    ).localCheckpoint(eager=False)
-    totals = stats.agg(
-        F.sum("n_docs").cast("long").alias("n_docs"),
-        F.sum("sum_dl").cast("long").alias("sum_dl"),
-    )
-    dfreq = (
-        pf.groupBy("term")
-        .agg(F.count("*").cast("long").alias("df"))
-        .crossJoin(F.broadcast(totals))
-    )
+    ).localCheckpoint(eager=obs is not None)
+    dfreq = pf.groupBy("term").agg(F.count("*").cast("long").alias("df"))
+    if obs is not None:
+        dfreq = _with_totals(dfreq, obs.get["n_docs"], obs.get["sum_dl"])
+    else:
+        dfreq = dfreq.crossJoin(
+            F.broadcast(
+                stats.agg(
+                    F.sum("n_docs").cast("long").alias("n_docs"),
+                    F.sum("sum_dl").cast("long").alias("sum_dl"),
+                )
+            )
+        )
     scored = _integer_term_scores(pf, dfreq, id_col)
     per_query = scored.join(F.broadcast(query_terms), "term")
     return _top_k(
@@ -1915,24 +1839,14 @@ def search_index_census(
 
     The doc-side facts (n_docs, sum_dl, max_dl, n_postings,
     n_batches) read the postings; the TERM-side facts (n_terms,
-    max_df, max_df_term) read the r11 dictionary sidecar when the
-    store has one — vocab-scale rows instead of a corpus-scale
-    per-term aggregate (r10 judge item #1) — and fall back to the
-    postings aggregate on older stores. ``as_of_batch``
-    snapshot-reads. All exact integers — cross-engine replayable.
+    max_df, max_df_term) read the dictionary sidecar — vocab-scale
+    rows instead of a corpus-scale per-term aggregate (r10 judge item
+    #1). ``as_of_batch`` snapshot-reads. All exact integers —
+    cross-engine replayable.
     """
-    p_raw = spark.read.parquet(path + "/postings")
-    if as_of_batch is not None:
-        p_raw = p_raw.filter(F.col("__batch_id") <= as_of_batch)
-    p = _live_postings(p_raw, spark, path, id_col, as_of_batch)
-    d = read_search_dictionary(spark, path, as_of_batch=as_of_batch)
-    per_term = (
-        d.select("term", "df")
-        if d is not None
-        else p.groupBy("term").agg(
-            F.count("*").cast("long").alias("df")
-        )
-    )
+    snap = as_snapshot(spark, path, as_of_batch)
+    p = snap.live(snap.read("postings"), id_col)
+    per_term = _term_dictionary(snap).select("term", "df")
     term_stats = per_term.agg(
         F.count("*").cast("long").alias("n_terms"),
         F.max("df").cast("long").alias("max_df"),
@@ -1958,13 +1872,10 @@ def search_index_census(
     # n_batches describes PHYSICAL layout (compaction debt), so it
     # counts the raw pre-tombstone batches (r12 ADVICE: a batch whose
     # every doc is tombstoned still exists on disk until compaction) —
-    # locally a partition-listing + footer fact (the x118 footer-census
-    # pattern), no scheduled scan job
-    from docker_etl_spark.sources.stores import batch_count
-
+    # the snapshot's partition listing, no scheduled scan job
     glob = _local_frame(
         spark,
-        [(batch_count(spark, path + "/postings", as_of_batch),)],
+        [(len(snap.batches["postings"]),)],
         StructType([StructField("n_batches", LongType())]),
     )
     return (
@@ -1993,45 +1904,15 @@ def _prefix_pred(term_prefix: str, prefix_len: int):
 
 
 def _expansion_count(
-    spark,
-    path: str,
-    pred,
-    postings: DataFrame,
-    as_of_batch: int | None,
-    max_expanded_terms: int,
+    snap: StoreSnapshot, pred, max_expanded_terms: int
 ) -> int:
     """The maxBooleanClauses guard of the prefix probes: the distinct
     indexed terms matching ``pred``, counted up to
-    ``max_expanded_terms + 1``. Counted off the DICTIONARY when the
-    store has one (vocab-scale rows, same ``__pfx`` directory pruning
-    as the postings scan; a distinct-term count needs no fold across
-    batches), else off the caller's pruned ``postings`` (corpus-scale
-    for a hot prefix). The dictionary read is gated on the dict dir
-    being COMMITTED, not just on meta's has_dict flag: in the crash
-    window (meta committed, first dict write not) the flag alone
-    would raise PATH_NOT_FOUND instead of falling back to the
-    postings count — the sidecar self-heal contract every other
-    dictionary reader honors (r11 ADVICE)."""
-    from docker_etl_spark.sources.stores import parquet_write_completed
-
-    meta = read_search_index_meta(spark, path)
-    if (
-        meta is not None
-        and meta["has_dict"]
-        and parquet_write_completed(spark, path + "/dict")
-    ):
-        src = spark.read.parquet(path + "/dict")
-        if as_of_batch is not None:
-            src = src.filter(F.col("__batch_id") <= as_of_batch)
-    else:
-        src = postings
-    return (
-        src.filter(pred)
-        .select("term")
-        .distinct()
-        .limit(max_expanded_terms + 1)
-        .count()
-    )
+    ``max_expanded_terms + 1`` off the dictionary (vocab-scale rows,
+    same ``__pfx`` directory pruning as the postings scan;
+    :func:`_term_dictionary` also covers the crash window where the
+    first dictionary write never committed — r11 ADVICE)."""
+    return _term_dictionary(snap, pred).limit(max_expanded_terms + 1).count()
 
 
 def prefix_search_topk(
@@ -2065,17 +1946,11 @@ def prefix_search_topk(
     """
     if not term_prefix:
         raise ValueError("prefix_search_topk: empty term_prefix")
-    _mtl, prefix_len = _resolve_search_meta(
-        spark, path, None, prefix_len, "prefix_search_topk"
-    )
+    snap = as_snapshot(spark, path, as_of_batch)
+    _mtl, prefix_len = _probe_meta(snap, prefix_len, "prefix_search_topk")
     pred = _prefix_pred(term_prefix, prefix_len)
-    p = spark.read.parquet(path + "/postings").filter(pred)
-    if as_of_batch is not None:
-        p = p.filter(F.col("__batch_id") <= as_of_batch)
-    p = _live_postings(p, spark, path, id_col, as_of_batch)
-    n_terms = _expansion_count(
-        spark, path, pred, p, as_of_batch, max_expanded_terms
-    )
+    p = snap.live(snap.read("postings", pred), id_col)
+    n_terms = _expansion_count(snap, pred, max_expanded_terms)
     if n_terms > max_expanded_terms:
         raise ValueError(
             f"prefix_search_topk: prefix {term_prefix!r} expands to more "
@@ -2084,8 +1959,9 @@ def prefix_search_topk(
             "or raise the guard explicitly"
         )
     dfreq = p.groupBy("term").agg(F.count("*").cast("long").alias("df"))
-    totals = _store_totals(spark, path, as_of_batch)
-    scored = _integer_term_scores(p, _with_totals(dfreq, *totals), id_col)
+    scored = _integer_term_scores(
+        p, _with_totals(dfreq, *_store_totals(snap)), id_col
+    )
     return _top_k(
         _bm25_sum(scored, [id_col]), [F.desc("score_scaled"), F.asc(id_col)], k
     ).select(id_col, "n_terms", "score_scaled", "rank")
@@ -2126,8 +2002,9 @@ def phrase_prefix_search_topk(
     terms."""
     from functools import reduce
 
+    snap = as_snapshot(spark, path, as_of_batch)
     mtl, prefix_len = _positional_meta(
-        spark, path, prefix_len, "phrase_prefix_search_topk"
+        snap, prefix_len, "phrase_prefix_search_topk"
     )
     if not phrase:
         raise ValueError(
@@ -2140,21 +2017,15 @@ def phrase_prefix_search_topk(
     fixed_terms = sorted(set(phrase))
     fixed_pfx = sorted({t[:prefix_len] for t in fixed_terms})
     exp_pred = _prefix_pred(last_prefix, prefix_len)
-    p = spark.read.parquet(path + "/postings").filter(
-        (F.col("__pfx").isin(fixed_pfx) & F.col("term").isin(fixed_terms))
-        | exp_pred
+    p = snap.live(
+        snap.read(
+            "postings",
+            (F.col("__pfx").isin(fixed_pfx) & F.col("term").isin(fixed_terms))
+            | exp_pred,
+        ),
+        id_col,
     )
-    if as_of_batch is not None:
-        p = p.filter(F.col("__batch_id") <= as_of_batch)
-    p = _live_postings(p, spark, path, id_col, as_of_batch)
-    if "pos" not in p.columns:
-        raise ValueError(
-            f"phrase_prefix_search_topk: postings at {path} carry no "
-            "'pos' column — not a positional store"
-        )
-    n_exp = _expansion_count(
-        spark, path, exp_pred, p, as_of_batch, max_expanded_terms
-    )
+    n_exp = _expansion_count(snap, exp_pred, max_expanded_terms)
     if n_exp > max_expanded_terms:
         raise ValueError(
             f"phrase_prefix_search_topk: prefix {last_prefix!r} expands "
@@ -2197,22 +2068,17 @@ def phrase_prefix_search_topk(
 
 
 def _fuzzy_scored(
-    spark,
-    path: str,
-    qterms: list[tuple[int, str]],
-    max_dist: int,
-    as_of_batch: int | None,
+    snap: StoreSnapshot, qterms: list[tuple[int, str]], max_dist: int
 ) -> DataFrame:
     """Did-you-mean candidates of a driver-side term list: ``qterms``
     are (query index, term) pairs → (``__qi``, term, df, dist) for
     every dictionary term within ``max_dist`` Levenshtein edits of a
     query term, the query term itself excluded.
 
-    ONE dictionary scan: the sidecar when the store has one
-    (vocab-scale rows — the Lucene terms-dictionary read; r10 judge
-    item #1), else per-term df aggregated from the postings. No
-    prefix pruning: an edit can change the first character, so
-    partition pruning would silently drop legal candidates (Lucene
+    ONE dictionary scan (vocab-scale rows — the Lucene
+    terms-dictionary read; r10 judge item #1). No prefix pruning: an
+    edit can change the first character, so partition pruning would
+    silently drop legal candidates (Lucene
     pays the same full-dictionary walk via its FST automaton). The
     lossless length band (length is a Levenshtein lower bound — the
     x85 recipe) pairs each dictionary term only with the query terms
@@ -2232,12 +2098,7 @@ def _fuzzy_scored(
     def literal(values: list, element_type: str):
         return F.from_json(F.lit(json.dumps(values)), f"array<{element_type}>")
 
-    d = read_search_dictionary(spark, path, as_of_batch=as_of_batch)
-    if d is None:
-        p = spark.read.parquet(path + "/postings")
-        if as_of_batch is not None:
-            p = p.filter(F.col("__batch_id") <= as_of_batch)
-        d = p.groupBy("term").agg(F.count("*").cast("long").alias("df"))
+    d = _term_dictionary(snap)
     qterms = sorted(qterms, key=lambda it: len(it[1]))
     lens = [len(t) for _i, t in qterms]
     top = (lens[-1] if lens else 0) + max_dist
@@ -2288,7 +2149,9 @@ def fuzzy_term_suggest(
     Output: (term, df, dist, rank)."""
     if not term:
         raise ValueError("fuzzy_term_suggest: empty term")
-    cand = _fuzzy_scored(spark, path, [(0, term)], max_dist, as_of_batch)
+    cand = _fuzzy_scored(
+        as_snapshot(spark, path, as_of_batch), [(0, term)], max_dist
+    )
     return _top_k(
         cand, [F.desc("df"), F.asc("dist"), F.asc("term")], k
     ).select("term", "df", "dist", "rank")
@@ -2339,18 +2202,16 @@ def search_boolean_topk(
         raise ValueError(
             "search_boolean_topk: needs at least one must or should term"
         )
-    _mtl, prefix_len = _resolve_search_meta(
-        spark, path, None, prefix_len, "search_boolean_topk"
-    )
+    snap = as_snapshot(spark, path, as_of_batch)
+    _mtl, prefix_len = _probe_meta(snap, prefix_len, "search_boolean_topk")
     all_terms = sorted(set(must) | set(should) | set(must_not))
     scoring_terms = sorted(set(must) | set(should))
-    p = _pruned_postings(
-        spark, path, all_terms, prefix_len, as_of_batch, id_col
-    )
+    p = _pruned_postings(snap, all_terms, prefix_len, id_col)
     sp = p.filter(F.col("term").isin(scoring_terms))
     dfreq = sp.groupBy("term").agg(F.count("*").cast("long").alias("df"))
-    totals = _store_totals(spark, path, as_of_batch)
-    scored = _integer_term_scores(sp, _with_totals(dfreq, *totals), id_col)
+    scored = _integer_term_scores(
+        sp, _with_totals(dfreq, *_store_totals(snap)), id_col
+    )
     gates = p.groupBy(id_col).agg(
         F.count_distinct(
             F.when(F.col("term").isin(list(must)), F.col("term"))
@@ -2404,9 +2265,9 @@ def fuzzy_term_suggest_batch(
         max_queries,
     )
     cand = _fuzzy_scored(
-        spark, path,
+        as_snapshot(spark, path, as_of_batch),
         [(i, t) for i, (_q, t) in enumerate(rows) if t is not None],
-        max_dist, as_of_batch,
+        max_dist,
     )
     ids = _local_frame(
         spark,
@@ -2422,8 +2283,7 @@ def fuzzy_term_suggest_batch(
 
 
 def _compact_dict_driver_direct(
-    spark, path: str, up_to_batch: int, has_dels: bool,
-    cap: int = 100_000,
+    snap: StoreSnapshot, up_to_batch: int, cap: int = 100_000
 ) -> dict | None:
     """Driver-direct dictionary fold for :func:`compact_search_index`
     (see the call site): tiered copy of above-horizon delta files +
@@ -2442,16 +2302,12 @@ def _compact_dict_driver_direct(
         compact_sidecar_partitioned,
     )
 
+    spark, path = snap.spark, snap.path
     by_pfx: dict[str, list] | None = None
-    if has_dels:
+    if snap.tombstones is not None:
         rows = (
-            spark.read.parquet(path + "/postings")
-            .filter(F.col("__batch_id") == -1)
-            .groupBy("__pfx", "term")
-            .agg(
-                F.count("*").cast("long").alias("df"),
-                F.sum("tf").cast("long").alias("sum_tf"),
-                F.max("tf").cast("long").alias("max_tf"),
+            _dict_delta(
+                snap.read("postings", F.col("__batch_id") == -1), -1
             )
             .limit(cap + 1)
             .collect()
@@ -2622,8 +2478,8 @@ def compact_search_index(
         compact_partitioned_store,
         compact_sidecar_partitioned,
         fold_below_horizon,
+        open_store,
         parquet_write_completed,
-        pinned_tombstones,
         record_horizon,
     )
 
@@ -2635,13 +2491,12 @@ def compact_search_index(
     # the surviving base postings (df/n_docs/sum_tf must DECREMENT —
     # recomputation from survivors, never subtraction algebra), and
     # the applied tombstones are cleared from the sidecar LAST.
-    # Tombstones above the horizon stay pending.
-    del_ids = pinned_tombstones(spark, path, up_to_batch)
+    # Tombstones above the horizon stay pending: the snapshot at the
+    # horizon pins exactly the ones this fold applies.
+    snap = open_store(spark, path, as_of_batch=up_to_batch)
+    del_ids = snap.tombstones
 
     def fold_dict(df: DataFrame) -> DataFrame:
-        above = df.filter(F.col("__batch_id") > up_to_batch).select(
-            "term", "df", "sum_tf", "max_tf", "__pfx", "__batch_id"
-        )
         if del_ids is None:
             # per-term deltas are disjoint across batches (append-only
             # id contract), so SUM(df)/SUM(sum_tf) and MAX(max_tf)
@@ -2654,6 +2509,7 @@ def compact_search_index(
                     F.sum("sum_tf").cast("long").alias("sum_tf"),
                     F.max("max_tf").cast("long").alias("max_tf"),
                 )
+                .withColumn("__batch_id", F.lit(-1))
             )
         else:
             # deleted docs' contributions must DECREMENT df/sum_tf and
@@ -2661,21 +2517,10 @@ def compact_search_index(
             # from the surviving base postings (exact by definition;
             # MAX does not fold under deletion, so subtraction algebra
             # cannot do this)
-            base = (
-                spark.read.parquet(path + "/postings")
-                .filter(F.col("__batch_id") == -1)
-                .groupBy("__pfx", "term")
-                .agg(
-                    F.count("*").cast("long").alias("df"),
-                    F.sum("tf").cast("long").alias("sum_tf"),
-                    F.max("tf").cast("long").alias("max_tf"),
-                )
+            base = _dict_delta(
+                snap.read("postings", F.col("__batch_id") == -1), -1
             )
-        return above.unionByName(
-            base.withColumn("__batch_id", F.lit(-1)).select(
-                "term", "df", "sum_tf", "max_tf", "__pfx", "__batch_id"
-            )
-        )
+        return df.filter(F.col("__batch_id") > up_to_batch).unionByName(base)
 
     postings_res = compact_partitioned_store(
         spark,
@@ -2687,6 +2532,7 @@ def compact_search_index(
             df, up_to_batch, del_ids, _doc_id_column(df.columns)
         ),
         lock_path=path,
+        schema=snap.schemas["postings"],
     )
 
     # The stats store is ONE ROW PER BATCH by construction — a Spark
@@ -2699,9 +2545,7 @@ def compact_search_index(
     # collected) when they do.
     recomputed_base: tuple[int, int] | None = None
     if del_ids is not None:
-        base = spark.read.parquet(path + "/postings").filter(
-            F.col("__batch_id") == -1
-        )
+        base = snap.read("postings", F.col("__batch_id") == -1)
         rb = (
             base.groupBy(_doc_id_column(base.columns))
             .agg(F.first("dl").cast("long").alias("dl"))
@@ -2746,20 +2590,14 @@ def compact_search_index(
         lock_path=path,
     )
     res = {"postings": postings_res, "stats": stats_res}
-    meta = read_search_index_meta(spark, path)
-    # the dict fold is gated on the dict dir being COMMITTED, not
-    # just meta's flag: in the crash window (meta committed with
-    # has_dict=True, first dict write uncommitted) folding would
-    # raise AFTER postings/stats already folded, aborting compaction
-    # until a redelivered write heals the dict — which
-    # write_search_index rejects once the horizon passes that batch
-    # (r11 ADVICE). An uncommitted dict skips the fold; the store
-    # stays consistent (readers already treat it as absent).
-    if (
-        meta is not None
-        and meta["has_dict"]
-        and parquet_write_completed(spark, path + "/dict")
-    ):
+    # the dict fold is gated on the dict dir being COMMITTED: in the
+    # crash window (meta committed, first dict write uncommitted)
+    # folding would raise AFTER postings/stats already folded,
+    # aborting compaction until a redelivered write heals the dict —
+    # which write_search_index rejects once the horizon passes that
+    # batch (r11 ADVICE). An uncommitted dict skips the fold; the
+    # store stays consistent (readers already treat it as absent).
+    if parquet_write_completed(spark, path + "/dict"):
         # Dictionary fold on the driver when the vocab-scale deltas fit
         # its bound: same tiered copy-vs-fold split as the stats fold.
         # Without tombstones the fold is the exact SUM/SUM/MAX per
@@ -2767,9 +2605,7 @@ def compact_search_index(
         # the surviving base postings (one vocab-scale aggregate job,
         # collected under the same bound) — identical arithmetic to
         # fold_dict, the Spark fold for dictionaries past the bound.
-        res["dict"] = _compact_dict_driver_direct(
-            spark, path, up_to_batch, del_ids is not None
-        )
+        res["dict"] = _compact_dict_driver_direct(snap, up_to_batch)
         if res["dict"] is None:
             res["dict"] = compact_partitioned_store(
                 spark,
@@ -2779,6 +2615,7 @@ def compact_search_index(
                 owner=owner,
                 transform=fold_dict,
                 lock_path=path,
+                schema=snap.schemas["dict"],
             )
     if del_ids is not None:
         res["deletes"] = clear_tombstones(spark, path, up_to_batch, owner)
@@ -2807,14 +2644,12 @@ def _ts_upper_bound(lw: int, max_tf: int, sum_dl: int, n_docs: int) -> int:
 
 
 def _bm25_pruned_scored(
-    spark,
-    path: str,
+    snap: StoreSnapshot,
     pairs: list[tuple],
     qfield: StructField,
     id_col: str,
     k: int,
     prefix_len: int,
-    as_of_batch: int | None,
     nonessential_ub_ratio: float,
     diag: dict,
     count_rows: bool = False,
@@ -2835,18 +2670,13 @@ def _bm25_pruned_scored(
     def exhaustive(reason: str) -> DataFrame:
         diag["mode"] = "exhaustive"
         diag["reason"] = reason
-        return _bm25_scored(
-            spark, path, pairs, qfield, id_col, prefix_len, as_of_batch
-        )
+        return _bm25_scored(snap, pairs, qfield, id_col, prefix_len)
 
-    meta = read_search_index_meta(spark, path)
-    if meta is None or not meta["has_dict"]:
-        return exhaustive("store has no dictionary")
-    nd, sdl = _store_totals(spark, path, as_of_batch)
+    nd, sdl = _store_totals(snap)
     if nd <= 0 or sdl <= 0:
         return exhaustive("empty stats")
     present = _collect_term_stats(
-        spark, path, sorted({t for _q, t in pairs}), prefix_len, as_of_batch
+        snap, sorted({t for _q, t in pairs}), prefix_len
     )
     ub = {
         t: _ts_upper_bound(_lw_py(nd, df), max_tf, sdl, nd)
@@ -2888,15 +2718,12 @@ def _bm25_pruned_scored(
         # rows (query_id, term, *extra values) → per-posting term
         # scores of their terms' pruned scan, carrying the query id
         table = _local_frame(
-            spark,
+            snap.spark,
             [(q, t, present[t][0], nd, sdl, *x) for q, t, *x in rows],
             StructType([qfield, *_DF_FIELDS, *extra]),
         )
         return _integer_term_scores(
-            _pruned_postings(
-                spark, path, {r[1] for r in rows}, prefix_len, as_of_batch,
-                id_col,
-            ),
+            _pruned_postings(snap, {r[1] for r in rows}, prefix_len, id_col),
             table,
             id_col,
             extra=(qcol, *(f.name for f in extra)),
@@ -3001,14 +2828,13 @@ def search_bm25_topk_pruned(
     (``c_rows_total``) against those the pruned plan scores
     (``c_rows_scored``) — an extra aggregate job, so the production
     path passes no ``_diag``."""
-    _mtl, prefix_len = _resolve_search_meta(
-        spark, path, None, prefix_len, "search_bm25_topk_pruned"
-    )
+    snap = as_snapshot(spark, path, as_of_batch)
+    _mtl, prefix_len = _probe_meta(snap, prefix_len, "search_bm25_topk_pruned")
     rec: dict = {}
     full = _bm25_pruned_scored(
-        spark, path, [(0, t) for t in dict.fromkeys(query_terms)],
-        _ONE_QUERY, id_col, k, prefix_len, as_of_batch,
-        nonessential_ub_ratio, rec, count_rows=_diag is not None,
+        snap, [(0, t) for t in dict.fromkeys(query_terms)],
+        _ONE_QUERY, id_col, k, prefix_len, nonessential_ub_ratio, rec,
+        count_rows=_diag is not None,
     )
     if _diag is not None:
         pruned = "0" in rec.get("valid", ())
@@ -3067,21 +2893,20 @@ def search_bm25_proximity_topk(
     sweep only — an IO/precision knob for term-stuffed documents;
     BM25 always sees every row."""
     caller = "search_bm25_proximity_topk"
-    mtl, prefix_len = _positional_meta(spark, path, prefix_len, caller)
+    snap = as_snapshot(spark, path, as_of_batch)
+    mtl, prefix_len = _positional_meta(snap, prefix_len, caller)
     _check_span_terms(caller, terms)
     _reject_short(caller, terms, mtl)
     tlist = sorted(terms)
     n = len(tlist)
-    nd, sdl = _store_totals(spark, path, as_of_batch)
-    present = _collect_term_stats(spark, path, tlist, prefix_len, as_of_batch)
+    nd, sdl = _store_totals(snap)
+    present = _collect_term_stats(snap, tlist, prefix_len)
     dfreq = _local_frame(
         spark,
         [(t, present[t][0], nd, sdl) for t in tlist if t in present],
         StructType(_DF_FIELDS),
     )
-    p = _positional_postings(
-        spark, path, present, prefix_len, as_of_batch, id_col, caller
-    )
+    p = _pruned_postings(snap, present, prefix_len, id_col)
     scored = _integer_term_scores(p, dfreq, id_col, extra=("pos",))
     by_doc = scored.groupBy(id_col).agg(
         F.count("*").cast("long").alias("n_terms"),
@@ -3153,14 +2978,12 @@ def bm25_term_snippets(
 
     spark = docs.sparkSession
     caller = "bm25_term_snippets"
-    _mtl, prefix_len = _positional_meta(spark, path, prefix_len, caller)
+    snap = as_snapshot(spark, path, as_of_batch)
+    _mtl, prefix_len = _positional_meta(snap, prefix_len, caller)
     top = search_bm25_topk(
-        spark, path, terms, id_col=id_col, k=k, prefix_len=prefix_len,
-        as_of_batch=as_of_batch,
+        spark, snap, terms, id_col=id_col, k=k, prefix_len=prefix_len,
     ).localCheckpoint()
-    p = _positional_postings(
-        spark, path, terms, prefix_len, as_of_batch, id_col, caller
-    )
+    p = _pruned_postings(snap, terms, prefix_len, id_col)
     hits = p.join(
         F.broadcast(top.select(id_col)), id_col, "left_semi"
     ).select(
@@ -3241,14 +3064,14 @@ def search_bm25_topk_batch_pruned(
     partition pruning on a non-partition column) — the saving is the
     scoring join + hash aggregate + shuffle over corpus-scale rows,
     the dominant cost of a stopword probe. Falls back to the
-    exhaustive plan entirely when the store has no dictionary (or
-    empty stats, or no query term in the store). ``queries`` is read
+    exhaustive plan entirely on empty stats or when no query term is
+    in the store. ``queries`` is read
     once into the driver (:func:`_query_set`). ``_diag`` (a dict)
     records the per-query record for tests/ops without launching a
     job."""
-    spark = queries.sparkSession
-    _mtl, prefix_len = _resolve_search_meta(
-        spark, path, None, prefix_len, "search_bm25_topk_batch_pruned"
+    snap = as_snapshot(queries.sparkSession, path, as_of_batch)
+    _mtl, prefix_len = _probe_meta(
+        snap, prefix_len, "search_bm25_topk_batch_pruned"
     )
     qfield, rows = _query_set(
         queries, query_id_col, [terms_col], "search_bm25_topk_batch_pruned",
@@ -3256,8 +3079,8 @@ def search_bm25_topk_batch_pruned(
     )
     pairs = list(dict.fromkeys((q, t) for q, ts in rows for t in ts or ()))
     full = _bm25_pruned_scored(
-        spark, path, pairs, qfield, id_col, k, prefix_len, as_of_batch,
-        nonessential_ub_ratio, _diag if _diag is not None else {},
+        snap, pairs, qfield, id_col, k, prefix_len, nonessential_ub_ratio,
+        _diag if _diag is not None else {},
     )
     return _top_k(
         full, [F.desc("score_scaled"), F.asc(id_col)], k, by=query_id_col

@@ -19,6 +19,13 @@ from pyspark.sql import functions as F
 
 from docker_etl_spark.operators._util import spread_for_compute as _spread
 
+from docker_etl_spark.sources.stores import (
+    # the shared delta-store lifecycle's horizon marker and pending
+    # tombstones, under their IVF-PQ names
+    read_horizon as read_ivfpq_horizon,  # noqa: F401
+    read_tombstones as read_ivfpq_deletes,  # noqa: F401
+)
+
 
 def dot(a: Column, b: Column) -> Column:
     """Dot product of two numeric arrays (fold over zip_with)."""
@@ -2378,13 +2385,22 @@ def write_ivfpq_store(
     fixed symmetrically here).
     """
     from docker_etl_spark.sources.stores import (
+        read_schema,
         reject_at_or_below_horizon,
         store_writer_lock,
         write_repartition,
         write_sidecar_rows,
+        write_store_meta,
     )
 
     spark = index.sparkSession
+    codes = index.select(
+        F.col(id_col),
+        F.col("pq_code"),
+        F.col("__cell"),
+        F.lit(-1 if batch_id is None else batch_id).alias("__batch_id"),
+    )
+    layout = ("__cell", "__batch_id")
     qrows = [
         ("meta", 0, 0, [len(coarse), len(codebooks), len(codebooks[0]),
                         len(codebooks[0][0]), quant_scale])
@@ -2399,15 +2415,12 @@ def write_ivfpq_store(
         # horizon check under the lease (a concurrent compaction could
         # otherwise raise the horizon between check and write)
         reject_at_or_below_horizon(spark, path, batch_id, "write_ivfpq_store")
+        # the codes' read schema, declared so no load infers it
+        write_store_meta(
+            spark, path, [], {"codes": read_schema(codes, layout)}
+        )
         (
-            index.select(
-                F.col(id_col),
-                F.col("pq_code"),
-                F.col("__cell"),
-                F.lit(-1 if batch_id is None else batch_id).alias(
-                    "__batch_id"
-                ),
-            )
+            codes
             # hash-distribute on the partition column first (the
             # write_digest_store discipline): commits otherwise scale
             # as tasks × cells instead of one file per cell directory;
@@ -2416,7 +2429,7 @@ def write_ivfpq_store(
             .transform(lambda d: write_repartition(d, ("__cell",)))
             .write.option("partitionOverwriteMode", "dynamic")
             .mode("overwrite")
-            .partitionBy("__cell", "__batch_id")
+            .partitionBy(*layout)
             .parquet(path + "/codes")
         )
         # the quantizer rows are a local Python collection already
@@ -2431,31 +2444,6 @@ def write_ivfpq_store(
                 ("vals", "list<int64>"),
             ],
         )
-
-
-def read_ivfpq_horizon(spark, path: str) -> int | None:
-    """The store's compaction horizon (highest ``up_to_batch`` any
-    :func:`compact_ivfpq_store` folded), or None if never compacted —
-    the shared ``{path}/horizon`` marker
-    (:func:`~docker_etl_spark.sources.stores.read_horizon`), kept
-    apart from the quantizer sidecar."""
-    from docker_etl_spark.sources.stores import read_horizon
-
-    return read_horizon(spark, path)
-
-
-def read_ivfpq_deletes(
-    spark, path: str, as_of_batch: int | None = None
-) -> DataFrame | None:
-    """The store's PENDING tombstones (one id per deleted vector per
-    delete batch, ``{path}/deletes`` partitioned by ``__batch_id``)
-    or None when it carries none — the shared tombstone sidecar
-    (:func:`~docker_etl_spark.sources.stores.read_tombstones`), gated
-    on the sidecar being committed so the crash window reads as
-    absent. ``as_of_batch`` snapshot-reads the delete history."""
-    from docker_etl_spark.sources.stores import read_tombstones
-
-    return read_tombstones(spark, path, as_of_batch)
 
 
 def delete_from_ivfpq_store(
@@ -2489,23 +2477,26 @@ def delete_from_ivfpq_store(
 
 def load_ivfpq_store(
     spark,
-    path: str,
+    path,
     as_of_batch: int | None = None,
     apply_deletes: bool = True,
 ) -> tuple[DataFrame, list[list[int]], list[list[list[int]]], dict]:
     """Reload a :func:`write_ivfpq_store` index →
     (index frame (id, __cell, pq_code), coarse, codebooks, meta).
 
-    The quantizer sidecar is a bounded collect (n_cells·dim +
+    ``path`` is a store path or a
+    :class:`~docker_etl_spark.sources.stores.StoreSnapshot`. The
+    quantizer sidecar is a bounded collect (n_cells·dim +
     m·k·(dim/m) integer rows); the codes frame is the lazily-scanned
-    store — cell pruning happens at probe time
-    (``ivfpq_topk(..., prune_index_partitions=True)``), and
+    store, read with its declared schema — cell pruning happens at
+    probe time (``ivfpq_topk(..., prune_index_partitions=True)``), and
     ``as_of_batch`` is the partition-pruned snapshot read
     (``__batch_id <= N``, the load_cms_store convention).
     """
-    from docker_etl_spark.sources.stores import read_sidecar_rows
+    from docker_etl_spark.sources.stores import as_snapshot, read_sidecar_rows
 
-    q = read_sidecar_rows(spark, path + "/quantizer")
+    snap = as_snapshot(spark, path, as_of_batch)
+    q = read_sidecar_rows(spark, snap.path + "/quantizer")
     meta_row = next(r for r in q if r["part"] == "meta")
     n_cells, m, k, d, quant_scale = (int(x) for x in meta_row["vals"])
     coarse_rows = {r["idx1"]: list(r["vals"]) for r in q if r["part"] == "coarse"}
@@ -2525,9 +2516,7 @@ def load_ivfpq_store(
         "subspace_dim": d,
         "quant_scale": quant_scale,
     }
-    codes = spark.read.parquet(path + "/codes")
-    if as_of_batch is not None:
-        codes = codes.filter(F.col("__batch_id") <= as_of_batch)
+    codes = snap.read("codes")
     id_name = [
         c for c in codes.columns
         if c not in ("__cell", "pq_code", "__batch_id")
@@ -2539,14 +2528,7 @@ def load_ivfpq_store(
     # ingest path's raw view — deleted ids stay "seen" for the
     # append-only id contract.
     if apply_deletes:
-        dels = read_ivfpq_deletes(spark, path, as_of_batch=as_of_batch)
-        if dels is not None:
-            dc = [c for c in dels.columns if c != "__batch_id"][0]
-            index = index.join(
-                dels.select(F.col(dc).alias(id_name[0])).distinct(),
-                id_name[0],
-                "left_anti",
-            )
+        index = snap.live(index, id_name[0])
     return index, coarse, books, meta
 
 
@@ -2745,7 +2727,7 @@ def compact_ivfpq_store(
         clear_tombstones,
         compact_partitioned_store,
         fold_below_horizon,
-        pinned_tombstones,
+        open_store,
         record_horizon,
     )
 
@@ -2755,7 +2737,8 @@ def compact_ivfpq_store(
     # (FAISS remove_ids semantics, the search-store recipe): the codes
     # fold anti-joins them and the applied entries are cleared from
     # the sidecar LAST
-    del_ids = pinned_tombstones(spark, path, up_to_batch)
+    snap = open_store(spark, path, as_of_batch=up_to_batch)
+    del_ids = snap.tombstones
     res = compact_partitioned_store(
         spark,
         path + "/codes",
@@ -2772,6 +2755,7 @@ def compact_ivfpq_store(
             ),
         ),
         lock_path=path,
+        schema=snap.schemas["codes"],
     )
     if del_ids is not None:
         clear_tombstones(spark, path, up_to_batch, owner)

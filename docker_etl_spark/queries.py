@@ -12515,12 +12515,15 @@ def x111_positional_quality_eval(
         proximity_search_topk_batch,
         write_search_index,
     )
+    from docker_etl_spark.sources.stores import open_store
 
     d = load_docs_spread(spark, sf_dir)
     postings, stats = build_positional_postings(d, "text", "doc_id")
     path = _x90_store_path("x111", sf_dir)
     shutil.rmtree(path, ignore_errors=True)
     write_search_index(postings, stats, path, positional=True)
+    # both probes read one snapshot of the store
+    store = open_store(spark, path)
     queries = spark.createDataFrame(
         [
             (1, ["window", "join"], 3),
@@ -12530,11 +12533,11 @@ def x111_positional_quality_eval(
         "query_id long, terms array<string>, slop int",
     )
     kwargs = dict(slop_col="slop", k=100000)
-    full = proximity_search_topk_batch(queries, path, **kwargs).select(
+    full = proximity_search_topk_batch(queries, store, **kwargs).select(
         "query_id", "doc_id", F.col("min_span").alias("f_span")
     )
     capped = proximity_search_topk_batch(
-        queries, path, max_positions_per_term=2, **kwargs
+        queries, store, max_positions_per_term=2, **kwargs
     ).select("query_id", "doc_id", F.col("min_span").alias("c_span"))
     j = full.join(capped, ["query_id", "doc_id"], "left")
     agg = j.groupBy("query_id").agg(
@@ -12673,21 +12676,24 @@ def cp08_relevance_feedback(spark: SparkSession, sf_dir: str) -> DataFrame:
         write_search_index,
     )
     from docker_etl_spark.operators.text_analysis import tfidf_top_terms
+    from docker_etl_spark.sources.stores import open_store
 
     d = load_docs_spread(spark, sf_dir)
     postings, stats = build_postings(d, "text", "doc_id")
     path = _x90_store_path("cp08", sf_dir)
     shutil.rmtree(path, ignore_errors=True)
     write_search_index(postings, stats, path)
+    # the seed and the expanded probe read one snapshot of the store
+    store = open_store(spark, path)
     seed_ids = [
         r["doc_id"]
-        for r in search_bm25_topk(spark, path, ("dup",), k=5).collect()
+        for r in search_bm25_topk(spark, store, ("dup",), k=5).collect()
     ]
     seed_docs = d.filter(F.col("doc_id").isin(seed_ids))
     fb = tfidf_top_terms(seed_docs, text_col="text", id_col="doc_id", k=1)
     fb_terms = {r["term"] for r in fb.collect()}
     expanded = tuple(sorted({"dup"} | fb_terms))
-    return search_bm25_topk(spark, path, expanded, k=10)
+    return search_bm25_topk(spark, store, expanded, k=10)
 
 
 # ---------------------------------------------------------------------------
@@ -13294,11 +13300,11 @@ def x118_ivfpq_delete_lifecycle(
     # engine's parquet_row_count discipline — no scheduled scan job
     # for a number the footers already hold); Spark count fallback
     # for non-local stores
-    from docker_etl_spark.sources.stores import parquet_row_count
+    from docker_etl_spark.sources.stores import open_store, parquet_row_count
 
     ncodes = parquet_row_count(path + "/codes")
     if ncodes is None:
-        ncodes = spark.read.parquet(path + "/codes").count()
+        ncodes = open_store(spark, path).read("codes").count()
     cen = spark.createDataFrame(
         [("census", -1, 0, int(ncodes), 0)],
         "phase string, query_id long, rank int, neighbor_id long, "

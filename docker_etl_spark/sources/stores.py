@@ -29,16 +29,16 @@ their data: a 1-row ``{path}/horizon`` marker (the highest batch a
 compaction folded; :func:`read_horizon`, :func:`reject_at_or_below_
 horizon`, :func:`record_horizon`) and a ``{path}/deletes`` tombstone
 sidecar partitioned by ``__batch_id`` (:func:`delete_from_store`,
-:func:`read_tombstones`, :func:`pinned_tombstones`,
-:func:`clear_tombstones`). Compaction records the horizon FIRST and
-clears the applied tombstones LAST, so a crash anywhere between leaves
-a read-consistent store that a re-run completes.
+:func:`read_tombstones`, :func:`clear_tombstones`). Compaction records
+the horizon FIRST and clears the applied tombstones LAST, so a crash
+anywhere between leaves a read-consistent store that a re-run
+completes.
 
 THE ARM RULE. Bounded sidecar reads and writes
 (:func:`read_sidecar_rows`, :func:`write_sidecar_rows`,
 :func:`write_tombstone_sidecar`), the existence probes
 (:func:`parquet_path_exists`, :func:`parquet_write_completed`) and the
-layout batch count (:func:`batch_count`) each have two arms, and
+layout listing (:func:`_listed_files`) each have two arms, and
 :func:`_driver_direct` alone picks one: a LOCAL path runs driver-direct
 — pyarrow, the directory listing and parquet footers, no Spark job
 (metadata reads and writes should not be jobs, the table-format
@@ -47,6 +47,21 @@ FileSystem listing. A tombstone batch given as a DataFrame also takes
 the Spark arm past its row bound or for an id type outside
 :data:`_SIDECAR_TYPES`. Both arms write the same files with the same
 column types.
+
+STORE SNAPSHOT. A probe, a census, a load or a compaction reads a
+delta store through one :class:`StoreSnapshot` (:func:`open_store`),
+taken once per call, or once per query and passed to each of its
+probes. It pins the store's build parameters and horizon, the
+committed ``__batch_id`` values (every read keeps to the newest of
+them, so a batch committed after the snapshot stays invisible), the
+pending tombstone ids as one small local frame, and the Spark read
+schema of each data directory (``postings`` and ``dict``, or
+``codes``). The schemas are declared: the store's writer derives them
+from the frame it writes and records them in ``{path}/meta``, so a
+read is ``spark.read.schema(...).parquet(...)`` — no footer read and
+no schema-inference job on either arm. Partition columns are pinned
+to one type (``__pfx`` string, ``__batch_id`` and ``__cell`` int)
+whatever their directory values look like.
 
 COMPACTION IS LOCAL-ONLY. The two-rename swap needs a POSIX rename;
 :func:`compact_partitioned_store`, :func:`compact_sidecar_partitioned`
@@ -59,15 +74,24 @@ before it changes anything. Object-store layouts need a table format
 from __future__ import annotations
 
 import contextlib
+import json
 import logging
 import os
 import shutil
 import time
+from dataclasses import dataclass
 from urllib.parse import unquote, urlparse
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
+from pyspark.sql.types import (
+    ArrayType,
+    IntegerType,
+    IntegralType,
+    MapType,
+    StructField,
+    StructType,
+)
 
 log = logging.getLogger(__name__)
 
@@ -341,6 +365,37 @@ def _partition_values(comps) -> dict[str, str]:
     }
 
 
+def _listed_files(spark, path: str):
+    """Yield the directory components (escaped, as on disk) of every
+    committed ``.parquet`` file of the layout DIRECTORY ``path``; an
+    absent path or a plain file yields nothing. Driver-direct arm:
+    :func:`_committed_files`. Spark arm: a recursive Hadoop FileSystem
+    listing with the same hidden/staging rule — metadata calls, no
+    Spark job."""
+    local = _driver_direct(path)
+    if local is not None:
+        if os.path.isdir(local):
+            yield from (comps for _f, comps in _committed_files(local))
+        return
+    jvm = spark._jvm
+    hpath = jvm.org.apache.hadoop.fs.Path(path)
+    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
+    if not fs.exists(hpath) or not fs.getFileStatus(hpath).isDirectory():
+        return
+    # listFiles returns FILESYSTEM-QUALIFIED paths; qualify the root
+    # the same way or an authority-less input (hdfs:/x) never matches
+    # the listed prefix and hidden-named ancestors of the store root
+    # would read as task staging (ADVICE r11).
+    root = str(fs.makeQualified(hpath)).rstrip("/")
+    it = fs.listFiles(hpath, True)
+    while it.hasNext():
+        parts = str(it.next().getPath())[len(root):].strip("/").split("/")
+        if parts[-1].endswith(".parquet") and not any(
+            _hidden_component(c) for c in parts
+        ):
+            yield tuple(parts[:-1])
+
+
 def _footer_rows(f: str) -> int:
     import pyarrow.parquet as pq
 
@@ -429,6 +484,7 @@ def read_sidecar_rows(
     path: str,
     max_rows: int | None = None,
     partition_filter: dict[str, set[str]] | None = None,
+    schema: StructType | None = None,
 ) -> list[dict] | None:
     """All rows of a BOUNDED sidecar parquet layout (1-row meta/horizon
     markers, quantizer tables, stats/dict deltas, tombstones) as
@@ -443,10 +499,12 @@ def read_sidecar_rows(
 
     Driver-direct arm: walk + footers + pyarrow, no job (a
     ``spark.read.parquet(...).collect()`` pays schema inference + job
-    scheduling, ~0.3-0.7 s per read at any scale)."""
+    scheduling, ~0.3-0.7 s per read at any scale). The Spark arm
+    reads with ``schema`` when the layout has a declared one."""
     local = _driver_direct(path)
     if local is None:
-        d = spark.read.parquet(path)
+        reader = spark.read if schema is None else spark.read.schema(schema)
+        d = reader.parquet(path)
         for key, allowed in (partition_filter or {}).items():
             d = d.filter(F.col(key).cast("string").isin(sorted(allowed)))
         if max_rows is not None:
@@ -497,19 +555,24 @@ def write_sidecar_rows(
     reports ABSENT, which every sidecar reader already self-heals."""
     local = _driver_direct(path)
     if local is None:
-        frame = spark.createDataFrame(
-            rows, ", ".join(f"`{n}` {_SIDECAR_TYPES[t]}" for n, t in schema)
+        frame = _local_frame(
+            spark, rows, StructType.fromDDL(
+                ", ".join(f"`{n}` {_SIDECAR_TYPES[t]}" for n, t in schema)
+            ),
         )
         if partition:
             frame = frame.withColumns(
                 {k: F.lit(v) for k, v in partition.items()}
             )
-        w = frame.repartition(1).write.mode("overwrite")
-        if partition:
-            w = w.option("partitionOverwriteMode", "dynamic").partitionBy(
-                *partition
-            )
-        w.parquet(path)
+        # dynamic overwrite replaces only the partitions written; with
+        # no partition columns it is the plain overwrite
+        (
+            frame.repartition(1)
+            .write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy(*(partition or {}))
+            .parquet(path)
+        )
         return
     import pyarrow as pa
     import pyarrow.parquet as pq
@@ -582,27 +645,6 @@ def _write_tombstone_rows(
         )
 
 
-def batch_count(spark, path: str, as_of_batch: int | None = None) -> int:
-    """Distinct ``__batch_id`` partition values holding at least one
-    row (at or below ``as_of_batch`` when given) — what
-    ``countDistinct(__batch_id)`` over the raw scan returns. The
-    driver-direct arm reads it off the directory names and footers."""
-    local = _driver_direct(path)
-    if local is None:
-        d = spark.read.parquet(path)
-        if as_of_batch is not None:
-            d = d.filter(F.col("__batch_id") <= as_of_batch)
-        return int(d.agg(F.countDistinct("__batch_id")).collect()[0][0])
-    seen: set[int] = set()
-    for f, comps in _committed_files(local):
-        bid = int(_partition_values(comps)["__batch_id"])
-        if bid in seen or (as_of_batch is not None and bid > as_of_batch):
-            continue
-        if _footer_rows(f) > 0:
-            seen.add(bid)
-    return len(seen)
-
-
 # ---------------------------------------------------------------------------
 # Delta-store lifecycle: horizon marker + tombstone sidecar
 # ---------------------------------------------------------------------------
@@ -631,8 +673,13 @@ def reject_at_or_below_horizon(
     their tombstones applied and cleared. Callers hold the writer
     lease, so a concurrent compaction cannot raise the horizon between
     this check and the write."""
-    horizon = read_horizon(spark, path)
     bid = -1 if batch_id is None else batch_id
+    if not -_MAX_BATCH_ID - 1 <= bid <= _MAX_BATCH_ID:
+        raise ValueError(
+            f"{caller}: batch_id={batch_id} does not fit the store's "
+            "declared int __batch_id column"
+        )
+    horizon = read_horizon(spark, path)
     if horizon is not None and bid <= horizon:
         raise ValueError(
             f"{caller}: batch_id={batch_id} is at or below the store's "
@@ -694,38 +741,201 @@ def delete_from_store(
 def read_tombstones(
     spark, path: str, as_of_batch: int | None = None
 ) -> DataFrame | None:
-    """The store's PENDING tombstones — one id per deleted row per
-    delete batch, ``{path}/deletes`` partitioned by ``__batch_id`` —
-    as a lazy frame for a probe's anti-join, or None when it carries
-    none. Gated on the sidecar being COMMITTED (a crash between mkdir
-    and commit reads as absent — the sidecar self-heal contract).
-    ``as_of_batch`` snapshot-reads the delete history."""
-    if not parquet_write_completed(spark, path + "/deletes"):
-        return None
-    d = spark.read.parquet(path + "/deletes")
-    if as_of_batch is not None:
-        d = d.filter(F.col("__batch_id") <= as_of_batch)
-    return d
-
-
-def pinned_tombstones(spark, path: str, up_to_batch: int) -> DataFrame | None:
-    """The distinct tombstone ids at or below ``up_to_batch`` as a
-    literal one-column frame, or None when none are pending there.
-    Read once into the driver, the set cannot change under the fold
-    it feeds; a delete batch that lands meanwhile is above the horizon
-    :func:`record_horizon` already raised."""
+    """The store's PENDING tombstones at or below ``as_of_batch`` (all
+    when None) — one (id, ``__batch_id``) row per deleted row per
+    delete batch of ``{path}/deletes`` — or None when none are pending
+    there. Read once on the bounded sidecar path into a local frame,
+    the set cannot change under the plans it feeds: it is the pin of a
+    :class:`StoreSnapshot` and so of a compaction's fold (a delete
+    batch landing during the fold is above the horizon
+    :func:`record_horizon` already raised). Gated on the sidecar being
+    COMMITTED (a crash between mkdir and commit reads as absent — the
+    sidecar self-heal contract)."""
     if not parquet_write_completed(spark, path + "/deletes"):
         return None
     sel = [
         r for r in read_sidecar_rows(spark, path + "/deletes")
-        if int(r["__batch_id"]) <= up_to_batch
+        if as_of_batch is None or int(r["__batch_id"]) <= as_of_batch
     ]
     if not sel:
         return None
     idc = next(c for c in sel[0] if c != "__batch_id")
-    vals = sorted({r[idc] for r in sel if r[idc] is not None})
-    schema = StructType.fromDDL(f"`{idc}` {_SIDECAR_TYPES[_id_type(vals)]}")
-    return _local_frame(spark, [(v,) for v in vals], schema)
+    ids = [r[idc] for r in sel]
+    schema = StructType.fromDDL(
+        f"`{idc}` {_SIDECAR_TYPES[_id_type(ids)]}, __batch_id int"
+    )
+    return _local_frame(
+        spark, [(v, int(r["__batch_id"])) for v, r in zip(ids, sel)], schema
+    )
+
+
+# ---------------------------------------------------------------------------
+# Store snapshots: declared schemas, one metadata read per query
+# ---------------------------------------------------------------------------
+
+
+def _nullable(t):
+    """``t`` with every field, array element and map value nullable —
+    how a file-source read types what it reads."""
+    if isinstance(t, StructType):
+        return StructType(
+            [StructField(f.name, _nullable(f.dataType)) for f in t]
+        )
+    if isinstance(t, ArrayType):
+        return ArrayType(_nullable(t.elementType))
+    if isinstance(t, MapType):
+        return MapType(t.keyType, _nullable(t.valueType))
+    return t
+
+
+def read_schema(df: DataFrame, partition_cols) -> StructType:
+    """The schema a Spark read of ``df`` written ``partitionBy(
+    *partition_cols)`` returns: the data columns in order, then the
+    partition columns, all nullable. A partition column keeps its
+    written type — a string stays a string even when every directory
+    value is all digits (inference would type those int) — except
+    that an integral one is int, as inference types a batch or cell
+    number."""
+    parts = [str(c) for c in partition_cols]
+    types = {
+        c: IntegerType() if isinstance(t, IntegralType) else t
+        for c, t in ((c, df.schema[c].dataType) for c in parts)
+    }
+    return _nullable(
+        StructType(
+            [f for f in df.schema if f.name not in types]
+            + [StructField(c, t) for c, t in types.items()]
+        )
+    )
+
+
+#: The declared ``__batch_id`` type is int: a batch id must fit it.
+_MAX_BATCH_ID = 2**31 - 1
+
+
+def write_store_meta(
+    spark, path: str, params: list[tuple[str, str, object]], schemas: dict
+) -> None:
+    """Write the store's 1-row ``{path}/meta``: its build parameters
+    (``(name, arrow type, value)`` triples) and the read schema of
+    each data directory, as one JSON column. Callers hold the lease."""
+    doc = json.dumps({d: t.jsonValue() for d, t in sorted(schemas.items())})
+    write_sidecar_rows(
+        spark, path + "/meta", [(*(v for *_nt, v in params), doc)],
+        [*((n, t) for n, t, _v in params), ("schemas", "string")],
+    )
+
+
+def read_store_meta(spark, path: str) -> tuple[dict, dict] | None:
+    """(build parameters, {data directory: read schema}) from
+    ``{path}/meta``, or None when no committed meta exists — a crashed
+    partial meta write reads as absent, so the next write rewrites it
+    under the lease (the sidecar self-heal contract)."""
+    if not parquet_write_completed(spark, path + "/meta"):
+        return None
+    row = dict(read_sidecar_rows(spark, path + "/meta")[0])
+    if "schemas" not in row:
+        raise ValueError(
+            f"store at {path} records no data schemas in its meta — it "
+            "was written by an older engine; rebuild it at a fresh path"
+        )
+    doc = json.loads(row.pop("schemas"))
+    return row, {d: StructType.fromJson(t) for d, t in doc.items()}
+
+
+@dataclass(frozen=True)
+class StoreSnapshot:
+    """What one query reads of a delta store, pinned once by
+    :func:`open_store` (see the module docstring)."""
+
+    spark: object
+    path: str
+    meta: dict  # build parameters (none for IVF-PQ)
+    horizon: int | None
+    as_of_batch: int | None
+    batches: dict  # directory → committed __batch_id values, ascending
+    #: the newest batch every read sees: ``as_of_batch``, else the
+    #: newest batch committed when the snapshot was taken
+    upto: int | None
+    tombstones: DataFrame | None  # read_tombstones: (id, __batch_id)
+    schemas: dict  # data directory → read schema
+
+    def read(self, d: str, where=None) -> DataFrame:
+        """The rows of data directory ``d`` matching ``where``, read with
+        its declared schema and limited to the snapshot's batches (that
+        filter last, so the plan lists the caller's partition filters
+        first)."""
+        df = self.spark.read.schema(self.schemas[d]).parquet(
+            f"{self.path}/{d}"
+        )
+        if where is not None:
+            df = df.filter(where)
+        if self.upto is not None:
+            df = df.filter(F.col("__batch_id") <= self.upto)
+        return df
+
+    def live(self, df: DataFrame, id_col: str) -> DataFrame:
+        """``df`` without the rows the pinned tombstones name — an
+        anti-join, which duplicates cannot change, so no ``distinct``.
+        Catalyst pushes the caller's filters through its left side, so
+        partition pruning is unchanged."""
+        t = self.tombstones
+        if t is None:
+            return df
+        return df.join(
+            t.select(F.col(t.columns[0]).alias(id_col)), id_col, "left_anti"
+        )
+
+
+def open_store(
+    spark, path: str, as_of_batch: int | None = None
+) -> StoreSnapshot:
+    """Pin the delta store at ``path`` for one query: its meta (build
+    parameters and declared schemas — required), horizon, pending
+    tombstones and the committed batch ids (at or below
+    ``as_of_batch``) of its data directories and of ``stats``, which
+    carries every search batch, one that indexed no posting too.
+    Driver-direct on a local path: pyarrow and the directory listing,
+    no Spark job."""
+    got = read_store_meta(spark, path)
+    if got is None:
+        raise ValueError(
+            f"open_store: no store at {path} — its meta sidecar is "
+            "missing or uncommitted (write the store first)"
+        )
+    meta, schemas = got
+    batches = {}
+    for d in (*schemas, "stats"):
+        ids = {
+            int(_partition_values(comps)["__batch_id"])
+            for comps in _listed_files(spark, f"{path}/{d}")
+        }
+        batches[d] = tuple(
+            sorted(b for b in ids if as_of_batch is None or b <= as_of_batch)
+        )
+    upto = as_of_batch if as_of_batch is not None else max(
+        (b[-1] for b in batches.values() if b), default=None
+    )
+    return StoreSnapshot(
+        spark, path, meta, read_horizon(spark, path), as_of_batch, batches,
+        upto, read_tombstones(spark, path, as_of_batch), schemas,
+    )
+
+
+def as_snapshot(spark, store, as_of_batch: int | None = None) -> StoreSnapshot:
+    """``store`` when it already is a :class:`StoreSnapshot` (a query
+    passing one snapshot to each of its probes), else
+    :func:`open_store` of the path. A snapshot fixes its own
+    ``as_of_batch``; a different explicit one raises."""
+    if not isinstance(store, StoreSnapshot):
+        return open_store(spark, store, as_of_batch)
+    if as_of_batch not in (None, store.as_of_batch):
+        raise ValueError(
+            f"as_of_batch={as_of_batch} conflicts with the snapshot's "
+            f"as_of_batch={store.as_of_batch} — open a snapshot at that "
+            "batch instead"
+        )
+    return store
 
 
 def fold_below_horizon(
@@ -911,6 +1121,7 @@ def compact_partitioned_store(
     owner: str | None = None,
     transform=None,
     lock_path: str | None = None,
+    schema: StructType | None = None,
 ) -> dict:
     """Rewrite a partitioned parquet store into right-sized files,
     PRESERVING the partition directory layout (band=…/, tbl=…/,
@@ -947,6 +1158,8 @@ def compact_partitioned_store(
     writer lease on THIS path instead of ``path`` — callers whose
     store root differs from the compacted subdirectory (the IVF-PQ
     codes/ layout) must serialize against writers locking the root.
+    ``schema``: the store's declared read schema (:func:`read_schema`);
+    None infers it — the streaming ledger stores declare none yet.
     """
     local = _local_store(path, "compact_partitioned_store")
     tmp = local.rstrip("/") + ".__compact"
@@ -955,7 +1168,8 @@ def compact_partitioned_store(
         _recover_interrupted_swap(local, tmp, bak, path)
         files_before = parquet_file_count(local) or 0
         rows = parquet_row_count(local)
-        df = spark.read.parquet(local)
+        reader = spark.read if schema is None else spark.read.schema(schema)
+        df = reader.parquet(local)
         if transform is not None:
             df = transform(df)
         shutil.rmtree(tmp, ignore_errors=True)
@@ -1014,37 +1228,6 @@ def parquet_write_completed(spark, path: str) -> bool:
     the next writer rewrites it under the store lease.
 
     The Spark arm runs the same data-file check as a recursive Hadoop
-    FileSystem listing — bounded for the 1-row sidecars this guards
-    (a handful of objects per prefix)."""
-    local = _driver_direct(path)
-    if local is not None:
-        return os.path.isdir(local) and next(
-            _committed_files(local), None
-        ) is not None
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(hpath):
-        return False
-    # listFiles returns FILESYSTEM-QUALIFIED paths; qualify the root
-    # the same way or an authority-less input (hdfs:/x) never matches
-    # the walk's stop condition and the staging check climbs past the
-    # store root, misreading hidden-named ancestors as task staging
-    # (ADVICE r11).
-    root = str(fs.makeQualified(hpath))
-    it = fs.listFiles(hpath, True)
-    while it.hasNext():
-        f = it.next().getPath()
-        name = f.getName()
-        if not name.endswith(".parquet") or _hidden_component(name):
-            continue
-        # skip task-staging files under _temporary/.hidden dirs
-        parent, staged = f.getParent(), False
-        while parent is not None and str(parent) != root:
-            if _hidden_component(parent.getName()):
-                staged = True
-                break
-            parent = parent.getParent()
-        if not staged:
-            return True
-    return False
+    FileSystem listing (:func:`_listed_files`) — bounded for the 1-row
+    sidecars this guards (a handful of objects per prefix)."""
+    return next(_listed_files(spark, path), None) is not None

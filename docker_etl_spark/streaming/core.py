@@ -801,11 +801,9 @@ def search_index_stream(
     )
 
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        from docker_etl_spark.operators.search import (
-            read_search_index_horizon,
-            read_search_index_meta,
-        )
+        from docker_etl_spark.operators.search import read_search_index_horizon
         from docker_etl_spark.operators.text_analysis import tokens
+        from docker_etl_spark.sources.stores import open_store
 
         spark = batch_df.sparkSession
         horizon = read_search_index_horizon(spark, store_path)
@@ -823,10 +821,8 @@ def search_index_stream(
             # already present, so presence still holds). The postings
             # scan is id-unpruned but this path only runs on the rare
             # redelivery-below-horizon recovery, never per batch.
-            meta = read_search_index_meta(spark, store_path)
-            mtl = meta["min_token_len"] if meta is not None else (
-                3 if min_token_len is None else min_token_len
-            )
+            store = open_store(spark, store_path)
+            mtl = store.meta["min_token_len"]
             indexable = F.exists(
                 tokens(text_col), lambda t: F.length(t) >= mtl
             )
@@ -841,7 +837,7 @@ def search_index_stream(
             if sample_ids:
                 present = {
                     r[0]
-                    for r in spark.read.parquet(store_path + "/postings")
+                    for r in store.read("postings")
                     .filter(F.col(id_col).isin(sample_ids))
                     .select(id_col)
                     .distinct()
@@ -916,7 +912,7 @@ def search_delete_stream(
     from docker_etl_spark.operators.search import delete_from_search_index
 
     return _delete_stream(
-        store_path, id_col, "/postings", delete_from_search_index,
+        store_path, id_col, "postings", delete_from_search_index,
         "search_delete_stream",
     )
 
@@ -935,7 +931,7 @@ def ivfpq_delete_stream(
     from docker_etl_spark.operators.similarity import delete_from_ivfpq_store
 
     return _delete_stream(
-        store_path, id_col, "/codes", delete_from_ivfpq_store,
+        store_path, id_col, "codes", delete_from_ivfpq_store,
         "ivfpq_delete_stream",
     )
 
@@ -946,7 +942,7 @@ def _delete_stream(
     """The tombstone-stream sink both delete streams share; they
     differ only in the data subdirectory a below-horizon redelivery
     is verified against and the delete function."""
-    from docker_etl_spark.sources.stores import read_horizon
+    from docker_etl_spark.sources.stores import open_store, read_horizon
 
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
@@ -963,7 +959,8 @@ def _delete_stream(
             # redelivered-below-horizon anomaly.
             present = [
                 r[0]
-                for r in spark.read.parquet(store_path + data_dir)
+                for r in open_store(spark, store_path)
+                .read(data_dir)
                 .select(id_col)
                 .join(
                     F.broadcast(batch_df.select(id_col).distinct()),

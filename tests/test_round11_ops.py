@@ -297,38 +297,6 @@ def test_dictionary_fold_matches_postings_across_lifecycle(spark, tmp_path):
     assert dict_view(terms=["alpha"]) == {"alpha": truth["alpha"]}
 
 
-def test_dictionary_absent_on_pre_r11_store(spark, tmp_path):
-    """A store whose meta predates the dictionary keeps working:
-    reads return None and the readers fall back to postings."""
-    from docker_etl_spark.operators.search import (
-        build_postings,
-        fuzzy_term_suggest,
-        read_search_dictionary,
-        write_search_index,
-    )
-
-    store = str(tmp_path / "old")
-    p, s = build_postings(
-        _docs(spark, [(1, "alpha beta"), (2, "alpne beta")]),
-        "text", "doc_id",
-    )
-    write_search_index(p, s, store)
-    # simulate an r10 store: rewrite meta without has_dict, drop dict
-    import shutil
-
-    meta = spark.read.parquet(store + "/meta").select(
-        "prefix_len", "min_token_len", "positional"
-    ).collect()[0]
-    shutil.rmtree(store + "/dict")
-    shutil.rmtree(store + "/meta")
-    spark.createDataFrame(
-        [tuple(meta)], "prefix_len int, min_token_len int, positional boolean"
-    ).repartition(1).write.parquet(store + "/meta")
-    assert read_search_dictionary(spark, store) is None
-    got = fuzzy_term_suggest(spark, store, "alphc", max_dist=2, k=5)
-    assert {r["term"] for r in got.collect()} == {"alpha", "alpne"}
-
-
 def test_fuzzy_suggest_and_census_read_dictionary_not_postings(
     spark, tmp_path
 ):

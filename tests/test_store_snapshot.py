@@ -1,0 +1,398 @@
+"""Store snapshots (``sources/stores.open_store``): declared read
+schemas, the per-probe job pin, snapshot isolation across an append,
+and the guard that keeps store reads from inferring their schema.
+"""
+
+from __future__ import annotations
+
+import ast
+import math
+import os
+import shutil
+from pathlib import Path
+
+import pytest
+
+_ROWS = [
+    (1, "spark shuffle join join window"),
+    (2, "spark window aggregate scan"),
+    (3, "join scan shuffle spark spark"),
+    (4, "window join probe scan scan"),
+    (5, "unique sentinel phrase spark"),
+    (6, "spark spark spark join"),
+]
+
+
+def _docs(spark, rows):
+    return spark.createDataFrame(rows, "doc_id long, text string")
+
+
+def _search_store(spark, path, rows=_ROWS, positional=False):
+    from docker_etl_spark.operators.search import (
+        build_positional_postings,
+        build_postings,
+        write_search_index,
+    )
+
+    builder = build_positional_postings if positional else build_postings
+    p, s = builder(_docs(spark, rows), "text", "doc_id")
+    write_search_index(p, s, path, batch_id=0, positional=positional)
+    return path
+
+
+def _ivfpq_store(spark, path):
+    from docker_etl_spark.operators.similarity import (
+        ivfpq_build,
+        write_ivfpq_store,
+    )
+
+    vecs = spark.createDataFrame(
+        [(i, [math.sin(0.7 * i + j) for j in range(8)]) for i in range(30)],
+        "vec_id long, vec array<double>",
+    )
+    index, coarse, books = ivfpq_build(
+        vecs, "vec", "vec_id", dim=8, n_cells=2, m=2, k=4
+    )
+    write_ivfpq_store(index, coarse, books, path, batch_id=0)
+    return path
+
+
+@pytest.mark.parametrize("kind", ["plain", "positional", "ivfpq"])
+def test_declared_schemas_equal_inferred(spark, tmp_path, kind):
+    """The schema a store records for each data directory is the one
+    Spark infers on read, partition columns included."""
+    from docker_etl_spark.sources.stores import open_store
+
+    path = str(tmp_path / kind)
+    if kind == "ivfpq":
+        _ivfpq_store(spark, path)
+        want = {"codes"}
+    else:
+        _search_store(spark, path, positional=kind == "positional")
+        want = {"postings", "dict"}
+    snap = open_store(spark, path)
+    assert set(snap.schemas) == want
+    for d, schema in snap.schemas.items():
+        assert schema == spark.read.parquet(f"{path}/{d}").schema, d
+
+
+def _levenshtein(a: str, b: str) -> int:
+    prev = list(range(len(b) + 1))
+    for i, ca in enumerate(a, 1):
+        cur = [i]
+        for j, cb in enumerate(b, 1):
+            cur.append(
+                min(prev[j] + 1, cur[j - 1] + 1, prev[j - 1] + (ca != cb))
+            )
+        prev = cur
+    return prev[-1]
+
+
+def test_all_digit_prefixes_pin_one_type(spark, tmp_path):
+    """A store whose every ``__pfx`` is all digits: inference types the
+    partition column int, the declared schema keeps it a string, and
+    the BM25, fuzzy and census answers equal those computed from the
+    inferring read."""
+    from docker_etl_spark.operators.search import (
+        bm25_topk_batch_from_postings,
+        fuzzy_term_suggest,
+        search_bm25_topk,
+        search_index_census,
+    )
+    from docker_etl_spark.sources.stores import open_store
+
+    rows = [
+        (1, "1234 5678 1234 9012"),
+        (2, "5678 9012 3456"),
+        (3, "1234 3457 7890 7890"),
+        (4, "9012 9013 1234"),
+    ]
+    path = _search_store(spark, str(tmp_path / "digits"), rows=rows)
+    inferred = spark.read.parquet(path + "/postings")
+    assert inferred.schema["__pfx"].dataType.simpleString() == "int"
+    assert open_store(spark, path).schemas["postings"]["__pfx"].dataType \
+        .simpleString() == "string"
+
+    # BM25: the probe equals the from-postings ranking over the
+    # inferring read
+    terms = ("1234", "9012", "7890")
+    got = [
+        (r["doc_id"], r["n_terms"], r["score_scaled"], r["rank"])
+        for r in search_bm25_topk(spark, path, terms, k=10).collect()
+    ]
+    qt = spark.createDataFrame(
+        [(0, t) for t in terms], "query_id int, term string"
+    )
+    want = [
+        (r["doc_id"], r["n_terms"], r["score_scaled"], r["rank"])
+        for r in bm25_topk_batch_from_postings(
+            inferred, spark.read.parquet(path + "/stats"), qt, k=10
+        ).orderBy("rank").collect()
+    ]
+    assert got == want and len(got) == 4
+
+    prow = [r.asDict() for r in inferred.collect()]
+    df = {}
+    for r in prow:
+        df[r["term"]] = df.get(r["term"], 0) + 1
+    # fuzzy: every indexed term within one edit of the query, by df
+    fz = sorted(
+        (r["term"], r["df"], r["dist"])
+        for r in fuzzy_term_suggest(spark, path, "9012", max_dist=1, k=10)
+        .collect()
+    )
+    assert fz == sorted(
+        (t, n, _levenshtein(t, "9012"))
+        for t, n in df.items()
+        if t != "9012" and _levenshtein(t, "9012") <= 1
+    ) and fz
+    # census
+    c = search_index_census(spark, path).collect()[0].asDict()
+    dl = {r["doc_id"]: r["dl"] for r in prow}
+    top = min(df.items(), key=lambda kv: (-kv[1], kv[0]))
+    assert c == {
+        "n_terms": len(df), "n_docs": len(dl), "n_postings": len(prow),
+        "max_df": top[1], "max_df_term": top[0], "sum_dl": sum(dl.values()),
+        "max_dl": max(dl.values()), "n_batches": 1,
+    }
+
+
+def _stage_names(spark, fn):
+    """Stage names of the Spark jobs ``fn()`` launches (one list per
+    job), found by job group."""
+    sc = spark.sparkContext
+    group = f"snapshot-probe-{os.getpid()}-{id(fn)}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    tracker = sc.statusTracker()
+    return [
+        [tracker.getStageInfo(s).name for s in tracker.getJobInfo(j).stageIds]
+        for j in tracker.getJobIdsForGroup(group)
+    ]
+
+
+def test_probe_takes_at_most_four_jobs_and_no_schema_inference(
+    spark, tmp_path
+):
+    """A BM25 and a phrase probe over a store with pending tombstones
+    each launch at most 4 jobs, none of them a parquet schema
+    inference (a "parquet at" job)."""
+    from docker_etl_spark.operators.search import (
+        delete_from_search_index,
+        phrase_search_topk,
+        search_bm25_topk,
+    )
+
+    path = _search_store(spark, str(tmp_path / "pin"), positional=True)
+    delete_from_search_index(spark, path, [3], batch_id=1)
+    probes = {
+        "bm25": lambda: search_bm25_topk(
+            spark, path, ("spark", "join"), k=3
+        ).collect(),
+        "phrase": lambda: phrase_search_topk(
+            spark, path, ("spark", "window"), k=3
+        ).collect(),
+    }
+    for name, probe in probes.items():
+        probe()  # warm
+        jobs = _stage_names(spark, probe)
+        assert 0 < len(jobs) <= 4, (name, jobs)
+        assert not any(
+            s.startswith("parquet at") for stages in jobs for s in stages
+        ), (name, jobs)
+
+
+def test_shared_snapshot_ignores_a_later_append(spark, tmp_path):
+    """Two probes sharing one snapshot answer as the store stood when
+    it was taken, even when an append commits between them; a fresh
+    probe sees the append."""
+    from docker_etl_spark.operators.search import (
+        append_search_index,
+        phrase_search_topk,
+        search_bm25_topk,
+        search_index_census,
+    )
+    from docker_etl_spark.sources.stores import open_store
+
+    path = _search_store(spark, str(tmp_path / "iso"), positional=True)
+
+    def answers(store):
+        return (
+            sorted(map(tuple, search_bm25_topk(
+                spark, store, ("spark", "join"), k=10).collect())),
+            sorted(map(tuple, phrase_search_topk(
+                spark, store, ("spark", "window"), k=10).collect())),
+            tuple(search_index_census(spark, store).collect()[0]),
+        )
+
+    before = answers(path)
+    snap = open_store(spark, path)
+    bm25 = sorted(map(tuple, search_bm25_topk(
+        spark, snap, ("spark", "join"), k=10).collect()))
+    append_search_index(
+        _docs(spark, [(7, "spark window spark join"), (8, "join join spark")]),
+        path, batch_id=1,
+    )
+    assert (bm25, *answers(snap)[1:]) == before
+    assert answers(snap) == before
+    after = answers(path)
+    assert after != before and after[2][1] == 8  # n_docs
+
+
+def test_snapshot_fixes_its_own_as_of_batch(spark, tmp_path):
+    from docker_etl_spark.operators.search import search_bm25_topk
+    from docker_etl_spark.sources.stores import open_store
+
+    path = _search_store(spark, str(tmp_path / "asof"))
+    with pytest.raises(ValueError, match="as_of_batch"):
+        search_bm25_topk(spark, open_store(spark, path), ("spark",),
+                         as_of_batch=3)
+
+
+def test_batch_id_must_fit_the_declared_int(spark, tmp_path):
+    """``__batch_id`` is declared int: a batch id past it is refused
+    before anything is written, not read back as null."""
+    from docker_etl_spark.operators.search import delete_from_search_index
+
+    path = _search_store(spark, str(tmp_path / "bid"))
+    with pytest.raises(ValueError, match="does not fit"):
+        delete_from_search_index(spark, path, [1], batch_id=2**31)
+    assert not os.path.exists(path + "/deletes")
+
+
+def test_pruned_probe_without_committed_dictionary(spark, tmp_path):
+    """With the dictionary write uncommitted (the crash window), the
+    pruned probe prunes with (df, max_tf) aggregated from the postings
+    and still equals the exhaustive probe."""
+    from docker_etl_spark.operators.search import (
+        search_bm25_topk,
+        search_bm25_topk_pruned,
+    )
+
+    rows = []
+    for i in range(1, 41):
+        words = ["common", f"filler{i % 7}", "pad"]
+        if i % 10 == 0:
+            words += ["rare", "rare"]
+        rows.append((i, " ".join(words)))
+    path = _search_store(spark, str(tmp_path / "nodict"), rows=rows)
+    shutil.rmtree(path + "/dict")
+    diag = {}
+    got = [tuple(r) for r in search_bm25_topk_pruned(
+        spark, path, ("rare", "common"), k=3, _diag=diag).collect()]
+    ref = [tuple(r) for r in search_bm25_topk(
+        spark, path, ("rare", "common"), k=3).collect()]
+    assert diag["mode"] == "pruned", diag
+    assert got == ref and len(got) == 3
+
+
+def test_old_meta_without_schemas_is_refused(spark, tmp_path):
+    """A store whose meta records no data schemas (written before they
+    were declared) is refused with a rebuild hint, not read by
+    inference."""
+    from docker_etl_spark.operators.search import search_bm25_topk
+    from docker_etl_spark.sources.stores import write_sidecar_rows
+
+    path = _search_store(spark, str(tmp_path / "old"))
+    write_sidecar_rows(
+        spark, path + "/meta", [(2, 3, False)],
+        [("prefix_len", "int32"), ("min_token_len", "int32"),
+         ("positional", "bool")],
+    )
+    with pytest.raises(ValueError, match="rebuild"):
+        search_bm25_topk(spark, path, ("spark",))
+
+
+# ---------------------------------------------------------------------------
+# Guard: store reads declare their schema
+# ---------------------------------------------------------------------------
+
+_SCANNED = (
+    "docker_etl_spark/operators/search.py",
+    "docker_etl_spark/operators/similarity.py",
+    "docker_etl_spark/sources/stores.py",
+)
+
+#: (file, function) → why its parquet read may infer the schema
+_INFERRING_READS = {
+    ("docker_etl_spark/sources/stores.py", "read_sidecar_rows"):
+        "Spark arm of a bounded sidecar with no declared schema (meta, "
+        "horizon, stats, deletes, quantizer); local stores read pyarrow",
+    ("docker_etl_spark/sources/stores.py", "compact_partitioned_store"):
+        "the streaming ledger stores (digests, signatures, vectors) "
+        "declare no schema yet; the delta stores pass theirs",
+}
+
+
+def _receiver_chain(node):
+    """Attribute names and called method names from ``node`` down to
+    the chain's root."""
+    while isinstance(node, (ast.Attribute, ast.Call, ast.Subscript)):
+        if isinstance(node, ast.Attribute):
+            yield node.attr
+            node = node.value
+        elif isinstance(node, ast.Call):
+            node = node.func
+        else:
+            node = node.value
+
+
+def _parquet_reads(tree):
+    """(enclosing function, line) of every ``….parquet(…)`` call whose
+    receiver chain neither declares a schema nor writes."""
+    found = []
+
+    def visit(node, fn):
+        for child in ast.iter_child_nodes(node):
+            name = (
+                child.name
+                if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef))
+                and fn is None
+                else fn
+            )
+            if (
+                isinstance(child, ast.Call)
+                and isinstance(child.func, ast.Attribute)
+                and child.func.attr == "parquet"
+            ):
+                chain = set(_receiver_chain(child.func.value))
+                if not chain & {"schema", "write", "writeStream"}:
+                    found.append((name, child.lineno))
+            visit(child, name)
+
+    visit(tree, None)
+    return found
+
+
+def test_store_reads_declare_their_schema():
+    """Every parquet read in the store modules declares its schema
+    (``spark.read.schema(...).parquet(...)``), except the named
+    exceptions above — a bare read runs a schema-inference job per
+    call."""
+    root = Path(__file__).resolve().parents[1]
+    bad, used = [], set()
+    for rel in _SCANNED:
+        tree = ast.parse((root / rel).read_text())
+        for fn, line in _parquet_reads(tree):
+            if (rel, fn) in _INFERRING_READS:
+                used.add((rel, fn))
+            else:
+                bad.append(f"{rel}:{line} in {fn}")
+    assert not bad, "schema-inferring store reads: " + ", ".join(bad)
+    assert used == set(_INFERRING_READS), "stale allowlist entries"
+
+
+def test_guard_flags_a_bare_read():
+    src = (
+        "def probe(spark, p, s):\n"
+        "    a = spark.read.parquet(p)\n"
+        "    b = spark.read.schema(s).parquet(p)\n"
+        "    r = spark.read\n"
+        "    c = r.parquet(p)\n"
+        "    a.write.mode('overwrite').parquet(p)\n"
+    )
+    assert _parquet_reads(ast.parse(src)) == [("probe", 2), ("probe", 5)]

@@ -297,14 +297,21 @@ def _connected_components_two_phase(
     return labels.unionByName(roots).unionByName(singletons).distinct()
 
 
+#: The read schema (DDL) of a :func:`write_digest_store` ledger. The
+#: prefix is a string: inference types a store whose every prefix is
+#: all digits (``digest_prefix=09``) int, and string prefix pruning
+#: then fails with a cast error.
+DIGEST_SCHEMA = "content_md5 string, digest_prefix string"
+
+
 def write_digest_store(
     store: DataFrame,
     path: str,
-    digest_col: str = "content_md5",
     prefix_chars: int = 2,
     mode: str = "overwrite",
 ) -> None:
-    """Persist a content-digest store in its 100 TB layout:
+    """Persist the ``content_md5`` column of ``store`` as a
+    content-digest store (:data:`DIGEST_SCHEMA`) in its 100 TB layout:
     ``partitionBy`` on the digest's first ``prefix_chars`` hex chars
     (256 directories at the default). An ingest batch touches only
     the prefixes its own digests hash into, so the batch anti-join
@@ -319,8 +326,9 @@ def write_digest_store(
     the writer, not assumed."""
     from docker_etl_spark.sources.stores import store_writer_lock
 
-    out = store.withColumn(
-        "digest_prefix", F.substring(F.col(digest_col), 1, prefix_chars)
+    out = store.select(
+        "content_md5",
+        F.substring("content_md5", 1, prefix_chars).alias("digest_prefix"),
     )
     # Hash-repartition on the partition column first: without it every
     # input partition opens a writer in every prefix directory it
@@ -339,33 +347,12 @@ def write_digest_store(
 
 
 def load_digest_store(spark, path: str) -> DataFrame:
-    """Read a :func:`write_digest_store` layout with the partition
-    column PINNED to string. Spark infers partition-value types from
-    the directory names; a store whose live prefixes happen to all
-    parse numerically (e.g. a small or heavily-purged store left
-    with only ``digest_prefix=09``) silently comes back with an INT
-    partition column — string prefix pruning then fails with a cast
-    error and a rewrite would rename the directory (``09`` → ``9``).
-    Hex prefixes are strings; pin them."""
-    df = spark.read.parquet(path)
-    if (
-        "digest_prefix" in df.columns
-        and dict(df.dtypes)["digest_prefix"] != "string"
-    ):
-        fields = ", ".join(
-            f"{c} {'string' if c == 'digest_prefix' else t}"
-            for c, t in df.dtypes
-        )
-        df = spark.read.schema(fields).parquet(path)
-    return df
+    """Read a :func:`write_digest_store` layout with its declared
+    schema — no inference job."""
+    return spark.read.schema(DIGEST_SCHEMA).parquet(path)
 
 
-def delete_from_digest_store(
-    spark,
-    path: str,
-    digests,
-    digest_col: str = "content_md5",
-) -> int:
+def delete_from_digest_store(spark, path: str, digests) -> int:
     """Purge digests from a content-digest store — the takedown
     lifecycle's DEDUP-LEDGER leg (r12: a purge that tombstones the
     search/vector stores but leaves the digest ledger keeps
@@ -394,14 +381,14 @@ def delete_from_digest_store(
 
     if isinstance(digests, DataFrame):
         dl = digests.select(
-            F.col(digests.columns[0]).alias(digest_col)
+            F.col(digests.columns[0]).alias("content_md5")
         ).distinct()
     else:
         vals = list(digests)
         if not vals:
             raise ValueError("delete_from_digest_store: empty digests")
         dl = spark.createDataFrame(
-            [(v,) for v in vals], [digest_col]
+            [(v,) for v in vals], ["content_md5"]
         ).distinct()
     if not parquet_path_exists(spark, path):
         return 0
@@ -414,7 +401,7 @@ def delete_from_digest_store(
             return 0
         n_pfx = len(sample[0][0])
         dl = dl.withColumn(
-            "digest_prefix", F.substring(F.col(digest_col), 1, n_pfx)
+            "digest_prefix", F.substring("content_md5", 1, n_pfx)
         ).localCheckpoint()
         prefixes = sorted(
             r[0] for r in dl.select("digest_prefix").distinct().collect()
@@ -423,7 +410,7 @@ def delete_from_digest_store(
             F.col("digest_prefix").isin(prefixes)
         )
         kept = affected.join(
-            dl.select(digest_col), digest_col, "left_anti"
+            dl.select("content_md5"), "content_md5", "left_anti"
         )
         # eager barrier: the write below dynamically overwrites the
         # same partitions this plan reads (the r9 read-then-overwrite

@@ -1336,6 +1336,13 @@ def write_vector_store(
         ).partitionBy("tbl").parquet(path)
 
 
+def vector_store_schema(id_type: str, id_col: str = "vec_id") -> str:
+    """The read schema (DDL) of a :func:`write_vector_store` ledger:
+    the id (of type ``id_type``), the quantized vector and the bucket,
+    then the ``tbl`` partition column."""
+    return f"{id_col} {id_type}, vec array<bigint>, bkt bigint, tbl int"
+
+
 def incremental_embedding_dedup(
     new_vecs: DataFrame,
     vector_store: DataFrame,

@@ -760,6 +760,16 @@ def apply_signature_deletes(
     return res
 
 
+def signature_store_schema(
+    id_type: str, hash_fn: str = "md5", id_col: str = "doc_id"
+) -> str:
+    """The read schema (DDL) of a :func:`write_signature_store` ledger:
+    the id (of type ``id_type``), the signature (``hash_fn``'s element
+    type) and the band key, then the ``band`` partition column."""
+    el = "string" if hash_fn == "md5" else "bigint"
+    return f"{id_col} {id_type}, sig array<{el}>, bkey string, band int"
+
+
 def load_signature_store(
     spark, path: str, apply_deletes: bool = True
 ) -> DataFrame:
@@ -770,12 +780,16 @@ def load_signature_store(
     anti-joined out unless ``apply_deletes=False`` (the raw view —
     e.g. auditing what a purge will drop)."""
     df = spark.read.parquet(path)
-    if apply_deletes:
-        dels = read_signature_deletes(spark, path)
-        if dels is not None:
-            idc = dels.columns[0]
-            df = df.join(dels, idc, "left_anti")
-    return df
+    return drop_signature_deletes(spark, path, df) if apply_deletes else df
+
+
+def drop_signature_deletes(spark, path: str, store: DataFrame) -> DataFrame:
+    """``store``, read from the signature store at ``path``, without the
+    ids its pending tombstones name."""
+    dels = read_signature_deletes(spark, path)
+    if dels is None:
+        return store
+    return store.join(dels, dels.columns[0], "left_anti")
 
 
 def incremental_minhash_dedup(

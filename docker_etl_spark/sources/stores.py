@@ -1121,7 +1121,7 @@ def compact_partitioned_store(
     owner: str | None = None,
     transform=None,
     lock_path: str | None = None,
-    schema: StructType | None = None,
+    schema: StructType | str | None = None,
 ) -> dict:
     """Rewrite a partitioned parquet store into right-sized files,
     PRESERVING the partition directory layout (band=…/, tbl=…/,
@@ -1158,8 +1158,9 @@ def compact_partitioned_store(
     writer lease on THIS path instead of ``path`` — callers whose
     store root differs from the compacted subdirectory (the IVF-PQ
     codes/ layout) must serialize against writers locking the root.
-    ``schema``: the store's declared read schema (:func:`read_schema`);
-    None infers it — the streaming ledger stores declare none yet.
+    ``schema``: the store's declared read schema (:func:`read_schema`,
+    or a ledger's DDL); None infers it — only
+    ``apply_signature_deletes`` passes none.
     """
     local = _local_store(path, "compact_partitioned_store")
     tmp = local.rstrip("/") + ".__compact"

@@ -22,12 +22,55 @@ Event-time columns must be TIMESTAMP (LTZ): Spark rejects watermarks
 on TIMESTAMP_NTZ (EVENT_TIME_IS_NOT_ON_TIMESTAMP_TYPE). Cast NTZ
 event time with ``col.cast("timestamp")`` (session timezone applies —
 the engine pins UTC).
+
+LEDGER SINKS. ``minhash_dedup_stream``, ``embedding_dedup_stream``,
+``cdc_chunk_dedup_stream`` and ``curation_stream`` are one
+foreachBatch sink, :func:`_ledger_sink`, over one or more dedup
+stages — the reference's incremental ledger that each batch is
+checked against and then appended to (etl/user_reports_aggregate.py:
+17-53). Per micro-batch:
+
+1. pin the batch (a lazy local checkpoint: the first job that reads
+   it materializes it, every later one reads those rows);
+2. read each stage's ledger with its declared schema — no inference
+   job; only a genuinely absent ledger reads as an empty frame of
+   that schema (a failing read fails the batch, which the streaming
+   query retries, instead of admitting duplicates);
+3. probe it; a stage's survivors, pinned, are the next stage's batch;
+4. write the last stage's survivors IDEMPOTENTLY under
+   ``out_path/__batch_id=N`` (:func:`_write_batch`): a redelivered
+   batch replaces its own partition instead of duplicating rows;
+5. append each stage's ledger rows, the last stage's first;
+6. every ``compact_every`` batches, compact each ledger with
+   :func:`~docker_etl_spark.sources.stores.compact_partitioned_store`
+   and the declared schema, keeping its partition layout so the
+   pruned probe plans are unchanged.
+
+State lives in the ledgers, not in executor memory: restarts resume
+from disk, and T3's state eviction is traded for the ledger's
+O(corpus) disk. The appends are not atomic with the survivor write;
+a redelivered batch may append the same rows twice, which is
+results-neutral (every probe is an anti-join or deduplicates its
+candidate pairs) and reclaimed by a deduplicating compaction. The
+FIRST stage's ledger lands LAST, so a crash anywhere mid-batch heals
+under redelivery: in ``curation_stream``, if the signatures landed
+but the digests did not, the redelivered batch exact-passes, every
+doc then matches its own stored signature and the empty survivor
+write touches no partition; after full completion the redelivered
+batch exact-drops everything.
+
+Near-dup stages compare each doc with earlier SURVIVORS (a ledger
+holds survivors only) and with every lower-id doc of its own batch.
+Near-dup similarity is not transitive, so a doc whose only
+above-threshold twin was dropped in an EARLIER batch survives here,
+while a one-shot run over all batches flags it.
 """
 
 from __future__ import annotations
 
 import logging
 from collections.abc import Callable, Sequence
+from typing import NamedTuple
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -281,6 +324,133 @@ def corpus_filter_stream(
     )
 
 
+class _Ledger(NamedTuple):
+    """One dedup stage of :func:`_ledger_sink`: what differs between
+    the ledger sinks."""
+
+    path: str
+    #: batch → the ledger's declared read schema (DDL), typed from it
+    schema: Callable
+    #: (batch, ledger) → (survivors, a function from the pinned
+    #: survivors to the rows they append to the ledger)
+    probe: Callable
+    append: Callable  # ledger rows → appended to ``path``
+    partition_cols: tuple[str, ...]
+    transform: Callable | None = None  # the compaction fold
+
+
+def _ledger_sink(
+    out_path: str, compact_every: int | None, *stages: _Ledger
+) -> Callable[[DataFrame, int], None]:
+    """The foreachBatch sink of every dedup stream: the LEDGER SINKS
+    steps of the module docstring over ``stages``, in order."""
+    from docker_etl_spark.sources.stores import (
+        compact_partitioned_store,
+        parquet_path_exists,
+    )
+
+    def _sink(batch_df: DataFrame, batch_id: int) -> None:
+        spark = batch_df.sparkSession
+        batch = batch_df.localCheckpoint(eager=False)
+        done = []
+        for st in stages:
+            schema = st.schema(batch)
+            ledger = (
+                spark.read.schema(schema).parquet(st.path)
+                if parquet_path_exists(spark, st.path)
+                else spark.createDataFrame([], schema)
+            )
+            survivors, rows = st.probe(batch, ledger)
+            batch = survivors.localCheckpoint(eager=True)
+            done.append((st, schema, rows(batch)))
+        _write_batch(batch, out_path, batch_id)
+        for st, _schema, rows in reversed(done):
+            st.append(rows)
+        if compact_every and (batch_id + 1) % compact_every == 0:
+            for st, schema, _rows in reversed(done):
+                compact_partitioned_store(
+                    spark, st.path, st.partition_cols,
+                    transform=st.transform, schema=schema,
+                )
+
+    return _sink
+
+
+def _write_batch(df: DataFrame, path: str, batch_id: int) -> None:
+    """Write ``df`` as the partition ``path/__batch_id=N``, replacing
+    that partition only: dynamic overwrite, set on the writer, not
+    assumed from the session (under Spark's default STATIC mode the
+    same write would delete every earlier batch's partition)."""
+    (
+        df.withColumn("__batch_id", F.lit(batch_id))
+        .write.option("partitionOverwriteMode", "dynamic")
+        .mode("overwrite")
+        .partitionBy("__batch_id")
+        .parquet(path)
+    )
+
+
+def _minhash_ledger(
+    path, id_col, text_col, shingle_n, num_perm, bands, est_threshold,
+    hash_fn,
+) -> _Ledger:
+    """The signature-store stage of :func:`minhash_dedup_stream` and
+    :func:`curation_stream`."""
+    from docker_etl_spark.operators.text_dedup import (
+        drop_signature_deletes,
+        incremental_minhash_dedup,
+        signature_store_schema,
+        write_signature_store,
+    )
+
+    def probe(batch, ledger):
+        flags, sigs = incremental_minhash_dedup(
+            batch, drop_signature_deletes(batch.sparkSession, path, ledger),
+            id_col=id_col, text_col=text_col, shingle_n=shingle_n,
+            num_perm=num_perm, bands=bands, est_threshold=est_threshold,
+            hash_fn=hash_fn, store_exploded=True, return_sigs=True,
+        )
+        keep = flags.filter(~F.col("is_dup")).select(id_col)
+        # the survivors' signatures come from the pass that flagged
+        # them — never a second shingle + hash pass over their text
+        return batch.join(keep, id_col, "left_semi"), lambda s: sigs.join(
+            s.select(id_col), id_col, "left_semi"
+        )
+
+    return _Ledger(
+        path,
+        lambda b: signature_store_schema(
+            b.schema[id_col].dataType.simpleString(), hash_fn, id_col
+        ),
+        probe,
+        lambda rows: write_signature_store(
+            rows, path, bands=bands, num_perm=num_perm, id_col=id_col,
+            mode="append",
+        ),
+        ("band",),
+    )
+
+
+def _digest_ledger(path, prefix_chars, probe, transform=None) -> _Ledger:
+    """The digest-store stage of :func:`cdc_chunk_dedup_stream` and
+    :func:`curation_stream`; ``probe`` picks what is digested."""
+    from docker_etl_spark.operators.dedupe import (
+        DIGEST_SCHEMA,
+        write_digest_store,
+    )
+
+    return _Ledger(
+        path,
+        lambda _b: DIGEST_SCHEMA,
+        probe,
+        lambda rows: write_digest_store(
+            rows, path, prefix_chars=prefix_chars, mode="append"
+        ),
+        ("digest_prefix",),
+        transform,
+    )
+
+
 def minhash_dedup_stream(
     store_path: str,
     out_path: str,
@@ -292,121 +462,30 @@ def minhash_dedup_stream(
     est_threshold: float = 0.5,
     hash_fn: str = "md5",
     compact_every: int | None = None,
-    _assume_pinned: bool = False,
 ) -> Callable[[DataFrame, int], None]:
-    """foreachBatch sink running the flagship LLM-dedup operator
-    continuously: each micro-batch is near-dup-gated against the
-    CUMULATIVE signature store (every earlier batch), survivors land
-    in ``out_path`` and their signatures append to the store in its
-    partitioned layout — the T3/T4 pattern applied to
-    ``incremental_minhash_dedup`` (a crawl-shard ingestion front that
-    never re-reads or re-shingles ingested text).
-
-    Semantics: each doc is compared against all earlier SURVIVORS
-    (plus all earlier docs within its own batch) — the store holds
-    survivors' signatures only. On the planted fixture that equals
-    one all-at-once ``incremental_minhash_dedup`` run (pinned by
-    ``tests/test_streaming.py::test_minhash_dedup_stream_matches_batch``),
-    but near-dup similarity is not transitive, so results are
-    batch-boundary-dependent in one corner: a doc whose only
-    >=threshold twin was itself dropped as a duplicate in an EARLIER
-    batch survives here, while the one-shot run's in-batch arm (which
-    also compares against dropped docs) flags it.
-
-    State lives in the store parquet, not executor memory: restarts
-    resume from the on-disk signatures, and the watermark problem of
-    unbounded dedup state never arises (T3's eviction concern is
-    traded for the store's O(corpus) disk — the trade the reference's
-    ledger tables make, etl/user_reports_aggregate.py:17-53).
-
-    Delivery contract: the survivors write is IDEMPOTENT per batch —
-    rows land under ``out_path/__batch_id=N`` via dynamic partition
-    overwrite, so a redelivered batch replaces its own partition
-    instead of duplicating rows. The dynamic mode is set PER WRITE
-    (``.option("partitionOverwriteMode", "dynamic")``), not assumed
-    from the session: under Spark's default STATIC mode the same
-    write would delete every earlier batch's partition, so the
-    contract must not depend on session config. The store append after it is NOT
-    atomic with that write; on redelivery the same signatures may
-    append twice, which is results-neutral (the candidate joins
-    dropDuplicates on (new_id, store_id), so duplicate store rows
-    change no decision) and reclaimed by compaction. ``compact_every``
-    runs :func:`~docker_etl_spark.sources.stores.compact_partitioned_store`
-    on the signature store every N batches (streaming appends leave
-    one file per batch per band — exactly the fragmentation compaction
-    exists for), preserving the band partition layout so the
-    partition-pruned probe plans are unchanged.
+    """Ledger sink running the flagship LLM-dedup operator
+    continuously: each micro-batch is near-dup-gated by
+    ``incremental_minhash_dedup`` against the cumulative signature
+    store (pending tombstones excluded), and the survivors'
+    signatures append to it in its band-partitioned layout — a
+    crawl-shard ingestion front that never re-reads or re-shingles
+    ingested text. On the planted fixture the survivors equal one
+    all-at-once run (pinned by
+    ``tests/test_streaming.py::test_minhash_dedup_stream_matches_batch``);
+    the batch-boundary corner is the module docstring's.
+    ``compact_every`` folds the store's per-batch files every N
+    batches and keeps every row.
 
     Wrap with :func:`foreach_batch_with_dead_letter` for T4 capture.
     """
-    from docker_etl_spark.operators.text_dedup import (
-        incremental_minhash_dedup,
-        load_signature_store,
-        write_signature_store,
+    return _ledger_sink(
+        out_path,
+        compact_every,
+        _minhash_ledger(
+            store_path, id_col, text_col, shingle_n, num_perm, bands,
+            est_threshold, hash_fn,
+        ),
     )
-    from docker_etl_spark.sources.stores import (
-        compact_partitioned_store,
-        parquet_path_exists,
-    )
-
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        # ``_assume_pinned`` (internal; curation_stream): the caller
-        # already eagerly checkpointed this exact batch — re-pinning
-        # it here would materialize the same rows a second time per
-        # micro-batch for no added determinism.
-        if not _assume_pinned:
-            batch_df = batch_df.localCheckpoint(eager=True)
-        # Narrow first-batch test (ADVICE r5): only a genuinely absent
-        # store means "empty"; a transient/corrupt read error must
-        # propagate and fail the batch (the streaming query retries)
-        # instead of silently admitting duplicates.
-        if parquet_path_exists(spark, store_path):
-            store = load_signature_store(spark, store_path)
-            exploded = True
-        else:  # first batch: no store yet
-            el = "string" if hash_fn == "md5" else "bigint"
-            store = spark.createDataFrame(
-                [], f"{id_col} long, sig array<{el}>"
-            )
-            exploded = False
-        flags, batch_sigs = incremental_minhash_dedup(
-            batch_df,
-            store,
-            id_col=id_col,
-            text_col=text_col,
-            shingle_n=shingle_n,
-            num_perm=num_perm,
-            bands=bands,
-            est_threshold=est_threshold,
-            hash_fn=hash_fn,
-            store_exploded=exploded,
-            return_sigs=True,
-        )
-        survivors = batch_df.join(
-            flags.filter(~F.col("is_dup")).select(id_col), id_col, "left_semi"
-        ).localCheckpoint(eager=True)
-        (
-            survivors.withColumn("__batch_id", F.lit(batch_id))
-            .write.option("partitionOverwriteMode", "dynamic")
-            .mode("overwrite")
-            .partitionBy("__batch_id")
-            .parquet(out_path)
-        )
-        # survivors' signatures come from the SAME pass that flagged
-        # them (the lazy sig checkpoint) — never a second shingle +
-        # hash pass over the survivors' text
-        new_sigs = batch_sigs.join(
-            survivors.select(id_col), id_col, "left_semi"
-        )
-        write_signature_store(
-            new_sigs, store_path, bands=bands, num_perm=num_perm,
-            id_col=id_col, mode="append",
-        )
-        if compact_every and (batch_id + 1) % compact_every == 0:
-            compact_partitioned_store(spark, store_path, ("band",))
-
-    return _sink
 
 
 def embedding_dedup_stream(
@@ -422,83 +501,52 @@ def embedding_dedup_stream(
     quant_scale: int = 1000,
     compact_every: int | None = None,
 ) -> Callable[[DataFrame, int], None]:
-    """foreachBatch sink for continuous EMBEDDING dedup — the
-    modality twin of :func:`minhash_dedup_stream`: each micro-batch
-    of vectors is near-dup-gated against the cumulative vector store
-    (sign-LSH bucket joins + exact-int cosine), survivors land in
-    ``out_path`` and their quantized vectors append to the store in
-    ``write_vector_store``'s partitioned layout. Same state story
-    (on-disk store, no executor-memory dedup state, restart-safe),
-    same delivery contract (idempotent per-batch out partition;
-    results-neutral store re-append on redelivery), same
-    batch-boundary corner (docs are gated against earlier SURVIVORS
-    only — see :func:`minhash_dedup_stream`), and the same
-    ``compact_every`` maintenance hook (tbl-partition-preserving).
-    """
+    """Ledger sink for continuous EMBEDDING dedup — the modality twin
+    of :func:`minhash_dedup_stream`: each micro-batch of vectors,
+    quantized to ``floor(x * quant_scale)``, is near-dup-gated against
+    the cumulative vector store (sign-LSH bucket joins + exact-int
+    cosine), and the survivors' quantized vectors append to it in
+    ``write_vector_store``'s tbl-partitioned layout."""
     from docker_etl_spark.operators.similarity import (
         incremental_embedding_dedup,
+        vector_store_schema,
         write_vector_store,
     )
-    from docker_etl_spark.sources.stores import (
-        compact_partitioned_store,
-        parquet_path_exists,
+
+    quant = F.transform(
+        vec_col,
+        lambda x: F.floor(x.cast("double") * quant_scale).cast("bigint"),
     )
 
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        batch_df = batch_df.localCheckpoint(eager=True)
-        quant = F.transform(
-            vec_col,
-            lambda x: F.floor(x.cast("double") * quant_scale).cast("bigint"),
-        )
-        batch_q = batch_df.select(F.col(id_col), quant.alias("vec"))
-        # Narrow first-batch test — see minhash_dedup_stream.
-        if parquet_path_exists(spark, store_path):
-            store = spark.read.parquet(store_path)
-            exploded = True
-        else:  # first batch: no store yet
-            store = spark.createDataFrame(
-                [], f"{id_col} long, vec array<bigint>"
-            )
-            exploded = False
+    def probe(batch, ledger):
         flags = incremental_embedding_dedup(
-            batch_q,
-            store,
-            dim=dim,
-            threshold=threshold,
-            n_planes=n_planes,
-            n_tables=n_tables,
-            seed=seed,
-            id_col=id_col,
-            vec_col="vec",
-            store_exploded=exploded,
+            batch.select(F.col(id_col), quant.alias("vec")), ledger,
+            dim=dim, threshold=threshold, n_planes=n_planes,
+            n_tables=n_tables, seed=seed, id_col=id_col, vec_col="vec",
+            store_exploded=True,
         )
         keep = flags.filter(~F.col("is_dup")).select(id_col)
-        survivors = batch_df.join(keep, id_col, "left_semi").localCheckpoint(
-            eager=True
+        return batch.join(keep, id_col, "left_semi"), lambda s: s.select(
+            F.col(id_col), quant.alias("vec")
         )
-        (
-            survivors.withColumn("__batch_id", F.lit(batch_id))
-            .write.option("partitionOverwriteMode", "dynamic")
-            .mode("overwrite")
-            .partitionBy("__batch_id")
-            .parquet(out_path)
-        )
-        write_vector_store(
-            survivors.select(F.col(id_col), quant.alias("vec")),
-            store_path,
-            dim=dim,
-            id_col=id_col,
-            vec_col="vec",
-            n_planes=n_planes,
-            n_tables=n_tables,
-            seed=seed,
-            mode="append",
-        )
-        if compact_every and (batch_id + 1) % compact_every == 0:
-            compact_partitioned_store(spark, store_path, ("tbl",))
 
-    return _sink
+    return _ledger_sink(
+        out_path,
+        compact_every,
+        _Ledger(
+            store_path,
+            lambda b: vector_store_schema(
+                b.schema[id_col].dataType.simpleString(), id_col
+            ),
+            probe,
+            lambda rows: write_vector_store(
+                rows, store_path, dim=dim, id_col=id_col, vec_col="vec",
+                n_planes=n_planes, n_tables=n_tables, seed=seed,
+                mode="append",
+            ),
+            ("tbl",),
+        ),
+    )
 
 
 def psi_gate_stream(
@@ -529,11 +577,10 @@ def psi_gate_stream(
     twin-pinned in ``tests/test_streaming.py``.
 
     Delivery contract: both writes are idempotent per batch
-    (dynamic partition overwrite under ``__batch_id=N``), the same
-    recipe as :func:`minhash_dedup_stream`. The baseline is
-    READ-ONLY state (groups x n_buckets rows, broadcast-sized);
-    unlike the dedup stores nothing appends, so there is no
-    redelivery window at all.
+    (dynamic partition overwrite under ``__batch_id=N``). The
+    baseline is READ-ONLY state (groups x n_buckets rows,
+    broadcast-sized, read with the group type of the batch); nothing
+    appends, so there is no redelivery window at all.
     """
     from docker_etl_spark.operators.profiling import (
         psi_from_counts,
@@ -543,7 +590,10 @@ def psi_gate_stream(
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
         batch_df = batch_df.localCheckpoint(eager=True)
-        base = spark.read.parquet(baseline_path)
+        gtype = batch_df.schema[group_col].dataType.simpleString()
+        base = spark.read.schema(
+            f"{group_col} {gtype}, __bkt long, __n long"
+        ).parquet(baseline_path)
         cur = value_histogram(
             batch_df, group_col, value_col, bucket_width, n_buckets
         )
@@ -582,16 +632,14 @@ def psi_gate_stream(
         )
         verdict = psi_from_counts(f, group_col, n_buckets, psi_threshold)
         bad = verdict.filter(F.col("drifted")).select(group_col)
-        admitted = batch_df.join(F.broadcast(bad), group_col, "left_anti")
-        quarantined = batch_df.join(F.broadcast(bad), group_col, "left_semi")
-        for frame, path in ((admitted, out_path), (quarantined, quarantine_path)):
-            (
-                frame.withColumn("__batch_id", F.lit(batch_id))
-                .write.option("partitionOverwriteMode", "dynamic")
-                .mode("overwrite")
-                .partitionBy("__batch_id")
-                .parquet(path)
-            )
+        _write_batch(
+            batch_df.join(F.broadcast(bad), group_col, "left_anti"),
+            out_path, batch_id,
+        )
+        _write_batch(
+            batch_df.join(F.broadcast(bad), group_col, "left_semi"),
+            quarantine_path, batch_id,
+        )
 
     return _sink
 
@@ -604,71 +652,37 @@ def cdc_chunk_dedup_stream(
     divisor: int = 8,
     prefix_chars: int = 2,
 ) -> Callable[[DataFrame, int], None]:
-    """foreachBatch sink running chunk-level exact dedup
-    continuously: each micro-batch's documents are cut into
-    content-defined chunks (:func:`~docker_etl_spark.operators.corpus.
-    cdc_chunks` — boundaries survive edits, so a re-crawled page
-    re-delivers mostly already-seen chunk digests), the chunks are
-    gated against the CUMULATIVE prefix-partitioned digest store,
-    and only genuinely new chunks land in ``out_path`` — the
-    storage-dedup ingestion front (LBFS applied to a text corpus).
-
-    Because exact digest dedup IS transitive, the union of per-batch
-    survivors equals one chunk-level dedup over the whole corpus —
-    no batch-boundary corner at all (unlike the near-dup loops; the
-    twin test pins strict equality).
-
-    Same delivery contract as :func:`minhash_dedup_stream`:
-    survivors write idempotently under ``out_path/__batch_id=N``
-    (dynamic partition overwrite); the digest append after it may
-    double-append on redelivery, which is results-neutral (the gate
-    is an anti-join — duplicate store digests change no decision).
-    """
+    """Ledger sink running chunk-level exact dedup continuously: each
+    micro-batch's documents are cut into content-defined chunks
+    (:func:`~docker_etl_spark.operators.corpus.cdc_chunks` —
+    boundaries survive edits, so a re-crawled page re-delivers mostly
+    already-seen chunk digests), the chunks are gated against the
+    cumulative prefix-partitioned digest store, and only genuinely
+    new chunks land in ``out_path`` — the storage-dedup ingestion
+    front (LBFS applied to a text corpus). Exact digest dedup is
+    transitive, so the twin test pins strict equality with one
+    chunk-level dedup over the whole corpus."""
     from docker_etl_spark.operators.corpus import cdc_chunks
-    from docker_etl_spark.operators.dedupe import (
-        incremental_content_dedup,
-        load_digest_store,
-        write_digest_store,
-    )
-    from docker_etl_spark.sources.stores import parquet_path_exists
+    from docker_etl_spark.operators.dedupe import incremental_content_dedup
 
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        batch_df = batch_df.localCheckpoint(eager=True)
+    def probe(batch, ledger):
         ch = cdc_chunks(
-            batch_df, id_col=id_col, text_col=text_col, divisor=divisor
+            batch, id_col=id_col, text_col=text_col, divisor=divisor
         ).withColumn(
             # unique orderable id per chunk row for the intra-batch
             # min-id survivor rule
             "chunk_id",
             F.col(id_col) * 1000000 + F.col("chunk_idx"),
         )
-        if parquet_path_exists(spark, store_path):
-            store = load_digest_store(spark, store_path)
-        else:
-            store = spark.createDataFrame([], "content_md5 string")
         survivors = incremental_content_dedup(
-            ch,
-            store,
-            id_col="chunk_id",
-            text_col="chunk",
+            ch, ledger, id_col="chunk_id", text_col="chunk",
             prefix_chars=prefix_chars,
-        ).localCheckpoint(eager=True)
-        (
-            survivors.withColumn("__batch_id", F.lit(batch_id))
-            .write.option("partitionOverwriteMode", "dynamic")
-            .mode("overwrite")
-            .partitionBy("__batch_id")
-            .parquet(out_path)
         )
-        write_digest_store(
-            survivors.select("content_md5"),
-            store_path,
-            prefix_chars=prefix_chars,
-            mode="append",
-        )
+        return survivors, lambda s: s
 
-    return _sink
+    return _ledger_sink(
+        out_path, None, _digest_ledger(store_path, prefix_chars, probe)
+    )
 
 
 def cms_sketch_stream(
@@ -1014,45 +1028,25 @@ def curation_stream(
     compact_every: int | None = None,
 ) -> Callable[[DataFrame, int], None]:
     """The FULL curation pipeline (cp02's quality → exact dedup →
-    near-dup dedup) as ONE foreachBatch sink — the composition a
-    production ingest actually runs, built from the existing pieces
-    with no new logic:
+    near-dup dedup) as ONE ledger sink of two stages over one pinned
+    batch:
 
-    1. quality gate — Gopher rules as stateless Column expressions
-       (docs failing quality never touch either store);
-    2. exact dedup — ``incremental_content_dedup`` against the
-       CUMULATIVE digest store (min id per content digest in-batch,
-       anti-join on stored digests, prefix-partition-pruned);
-    3. near-dup dedup + survivor delivery — delegated verbatim to
-       :func:`minhash_dedup_stream`'s sink (signature-store probe,
-       survivors land idempotently under ``out_path/__batch_id=N``,
-       new signatures append, optional store compaction);
-    4. the exact-stage survivors' digests append to the digest store
-       LAST.
+    1. exact dedup — the Gopher quality gate (docs failing it never
+       touch either store), then ``incremental_content_dedup``
+       against the cumulative digest store;
+    2. near-dup dedup — :func:`minhash_dedup_stream`'s stage against
+       the signature store; its survivors land in ``out_path``.
 
-    Write ordering is the crash story: digests land only after the
-    survivor delivery, so a crash anywhere mid-batch is healed by
-    redelivery — if the near-dup stage completed but digests didn't,
-    the redelivered batch exact-passes, then every doc matches its
-    own stored signature (est 1.0) and the empty survivor write
-    touches no partitions, leaving the first delivery's output
-    intact; if nothing completed, the batch simply replays. A
-    redelivery after full completion exact-drops everything
-    immediately. Duplicate digest/signature rows from partial
-    redeliveries are results-neutral (both probes are
-    anti-join/distinct-shaped); ``compact_every`` folds BOTH stores'
-    file counts on schedule, and the digest fold also DEDUPLICATES
-    rows (a ``dropDuplicates`` transform — safe because the digest
-    probe is a pure anti-join on ``content_md5``). Signature-store
-    duplicate rows persist across compaction (its fold preserves
-    rows); they cost bytes, never results (r9 ADVICE).
-
-    Batch-boundary semantics are :func:`minhash_dedup_stream`'s:
-    cross-batch near-dup comparisons see earlier SURVIVORS only,
-    in-batch comparisons see all earlier-id batch docs — equal to
-    the one-shot cp02 run whenever duplicate clusters don't chain
-    across dropped members (the non-transitivity corner its
-    docstring names).
+    The digests of every exact-stage survivor (near-dup-dropped ones
+    too: their content was ingested) append LAST, after the signature
+    append — the module docstring's crash order. ``compact_every``
+    compacts both stores; the digest fold also drops duplicate rows
+    (safe: the digest probe is a pure anti-join on ``content_md5``),
+    while the signature fold keeps its rows — partial redeliveries'
+    duplicates there cost bytes, never results. Batch-boundary
+    semantics are the module docstring's near-dup ones: equal to the
+    one-shot cp02 run whenever duplicate clusters don't chain across
+    dropped members.
 
     ``digest_prefix_chars`` sets the digest store's directory
     granularity (16^n partitions): the default 2 (256 directories)
@@ -1063,52 +1057,33 @@ def curation_stream(
     at 256 dirs vs ~0.5 s at 16).
     """
     from docker_etl_spark.operators.corpus import gopher_quality
-    from docker_etl_spark.operators.dedupe import (
-        incremental_content_dedup,
-        load_digest_store,
-        write_digest_store,
-    )
-    from docker_etl_spark.sources.stores import (
-        compact_partitioned_store,
-        parquet_path_exists,
-    )
+    from docker_etl_spark.operators.dedupe import incremental_content_dedup
 
-    inner = minhash_dedup_stream(
-        sig_store_path, out_path, id_col=id_col, text_col=text_col,
-        shingle_n=shingle_n, num_perm=num_perm, bands=bands,
-        est_threshold=est_threshold, hash_fn=hash_fn,
-        compact_every=compact_every,
-        # the exact-stage survivors below are already eagerly
-        # checkpointed; the inner sink must not re-materialize them
-        _assume_pinned=True,
-    )
-
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        kept = batch_df.filter(
+    def exact(batch, ledger):
+        kept = batch.filter(
             gopher_quality(
                 F.col(text_col),
                 min_words=min_words,
                 min_stopwords=min_stopwords,
             )["keep"]
         )
-        if parquet_path_exists(spark, digest_store_path):
-            dstore = spark.read.parquet(digest_store_path)
-        else:  # first batch: no digest store yet
-            dstore = spark.createDataFrame([], "content_md5 string")
         survivors = incremental_content_dedup(
-            kept, dstore, id_col=id_col, text_col=text_col,
+            kept, ledger, id_col=id_col, text_col=text_col,
             prefix_chars=digest_prefix_chars,
-        ).localCheckpoint(eager=True)
-        inner(survivors.drop("content_md5"), batch_id)
-        write_digest_store(
-            survivors.select("content_md5"), digest_store_path,
-            prefix_chars=digest_prefix_chars, mode="append",
         )
-        if compact_every and (batch_id + 1) % compact_every == 0:
-            compact_partitioned_store(
-                spark, digest_store_path, ("digest_prefix",),
-                transform=lambda df: df.dropDuplicates(),
-            )
+        return survivors.drop("content_md5"), lambda s: s.select(
+            F.md5(F.col(text_col)).alias("content_md5")
+        )
 
-    return _sink
+    return _ledger_sink(
+        out_path,
+        compact_every,
+        _digest_ledger(
+            digest_store_path, digest_prefix_chars, exact,
+            transform=lambda df: df.dropDuplicates(),
+        ),
+        _minhash_ledger(
+            sig_store_path, id_col, text_col, shingle_n, num_perm, bands,
+            est_threshold, hash_fn,
+        ),
+    )

@@ -312,9 +312,12 @@ def test_old_meta_without_schemas_is_refused(spark, tmp_path):
 # ---------------------------------------------------------------------------
 
 _SCANNED = (
+    "docker_etl_spark/operators/dedupe.py",
     "docker_etl_spark/operators/search.py",
     "docker_etl_spark/operators/similarity.py",
+    "docker_etl_spark/operators/text_dedup.py",
     "docker_etl_spark/sources/stores.py",
+    "docker_etl_spark/streaming/core.py",
 )
 
 #: (file, function) → why its parquet read may infer the schema
@@ -323,8 +326,15 @@ _INFERRING_READS = {
         "Spark arm of a bounded sidecar with no declared schema (meta, "
         "horizon, stats, deletes, quantizer); local stores read pyarrow",
     ("docker_etl_spark/sources/stores.py", "compact_partitioned_store"):
-        "the streaming ledger stores (digests, signatures, vectors) "
-        "declare no schema yet; the delta stores pass theirs",
+        "apply_signature_deletes compacts the signature store and its "
+        "tombstone sidecar without a schema; every other caller passes one",
+    ("docker_etl_spark/operators/text_dedup.py", "load_signature_store"):
+        "public reader with no batch to type the id column from; the "
+        "streaming ledger sink reads with signature_store_schema",
+    ("docker_etl_spark/operators/text_dedup.py",
+     "_read_signature_deletes_raw"):
+        "the tombstone sidecar's id column is named by the deleting "
+        "caller; it is read only while a purge is pending",
 }
 
 

@@ -476,29 +476,36 @@ def incremental_content_dedup(
     PARTITIONED-STORE FAST PATH: when ``store`` carries a
     ``digest_prefix`` column (the :func:`write_digest_store` layout),
     the batch's distinct prefixes — at most ``16^prefix_chars``
-    values, collected as one bounded driver action on the (small by
-    definition) checkpointed batch — are pushed as a static IN
-    predicate on the store's partition column, so the scan reads only
-    the matching directories (plan-pinned in
+    values, collected in one single-task job over the (small by
+    definition) batch, which also materializes the lazy local
+    checkpoint pinning it — are pushed as a static IN predicate on the
+    store's partition column, so the scan reads only the matching
+    directories (plan-pinned in
     ``tests/test_physical_plans.py::test_digest_store_partition_pruning``).
     The store probe then runs large-side-probe/small-side-build: the
     pruned store is semi-joined against the broadcast batch digests,
     and only those (bounded) matches feed the final anti-join.
     """
     d = new_docs.withColumn(digest_col, F.md5(F.col(text_col)))
+    fast = "digest_prefix" in store.columns
+    if fast:
+        # the prefixes and the probe must see the same batch rows
+        d = d.localCheckpoint(eager=False)
     w = Window.partitionBy(digest_col).orderBy(id_col)
     batch_unique = (
         d.withColumn("__rn", F.row_number().over(w))
         .filter(F.col("__rn") == 1)
         .drop("__rn")
     )
-    if "digest_prefix" in store.columns:
-        batch_unique = batch_unique.localCheckpoint(eager=True)
+    if fast:
         prefixes = sorted(
             r[0]
-            for r in batch_unique.select(
+            for r in d.select(
                 F.substring(F.col(digest_col), 1, prefix_chars).alias("p")
             )
+            # one partition: the distinct needs no shuffle, so the
+            # collect is one job
+            .coalesce(1)
             .distinct()
             .collect()
         )

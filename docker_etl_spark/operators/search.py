@@ -428,8 +428,8 @@ def delete_from_search_index(
 
     MECHANICS (Lucene's per-doc deletes applied at merge): the ids
     land as a bounded ``{path}/deletes`` sidecar delta under this
-    ``batch_id``; EVERY probe immediately anti-joins its pruned
-    postings scan against the sidecar (ids only — never a corpus
+    ``batch_id``; EVERY probe immediately filters the sidecar's ids
+    out of its pruned postings scan (ids only — never a corpus
     read), and the next :func:`compact_search_index` whose horizon
     covers ``batch_id`` physically drops the rows, RE-DERIVES the
     stats and dictionary base from the surviving postings (df and
@@ -449,8 +449,8 @@ def delete_from_search_index(
     partition); a ``batch_id`` at or below the compaction horizon is
     REJECTED — those tombstones were already applied physically and
     cleared, so a redelivered copy is pure drag (every probe
-    anti-joins it against rows that no longer exist until the next
-    compaction clears it again), and rejecting it keeps the sidecar's
+    filters rows that no longer exist until the next compaction
+    clears it again), and rejecting it keeps the sidecar's
     meaning sharp: every pending tombstone names a document that is
     still physically present. Deleting an id the store never
     ingested is legal and harmless (no existence scan — that would
@@ -927,7 +927,7 @@ def _pruned_postings(
     """The live postings of ``terms`` — the scan every term-keyed
     probe shares: a static ``__pfx`` IN partition filter (directory
     pruning), a term IN pushed filter, the snapshot's batches and its
-    tombstone anti-join."""
+    tombstone filter."""
     terms = sorted(set(terms))
     p = snap.read(
         "postings",

@@ -2465,8 +2465,8 @@ def delete_from_ivfpq_store(
     store's :func:`~docker_etl_spark.operators.search.
     delete_from_search_index`, symmetrically): ids land as a bounded
     ``{path}/deletes`` sidecar delta; every
-    :func:`load_ivfpq_store`-based probe immediately anti-joins its
-    codes frame against it (ids only, applied after cell pruning);
+    :func:`load_ivfpq_store`-based probe immediately filters its ids
+    out of its codes frame (applied after cell pruning);
     the next :func:`compact_ivfpq_store` whose horizon covers
     ``batch_id`` physically drops the code rows and clears the
     applied tombstones. Writer-lease-guarded, idempotent under
@@ -2530,7 +2530,7 @@ def load_ivfpq_store(
     ]
     index = codes.select(*id_name, "__cell", "pq_code")
     # tombstone filter (every probe sees only live vectors; the
-    # bounded anti-join rides ABOVE the cell-pruned scan, so
+    # literal id filter rides ABOVE the cell-pruned scan, so
     # partition pruning is unchanged). ``apply_deletes=False`` is the
     # ingest path's raw view — deleted ids stay "seen" for the
     # append-only id contract.

@@ -601,162 +601,119 @@ def write_signature_store(
         ).partitionBy("band").parquet(path)
 
 
-def _signature_deletes_path(path: str) -> str:
-    # SIBLING, not a subdirectory: the store root is a bare band=N
-    # partition layout, so an in-root sidecar would corrupt partition
-    # discovery for every reader
-    return path.rstrip("/") + ".__deletes"
+def _signature_lifecycle(spark, path: str) -> str:
+    """The sibling root of ``path`` under which the shared delta-store
+    lifecycle (``sources/stores.py``) keeps the ledger's horizon and
+    tombstones. Raises ``ValueError`` when the ledger still has pending
+    tombstones in the old ``<path>.__deletes`` sidecar (``__del_batch``
+    partitions), which no read here honors: a purge is never dropped
+    silently."""
+    from docker_etl_spark.sources.stores import parquet_write_completed
 
-
-def _next_signature_del_batch(spark, dpath: str) -> int:
-    """Next ``__del_batch`` partition value: one past the highest
-    existing partition directory (a pure listing — no data read).
-    Called under the store's writer lease, so the sequence is
-    monotonic per store."""
-    from docker_etl_spark.sources.stores import parquet_path_exists
-
-    if not parquet_path_exists(spark, dpath):
-        return 0
-    jvm = spark._jvm
-    hp = jvm.org.apache.hadoop.fs.Path(dpath)
-    fs = hp.getFileSystem(spark._jsc.hadoopConfiguration())
-    mx = -1
-    for st in fs.listStatus(hp):
-        name = st.getPath().getName()
-        if st.isDirectory() and name.startswith("__del_batch="):
-            try:
-                mx = max(mx, int(name.split("=", 1)[1]))
-            except ValueError:
-                pass
-    return mx + 1
+    base = path.rstrip("/")
+    old = base + ".__deletes"
+    if parquet_write_completed(spark, old):
+        raise ValueError(
+            f"signature ledger at {path} has pending tombstones at {old} "
+            "in the old __del_batch layout; apply them with the engine "
+            "that wrote them, or re-issue them with "
+            "delete_from_signature_store and remove that sidecar"
+        )
+    return base + ".__lifecycle"
 
 
 def read_signature_deletes(spark, path: str) -> DataFrame | None:
-    """Pending signature-store tombstones (distinct ids), or None.
-    Gated on the sidecar being committed (crash window reads as
-    absent — the house sidecar self-heal contract)."""
-    raw = _read_signature_deletes_raw(spark, path)
-    if raw is None:
-        return None
-    idc = [c for c in raw.columns if c != "__del_batch"][0]
-    return raw.select(idc).distinct()
+    """The ledger's pending tombstones as (id, ``__batch_id``) rows,
+    or None (:func:`~docker_etl_spark.sources.stores.read_tombstones`)."""
+    from docker_etl_spark.sources.stores import read_tombstones
 
-
-def _read_signature_deletes_raw(spark, path: str) -> DataFrame | None:
-    """The sidecar WITH its ``__del_batch`` partition column — the
-    apply path needs the batch axis to clear only what it applied."""
-    from docker_etl_spark.sources.stores import parquet_write_completed
-
-    dpath = _signature_deletes_path(path)
-    if not parquet_write_completed(spark, dpath):
-        return None
-    return spark.read.parquet(dpath)
+    return read_tombstones(spark, _signature_lifecycle(spark, path))
 
 
 def delete_from_signature_store(
-    spark, path: str, ids, id_col: str = "doc_id"
+    spark, path: str, ids, batch_id: int, id_col: str = "doc_id"
 ) -> None:
-    """Tombstone documents in a MinHash signature store — the
-    takedown lifecycle's NEAR-DUP leg (r12; the search/IVF-PQ delete
-    pattern applied to the dedup ledger): a purged document's
-    signatures must stop suppressing future near-duplicates of its
-    content, or a re-licensed/corrected re-ingest is silently
-    dropped forever. Ids land in a sibling ``<path>.__deletes``
-    sidecar under the store's writer lease (append — purge batches
-    accumulate; duplicates are deduped at read);
-    :func:`load_signature_store` anti-joins it immediately, and
-    :func:`apply_signature_deletes` rewrites the band partitions to
-    drop the rows physically. A full rewrite is the honest cost of
-    physical deletion here — an id's signatures live in EVERY band
-    partition — which is exactly why the read-side tombstone comes
-    first and the rewrite batches many purges."""
-    from docker_etl_spark.sources.stores import store_writer_lock
+    """Tombstone documents in a MinHash signature ledger as delete
+    batch ``batch_id`` — the takedown lifecycle's NEAR-DUP leg: a
+    purged document's signatures must stop suppressing near-duplicates
+    of a re-licensed or corrected re-ingest. The search and IVF-PQ
+    stores' :func:`~docker_etl_spark.sources.stores.delete_from_store`
+    on the ledger's lifecycle root. :func:`load_signature_store`
+    excludes the ids at once; :func:`apply_signature_deletes` drops
+    their rows from EVERY band partition in one rewrite, which is why
+    the read-side tombstone comes first and one apply batches many
+    purges."""
+    from docker_etl_spark.sources.stores import delete_from_store
 
-    if isinstance(ids, DataFrame):
-        idf = ids.select(F.col(ids.columns[0]).alias(id_col)).distinct()
-    else:
-        vals = list(ids)
-        if not vals:
-            raise ValueError("delete_from_signature_store: empty ids")
-        idf = spark.createDataFrame(
-            [(v,) for v in vals], [id_col]
-        ).distinct()
-    with store_writer_lock(path, owner="delete_from_signature_store"):
-        dpath = _signature_deletes_path(path)
-        # Each purge batch lands under its own __del_batch partition
-        # (the search-sidecar pattern): the apply path can then clear
-        # exactly the batches it pinned and applied, so a tombstone
-        # appended between the apply's pin and its clear SURVIVES
-        # instead of being destroyed unapplied (r12 ADVICE).
-        b = _next_signature_del_batch(spark, dpath)
-        (
-            idf.withColumn("__del_batch", F.lit(int(b)))
-            .repartition(1)
-            .write.mode("append")
-            .partitionBy("__del_batch")
-            .parquet(dpath)
-        )
+    delete_from_store(
+        spark, _signature_lifecycle(spark, path), ids, batch_id, id_col,
+        "delete_from_signature_store",
+    )
+
+
+def _ledger_schema(path: str) -> str:
+    """:func:`signature_store_schema` of the local ledger at ``path``,
+    typed from one parquet footer: the first column is the id, and the
+    element type of ``sig`` names the hash. A swap that crashed between
+    its renames leaves no live ledger, only the ``.__bak`` copy that
+    compaction's entry recovery restores; its footer serves then."""
+    from itertools import chain
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import from_arrow_type
+
+    from docker_etl_spark.sources.stores import _committed_files, _local_store
+
+    local = _local_store(path, "apply_signature_deletes").rstrip("/")
+    first = next(
+        chain(_committed_files(local), _committed_files(local + ".__bak")),
+        None,
+    )
+    if first is None:
+        raise ValueError(f"no signature ledger at {path}")
+    footer = pq.read_schema(first[0])
+    hash_fn = (
+        "md5" if pa.types.is_string(footer.field("sig").type.value_type)
+        else "xxhash64"
+    )
+    return signature_store_schema(
+        from_arrow_type(footer.field(0).type).simpleString(), hash_fn,
+        footer.names[0],
+    )
 
 
 def apply_signature_deletes(
-    spark, path: str, target_rows_per_file: int = 1_000_000,
-    _horizon: int | None = None,
+    spark, path: str, up_to_batch: int, target_rows_per_file: int = 1_000_000
 ) -> dict | None:
-    """Physically drop tombstoned signatures: one band-layout rewrite
-    through the crash-recovering store swap, then the sidecar is
-    cleared (LAST — a crash leaves tombstones pending, which is safe:
-    readers keep anti-joining rows that may already be gone).
-
-    The clear drops ONLY the ``__del_batch`` partitions at or below
-    the horizon pinned at entry, via the same crash-recovering swap
-    (r12 ADVICE: an rmtree of the whole sidecar destroyed any
-    tombstone appended between the pin and the clear — a silently
-    lost purge request — and was local-FS-only besides). Re-applying
-    an already-applied tombstone is a harmless no-op anti-join, so
-    every crash window stays safe. No-op (returns None) when no
-    tombstones are pending. ``_horizon`` pins a lower horizon (test
-    seam for the late-tombstone race)."""
-    from docker_etl_spark.sources.stores import compact_partitioned_store
-
-    raw = _read_signature_deletes_raw(spark, path)
-    if raw is None:
-        return None
-    idc = [c for c in raw.columns if c != "__del_batch"][0]
-    if _horizon is None:
-        hrow = raw.agg(F.max("__del_batch")).collect()[0]
-        if hrow[0] is None:
-            return None
-        horizon = int(hrow[0])
-    else:
-        horizon = int(_horizon)
-    pinned = (
-        raw.filter(F.col("__del_batch") <= horizon)
-        .select(idc)
-        .distinct()
-        .localCheckpoint()
+    """Physically drop the ledger's tombstones at or below
+    ``up_to_batch`` through the shared lifecycle: record the horizon
+    FIRST, rewrite the band layout without the pinned ids through the
+    crash-recovering swap (read with the ledger's declared schema), and
+    clear the applied tombstone batches LAST. A delete batch landing
+    meanwhile is above the horizon and stays pending. Returns None,
+    with the horizon raised all the same, when no tombstone is pending
+    at or below ``up_to_batch``. Local-only, as every compaction."""
+    from docker_etl_spark.sources.stores import (
+        clear_tombstones,
+        compact_partitioned_store,
+        drop_tombstoned,
+        record_horizon,
+        tombstone_ids,
     )
-    if pinned.limit(1).count() == 0:
+
+    owner = "apply_signature_deletes"
+    root = _signature_lifecycle(spark, path)
+    record_horizon(spark, root, up_to_batch, owner)
+    ids = tombstone_ids(spark, root, up_to_batch)
+    if ids is None:
         return None
     res = compact_partitioned_store(
-        spark,
-        path,
-        ("band",),
-        target_rows_per_file=target_rows_per_file,
-        owner="apply_signature_deletes",
-        transform=lambda df: df.join(pinned, idc, "left_anti"),
+        spark, path, ("band",), _ledger_schema(path),
+        target_rows_per_file=target_rows_per_file, owner=owner,
+        transform=lambda df: drop_tombstoned(df, ids, df.columns[0]),
     )
-    # Clear exactly the applied batches; later batches survive. The
-    # swap leaves an empty-but-committed sidecar when everything was
-    # applied, which parquet_write_completed reports as absent.
-    compact_partitioned_store(
-        spark,
-        _signature_deletes_path(path),
-        ("__del_batch",),
-        target_rows_per_file=target_rows_per_file,
-        owner="apply_signature_deletes",
-        transform=lambda df: df.filter(F.col("__del_batch") > horizon),
-        lock_path=path,
-    )
+    clear_tombstones(spark, root, up_to_batch, owner)
     return res
 
 
@@ -777,19 +734,19 @@ def load_signature_store(
     frame is already band-exploded — pass it to
     :func:`incremental_minhash_dedup` with ``store_exploded=True``.
     Pending tombstones (:func:`delete_from_signature_store`) are
-    anti-joined out unless ``apply_deletes=False`` (the raw view —
-    e.g. auditing what a purge will drop)."""
+    excluded unless ``apply_deletes=False`` (the raw view — e.g.
+    auditing what a purge will drop)."""
     df = spark.read.parquet(path)
     return drop_signature_deletes(spark, path, df) if apply_deletes else df
 
 
 def drop_signature_deletes(spark, path: str, store: DataFrame) -> DataFrame:
-    """``store``, read from the signature store at ``path``, without the
-    ids its pending tombstones name."""
-    dels = read_signature_deletes(spark, path)
-    if dels is None:
-        return store
-    return store.join(dels, dels.columns[0], "left_anti")
+    """``store``, read from the signature ledger at ``path`` (its first
+    column the id), without the ids its pending tombstones name."""
+    from docker_etl_spark.sources.stores import drop_tombstoned, tombstone_ids
+
+    ids = tombstone_ids(spark, _signature_lifecycle(spark, path))
+    return drop_tombstoned(store, ids, store.columns[0])
 
 
 def incremental_minhash_dedup(

@@ -23,16 +23,21 @@ partition layout (band / tbl / digest_prefix directories) so the
 partition-pruned probe plans are unchanged, and sizes itself from
 parquet FOOTER metadata — never a full-scan ``count()``.
 
-DELTA-STORE LIFECYCLE. The search index (``{path}/postings``) and the
-IVF-PQ store (``{path}/codes``) share one on-disk lifecycle beside
-their data: a 1-row ``{path}/horizon`` marker (the highest batch a
-compaction folded; :func:`read_horizon`, :func:`reject_at_or_below_
-horizon`, :func:`record_horizon`) and a ``{path}/deletes`` tombstone
-sidecar partitioned by ``__batch_id`` (:func:`delete_from_store`,
-:func:`read_tombstones`, :func:`clear_tombstones`). Compaction records
-the horizon FIRST and clears the applied tombstones LAST, so a crash
-anywhere between leaves a read-consistent store that a re-run
-completes.
+DELTA-STORE LIFECYCLE. The search index (``{path}/postings``), the
+IVF-PQ store (``{path}/codes``) and the MinHash signature ledger share
+one on-disk lifecycle under a root: a 1-row ``{root}/horizon`` marker
+(the highest batch a compaction folded; :func:`read_horizon`,
+:func:`reject_at_or_below_horizon`, :func:`record_horizon`) and a
+``{root}/deletes`` tombstone sidecar partitioned by ``__batch_id``
+(:func:`delete_from_store`, :func:`tombstone_ids`,
+:func:`clear_tombstones`), whose ids every read drops with
+:func:`drop_tombstoned`. The root is the store's path, but the
+ledger's bare ``band=N`` layout would read a sidecar as data, so its
+root is a sibling: deletes, horizon and clear lease the root, the
+data rewrite leases the ledger. Compaction records the horizon FIRST
+and clears the applied tombstones LAST, so a crash anywhere between
+leaves a read-consistent store that a re-run completes, and a delete
+racing the fold lands above the horizon and stays pending.
 
 THE ARM RULE. Bounded sidecar reads and writes
 (:func:`read_sidecar_rows`, :func:`write_sidecar_rows`,
@@ -54,7 +59,7 @@ taken once per call, or once per query and passed to each of its
 probes. It pins the store's build parameters and horizon, the
 committed ``__batch_id`` values (every read keeps to the newest of
 them, so a batch committed after the snapshot stays invisible), the
-pending tombstone ids as one small local frame, and the Spark read
+pending tombstone ids on the driver, and the Spark read
 schema of each data directory (``postings`` and ``dict``, or
 ``codes``). The schemas are declared: the store's writer derives them
 from the frame it writes and records them in ``{path}/meta``, so a
@@ -597,25 +602,31 @@ def write_sidecar_rows(
     os.rename(tmp, final)
 
 
-def write_tombstone_sidecar(
-    spark, ids_df, path: str, batch_id: int, max_rows: int = 100_000
-) -> None:
+#: The most ids of a DataFrame delete batch collected driver-direct.
+_TOMBSTONE_COLLECT_ROWS = 100_000
+
+
+def write_tombstone_sidecar(spark, ids_df, path: str, batch_id: int) -> None:
     """Land one delete batch's distinct ids — the first column of
     ``ids_df`` — under its ``__batch_id`` partition of the tombstone
     sidecar at ``path``: dynamic overwrite of that one partition, so
     redelivery of the same batch replaces its own tombstones. The
-    driver-direct arm pays one bounded collect; past ``max_rows``, or
-    for an id type outside :data:`_SIDECAR_TYPES`, a Spark job writes
-    the batch. (A Python id list needs no collect:
-    :func:`delete_from_store` writes it without a job.)"""
+    driver-direct arm pays one bounded collect; past
+    :data:`_TOMBSTONE_COLLECT_ROWS`, or for an id type outside
+    :data:`_SIDECAR_TYPES`, a Spark job writes the batch. (A Python id
+    list needs no collect: :func:`delete_from_store` writes it without
+    a job.)"""
     col = ids_df.columns[0]
     arrow = {s: a for a, s in _SIDECAR_TYPES.items()}.get(
         dict(ids_df.dtypes)[col]
     )
     got = None
     if _driver_direct(path) is not None and arrow is not None:
-        got = [r[0] for r in ids_df.limit(max_rows + 1).collect()]
-    if got is None or len(got) > max_rows:
+        got = [
+            r[0]
+            for r in ids_df.limit(_TOMBSTONE_COLLECT_ROWS + 1).collect()
+        ]
+    if got is None or len(got) > _TOMBSTONE_COLLECT_ROWS:
         (
             ids_df.select(col)
             .distinct()
@@ -738,17 +749,10 @@ def delete_from_store(
             )
 
 
-def read_tombstones(
-    spark, path: str, as_of_batch: int | None = None
-) -> DataFrame | None:
-    """The store's PENDING tombstones at or below ``as_of_batch`` (all
-    when None) — one (id, ``__batch_id``) row per deleted row per
-    delete batch of ``{path}/deletes`` — or None when none are pending
-    there. Read once on the bounded sidecar path into a local frame,
-    the set cannot change under the plans it feeds: it is the pin of a
-    :class:`StoreSnapshot` and so of a compaction's fold (a delete
-    batch landing during the fold is above the horizon
-    :func:`record_horizon` already raised). Gated on the sidecar being
+def _tombstone_rows(spark, path: str, as_of_batch: int | None):
+    """The PENDING tombstones of ``{path}/deletes`` at or below
+    ``as_of_batch`` (all when None) as (id column, sidecar rows), or
+    None when none are pending there. Gated on the sidecar being
     COMMITTED (a crash between mkdir and commit reads as absent — the
     sidecar self-heal contract)."""
     if not parquet_write_completed(spark, path + "/deletes"):
@@ -759,7 +763,19 @@ def read_tombstones(
     ]
     if not sel:
         return None
-    idc = next(c for c in sel[0] if c != "__batch_id")
+    return next(c for c in sel[0] if c != "__batch_id"), sel
+
+
+def read_tombstones(
+    spark, path: str, as_of_batch: int | None = None
+) -> DataFrame | None:
+    """The store's pending tombstones at or below ``as_of_batch`` as a
+    local frame of one (id, ``__batch_id``) row per deleted row per
+    delete batch, or None when none are pending there."""
+    got = _tombstone_rows(spark, path, as_of_batch)
+    if got is None:
+        return None
+    idc, sel = got
     ids = [r[idc] for r in sel]
     schema = StructType.fromDDL(
         f"`{idc}` {_SIDECAR_TYPES[_id_type(ids)]}, __batch_id int"
@@ -767,6 +783,36 @@ def read_tombstones(
     return _local_frame(
         spark, [(v, int(r["__batch_id"])) for v, r in zip(ids, sel)], schema
     )
+
+
+def tombstone_ids(
+    spark, path: str, as_of_batch: int | None = None
+) -> tuple | None:
+    """The distinct ids of the store's pending tombstones at or below
+    ``as_of_batch``, or None when none are pending there: the pin of a
+    :class:`StoreSnapshot` and of a compaction's fold (a delete batch
+    landing during the fold is above the horizon :func:`record_horizon`
+    already raised)."""
+    got = _tombstone_rows(spark, path, as_of_batch)
+    if got is None:
+        return None
+    idc, sel = got
+    return tuple(dict.fromkeys(r[idc] for r in sel))
+
+
+def drop_tombstoned(df: DataFrame, ids, id_col: str) -> DataFrame:
+    """``df`` without the rows whose ``id_col`` is one of the tombstone
+    ``ids`` (:func:`tombstone_ids`; None or empty drops nothing): a
+    literal ``NOT IN`` filter over ids already on the driver, where an
+    anti-join against a local frame broadcasts it, a Spark job per
+    read. Its NULL semantics are the anti-join's: a null tombstone id
+    matches nothing and a row with a null id survives. Partition
+    pruning is unchanged."""
+    vals = [v for v in ids or () if v is not None]
+    if not vals:
+        return df
+    c = F.col(id_col)
+    return df.filter(c.isNull() | ~c.isin(vals))
 
 
 # ---------------------------------------------------------------------------
@@ -857,7 +903,7 @@ class StoreSnapshot:
     #: the newest batch every read sees: ``as_of_batch``, else the
     #: newest batch committed when the snapshot was taken
     upto: int | None
-    tombstones: DataFrame | None  # read_tombstones: (id, __batch_id)
+    tombstones: tuple | None  # tombstone_ids: the pending ids
     schemas: dict  # data directory → read schema
 
     def read(self, d: str, where=None) -> DataFrame:
@@ -875,16 +921,9 @@ class StoreSnapshot:
         return df
 
     def live(self, df: DataFrame, id_col: str) -> DataFrame:
-        """``df`` without the rows the pinned tombstones name — an
-        anti-join, which duplicates cannot change, so no ``distinct``.
-        Catalyst pushes the caller's filters through its left side, so
-        partition pruning is unchanged."""
-        t = self.tombstones
-        if t is None:
-            return df
-        return df.join(
-            t.select(F.col(t.columns[0]).alias(id_col)), id_col, "left_anti"
-        )
+        """``df`` without the rows the pinned tombstones name
+        (:func:`drop_tombstoned`)."""
+        return drop_tombstoned(df, self.tombstones, id_col)
 
 
 def open_store(
@@ -918,7 +957,7 @@ def open_store(
     )
     return StoreSnapshot(
         spark, path, meta, read_horizon(spark, path), as_of_batch, batches,
-        upto, read_tombstones(spark, path, as_of_batch), schemas,
+        upto, tombstone_ids(spark, path, as_of_batch), schemas,
     )
 
 
@@ -939,25 +978,18 @@ def as_snapshot(spark, store, as_of_batch: int | None = None) -> StoreSnapshot:
 
 
 def fold_below_horizon(
-    df: DataFrame, up_to_batch: int, tombstones: DataFrame | None, id_col: str
+    df: DataFrame, up_to_batch: int, tombstones: tuple | None, id_col: str
 ) -> DataFrame:
     """The data fold of a compaction: relabel ``__batch_id`` at or
     below the horizon to the -1 base and drop the rows the pinned
-    ``tombstones`` name (Lucene's deletes-at-merge, FAISS
+    ``tombstones`` ids name (Lucene's deletes-at-merge, FAISS
     ``remove_ids``)."""
-    out = df.withColumn(
+    return drop_tombstoned(df, tombstones, id_col).withColumn(
         "__batch_id",
         F.when(F.col("__batch_id") <= up_to_batch, F.lit(-1)).otherwise(
             F.col("__batch_id")
         ),
     )
-    if tombstones is not None:
-        out = out.join(
-            tombstones.select(F.col(tombstones.columns[0]).alias(id_col)),
-            id_col,
-            "left_anti",
-        )
-    return out
 
 
 def clear_tombstones(spark, path: str, up_to_batch: int, owner: str) -> dict:
@@ -965,7 +997,7 @@ def clear_tombstones(spark, path: str, up_to_batch: int, owner: str) -> dict:
     (``__batch_id <= up_to_batch``). Pure partition filtering — the
     surviving delta files are copied byte-for-byte and nothing is
     folded — so it reads no data. A crash before it leaves the applied
-    tombstones pending, which is safe (probes anti-join ids whose rows
+    tombstones pending, which is safe (reads exclude ids whose rows
     are already gone) and a re-run completes the clear."""
     return compact_sidecar_partitioned(
         spark, path + "/deletes", up_to_batch, lambda _gk, _tables: None,
@@ -1117,11 +1149,11 @@ def compact_partitioned_store(
     spark,
     path: str,
     partition_cols: tuple[str, ...],
+    schema: StructType | str,
     target_rows_per_file: int = 1_000_000,
     owner: str | None = None,
     transform=None,
     lock_path: str | None = None,
-    schema: StructType | str | None = None,
 ) -> dict:
     """Rewrite a partitioned parquet store into right-sized files,
     PRESERVING the partition directory layout (band=…/, tbl=…/,
@@ -1159,8 +1191,7 @@ def compact_partitioned_store(
     store root differs from the compacted subdirectory (the IVF-PQ
     codes/ layout) must serialize against writers locking the root.
     ``schema``: the store's declared read schema (:func:`read_schema`,
-    or a ledger's DDL); None infers it — only
-    ``apply_signature_deletes`` passes none.
+    or a ledger's DDL), so the rewrite runs no schema-inference job.
     """
     local = _local_store(path, "compact_partitioned_store")
     tmp = local.rstrip("/") + ".__compact"
@@ -1169,8 +1200,7 @@ def compact_partitioned_store(
         _recover_interrupted_swap(local, tmp, bak, path)
         files_before = parquet_file_count(local) or 0
         rows = parquet_row_count(local)
-        reader = spark.read if schema is None else spark.read.schema(schema)
-        df = reader.parquet(local)
+        df = spark.read.schema(schema).parquet(local)
         if transform is not None:
             df = transform(df)
         shutil.rmtree(tmp, ignore_errors=True)

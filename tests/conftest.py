@@ -97,6 +97,17 @@ def spark():
     s.stop()
 
 
+@pytest.fixture
+def engine_aqe(spark):
+    """Adaptive execution on for one test, as ``get_spark`` sets it by
+    default (the suite's session runs without it): job counts and
+    stage names then read as in the engine's own sessions."""
+    prior = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "true")
+    yield
+    spark.conf.set("spark.sql.adaptive.enabled", prior)
+
+
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_SMOKE

@@ -188,3 +188,34 @@ def test_ledger_declared_schemas_equal_inferred(spark, tmp_path, ledger):
         spark.read.schema(declared).parquet(path).schema
         == spark.read.parquet(path).schema
     )
+
+
+def test_content_dedup_prefix_path_jobs(spark, tmp_path, engine_aqe):
+    """The prefix fast path of ``incremental_content_dedup`` launches
+    one job while it builds its frame — the distinct-prefix collect,
+    which needs no shuffle — and no eager checkpoint of the window
+    dedup; the answer is unchanged."""
+    from docker_etl_spark.operators.dedupe import (
+        incremental_content_dedup,
+        load_digest_store,
+        write_digest_store,
+    )
+    from tests.test_store_lifecycle import _jobs_in
+
+    path = str(tmp_path / "digests")
+    write_digest_store(
+        spark.createDataFrame(
+            [(_md5(t),) for t in _TEXTS[:3]], "content_md5 string"
+        ),
+        path, prefix_chars=1,
+    )
+    batch = spark.createDataFrame(
+        [(1, _TEXTS[0]), (2, _TEXTS[3]), (3, _TEXTS[3]), (4, _TEXTS[4])],
+        "doc_id long, text string",
+    ).localCheckpoint()
+    built = []
+    jobs = _jobs_in(spark, lambda: built.append(incremental_content_dedup(
+        batch, load_digest_store(spark, path), prefix_chars=1,
+    )))
+    assert len(jobs) == 1, jobs
+    assert sorted(r["doc_id"] for r in built[0].collect()) == [2, 4]

@@ -887,7 +887,7 @@ def test_delete_from_signature_store_lifecycle(spark, tmp_path):
         store_exploded=True, est_threshold=0.3,
     ).collect()
     assert [(r["doc_id"], r["is_dup"]) for r in flags] == [(11, True)]
-    delete_from_signature_store(spark, path, [1])
+    delete_from_signature_store(spark, path, [1], batch_id=0)
     flags = incremental_minhash_dedup(
         near, load_signature_store(spark, path), num_perm=12, bands=3,
         store_exploded=True, est_threshold=0.3,
@@ -898,7 +898,7 @@ def test_delete_from_signature_store_lifecycle(spark, tmp_path):
         load_signature_store(spark, path, apply_deletes=False)
         .filter(F.col("doc_id") == 1).count() > 0
     )
-    res = apply_signature_deletes(spark, path)
+    res = apply_signature_deletes(spark, path, up_to_batch=0)
     assert res is not None
     assert read_signature_deletes(spark, path) is None
     assert (
@@ -906,7 +906,7 @@ def test_delete_from_signature_store_lifecycle(spark, tmp_path):
         .filter(F.col("doc_id") == 1).count() == 0
     )
     # idempotent: nothing pending -> no-op
-    assert apply_signature_deletes(spark, path) is None
+    assert apply_signature_deletes(spark, path, up_to_batch=0) is None
 
 
 def test_write_completed_hides_dot_partition_dirs(spark, tmp_path):

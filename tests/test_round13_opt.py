@@ -74,11 +74,10 @@ def test_apply_signature_deletes_keeps_unapplied_tombstones(spark, tmp_path):
     """r12 ADVICE: apply_signature_deletes used to rmtree the whole
     sidecar after the rewrite, destroying any tombstone appended
     between the pin and the clear — a silently lost purge. The
-    sidecar now carries __del_batch partitions and the clear drops
-    only the batches at or below the horizon pinned at entry.
-    Simulate the race via the _horizon seam: two delete batches,
-    apply pinned at batch 0 — batch 1's tombstone must survive the
-    clear (still read-side-excluded) while batch 0's is physically
+    sidecar carries __batch_id partitions and the clear drops only
+    the batches at or below the apply's horizon. Two delete batches,
+    apply up to batch 0 — batch 1's tombstone must survive the clear
+    (still read-side-excluded) while batch 0's is physically
     gone."""
     from docker_etl_spark.operators.text_dedup import (
         apply_signature_deletes,
@@ -101,9 +100,9 @@ def test_apply_signature_deletes_keeps_unapplied_tombstones(spark, tmp_path):
     path = str(tmp_path / "sigstore")
     write_signature_store(sigs, path, bands=3, num_perm=12)
 
-    delete_from_signature_store(spark, path, [1])   # __del_batch=0
-    delete_from_signature_store(spark, path, [2])   # __del_batch=1
-    res = apply_signature_deletes(spark, path, _horizon=0)
+    delete_from_signature_store(spark, path, [1], batch_id=0)
+    delete_from_signature_store(spark, path, [2], batch_id=1)
+    res = apply_signature_deletes(spark, path, up_to_batch=0)
     assert res is not None
     # batch 1 (id 2) survived the clear: still pending read-side
     pending = {r[0] for r in read_signature_deletes(spark, path).collect()}
@@ -124,7 +123,7 @@ def test_apply_signature_deletes_keeps_unapplied_tombstones(spark, tmp_path):
     }
     assert live_ids == {3, 4}
     # a full apply now drains the sidecar entirely
-    assert apply_signature_deletes(spark, path) is not None
+    assert apply_signature_deletes(spark, path, up_to_batch=1) is not None
     assert read_signature_deletes(spark, path) is None
     live_ids = {
         r[0]

@@ -257,6 +257,7 @@ def test_compact_partitioned_store_bounds_files_same_results(
         incremental_minhash_dedup,
         load_signature_store,
         minhash_signature,
+        signature_store_schema,
         word_shingles,
         write_signature_store,
     )
@@ -294,7 +295,9 @@ def test_compact_partitioned_store_bounds_files_same_results(
     before_rows = parquet_row_count(path)
     before_files = parquet_file_count(path)
     before = run()
-    stats = compact_partitioned_store(spark, path, ("band",))
+    stats = compact_partitioned_store(
+        spark, path, ("band",), signature_store_schema("bigint")
+    )
     assert parquet_row_count(path) == before_rows == stats["rows"]
     # 3 band partitions -> at most one right-sized file each
     assert parquet_file_count(path) <= 3 < before_files

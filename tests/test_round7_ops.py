@@ -677,7 +677,7 @@ def test_compaction_rolls_forward_after_crash(spark, tmp_path):
     bak = live + ".__bak"
     shutil.copytree(live, tmp)
     os.rename(live, bak)
-    out = compact_partitioned_store(spark, live, ("band",))
+    out = compact_partitioned_store(spark, live, ("band",), "v int, band int")
     assert os.path.exists(live) and not os.path.exists(bak)
     assert out["rows"] == 30
 
@@ -696,7 +696,7 @@ def test_compaction_restores_backup_after_crash(spark, tmp_path):
     shutil.copytree(live, tmp)
     os.remove(os.path.join(tmp, "_SUCCESS"))
     os.rename(live, bak)
-    out = compact_partitioned_store(spark, live, ("band",))
+    out = compact_partitioned_store(spark, live, ("band",), "v int, band int")
     assert os.path.exists(live) and not os.path.exists(bak)
     assert out["rows"] == 30
 

@@ -1,10 +1,11 @@
 """The shared delta-store lifecycle in ``sources/stores.py``.
 
 Both arms of the bounded sidecar operations (driver-direct and Spark)
-run the same search-store and IVF-PQ-store lifecycle and must leave
-identical sidecars and probe answers; a tombstone list costs no Spark
-job; compaction refuses a non-local store before it changes anything;
-the Spark dictionary fold equals the driver-side one.
+run the same search-store, IVF-PQ-store and signature-ledger lifecycle
+and must leave identical sidecars and answers; a tombstone list costs
+no Spark job; the ledger's apply reads no schema and refuses the old
+sidecar layout; compaction refuses a non-local store before it changes
+anything; the Spark dictionary fold equals the driver-side one.
 """
 
 from __future__ import annotations
@@ -148,7 +149,55 @@ def _ivfpq_lifecycle(spark, path):
     }, _sidecars(path, ("quantizer", "deletes"))
 
 
-@pytest.mark.parametrize("lifecycle", [_search_lifecycle, _ivfpq_lifecycle])
+def _signature_store(spark, path):
+    from docker_etl_spark.operators.text_dedup import (
+        minhash_signature,
+        word_shingles,
+        write_signature_store,
+    )
+
+    sigs = _docs(spark, _ROWS).select(
+        "doc_id",
+        minhash_signature(word_shingles("text", 3), 12, "md5").alias("sig"),
+    )
+    write_signature_store(sigs, path, bands=3, num_perm=12)
+    return path
+
+
+def _signature_lifecycle(spark, path):
+    from docker_etl_spark.operators.text_dedup import (
+        apply_signature_deletes,
+        delete_from_signature_store,
+        load_signature_store,
+    )
+
+    def ids(apply_deletes=True):
+        return sorted(
+            r[0] for r in load_signature_store(spark, path, apply_deletes)
+            .select("doc_id").distinct().collect()
+        )
+
+    _signature_store(spark, path)
+    delete_from_signature_store(spark, path, [2, 6], batch_id=2)
+    delete_from_signature_store(
+        spark, path, spark.createDataFrame([(7,), (7,)], "doc_id long"),
+        batch_id=3,
+    )
+    root = path + ".__lifecycle"
+    pending = _sidecars(root, ("deletes",))["deletes"]
+    live = ids()
+    res = apply_signature_deletes(spark, path, up_to_batch=2)
+    return {
+        "live": live,
+        "rows": res["rows"],
+        "raw_after_apply": ids(apply_deletes=False),
+        "live_after_apply": ids(),
+    }, {"pending": pending, **_sidecars(root, ("deletes", "horizon"))}
+
+
+@pytest.mark.parametrize(
+    "lifecycle", [_search_lifecycle, _ivfpq_lifecycle, _signature_lifecycle]
+)
 def test_sidecar_arms_agree(spark, tmp_path, monkeypatch, lifecycle):
     """The write / append / delete / probe / census / load lifecycle
     gives the same answers and the same sidecar files (rows, column
@@ -179,26 +228,122 @@ def _jobs_in(spark, fn):
     return list(sc.statusTracker().getJobIdsForGroup(group))
 
 
-@pytest.mark.parametrize("ids", [[3, 1, 3], ["b", "a", "b"]])
-def test_list_delete_takes_no_job(spark, tmp_path, ids):
+@pytest.mark.parametrize(
+    "store, ids",
+    [
+        pytest.param("search", [3, 1, 3], id="ids0"),
+        pytest.param("search", ["b", "a", "b"], id="ids1"),
+        pytest.param("signature", [3, 1, 3], id="signature"),
+    ],
+)
+def test_list_delete_takes_no_job(spark, tmp_path, store, ids):
     """A tombstone batch given as a Python list is written with no
     Spark job, and lands in the same partition with the same column
     type as the same ids given as a DataFrame (createDataFrame's
     inference: int → bigint, str → string)."""
     from docker_etl_spark.operators.search import delete_from_search_index
-
-    listed = _search_store(spark, str(tmp_path / "list"))
-    framed = _search_store(spark, str(tmp_path / "frame"))
-    jobs = _jobs_in(
-        spark, lambda: delete_from_search_index(spark, listed, ids, batch_id=5)
+    from docker_etl_spark.operators.text_dedup import (
+        delete_from_signature_store,
     )
+
+    make, delete, root = {
+        "search": (_search_store, delete_from_search_index, ""),
+        "signature": (
+            _signature_store, delete_from_signature_store, ".__lifecycle"
+        ),
+    }[store]
+    listed = make(spark, str(tmp_path / "list"))
+    framed = make(spark, str(tmp_path / "frame"))
+    jobs = _jobs_in(spark, lambda: delete(spark, listed, ids, batch_id=5))
     assert jobs == []
     frame = spark.createDataFrame([(v,) for v in ids], ["doc_id"])
-    delete_from_search_index(spark, framed, frame, batch_id=5)
-    got, want = _sidecars(listed, ("deletes",)), _sidecars(framed, ("deletes",))
+    delete(spark, framed, frame, batch_id=5)
+    got = _sidecars(listed + root, ("deletes",))
+    want = _sidecars(framed + root, ("deletes",))
     assert got == want
     assert {rel for rel, _t, _r in got["deletes"]} == {"__batch_id=5"}
     assert len(got["deletes"]) == 2
+
+
+def test_signature_apply_reads_no_schema(spark, tmp_path, engine_aqe):
+    """``apply_signature_deletes`` reads the ledger with its declared
+    schema: at most 5 jobs and none of them a ``parquet at`` job (a
+    schema inference; under adaptive execution the rewrite's own jobs
+    are named by the adaptive stages that run them)."""
+    from docker_etl_spark.operators.text_dedup import (
+        apply_signature_deletes,
+        delete_from_signature_store,
+        load_signature_store,
+    )
+
+    path = _signature_store(spark, str(tmp_path / "sigs"))
+    delete_from_signature_store(spark, path, [1, 6], batch_id=0)
+    jobs = _jobs_in(
+        spark, lambda: apply_signature_deletes(spark, path, up_to_batch=0)
+    )
+    tracker = spark.sparkContext.statusTracker()
+    stages = [
+        tracker.getStageInfo(s).name
+        for j in jobs
+        for s in tracker.getJobInfo(j).stageIds
+    ]
+    assert 0 < len(jobs) <= 5, stages
+    assert not any(n.startswith("parquet at") for n in stages), stages
+    left = load_signature_store(spark, path, apply_deletes=False)
+    assert {r[0] for r in left.select("doc_id").distinct().collect()} == {
+        2, 3, 4, 5, 7, 8,
+    }
+
+
+def test_signature_apply_recovers_an_interrupted_swap(spark, tmp_path):
+    """An apply that finds the ledger mid-swap (a crash between the two
+    renames left only ``.__bak`` and a complete ``.__compact``) takes
+    its schema from the backup, lets compaction roll the swap forward,
+    and applies the pending tombstones."""
+    import shutil
+
+    from docker_etl_spark.operators.text_dedup import (
+        apply_signature_deletes,
+        delete_from_signature_store,
+        load_signature_store,
+    )
+
+    path = _signature_store(spark, str(tmp_path / "sigs"))
+    delete_from_signature_store(spark, path, [1], batch_id=0)
+    shutil.copytree(path, path + ".__compact")
+    os.rename(path, path + ".__bak")
+    assert apply_signature_deletes(spark, path, up_to_batch=0) is not None
+    assert not os.path.exists(path + ".__bak")
+    left = load_signature_store(spark, path, apply_deletes=False)
+    assert {r[0] for r in left.select("doc_id").distinct().collect()} == set(
+        range(2, 9)
+    )
+
+
+def test_old_signature_sidecar_layout_raises(spark, tmp_path):
+    """A ledger that still has pending tombstones in the old
+    ``<path>.__deletes`` sidecar (``__del_batch`` partitions) is
+    refused by every lifecycle call, naming that sidecar, rather than
+    read as if nothing were pending."""
+    from docker_etl_spark.operators.text_dedup import (
+        apply_signature_deletes,
+        delete_from_signature_store,
+        load_signature_store,
+        read_signature_deletes,
+    )
+
+    path = _signature_store(spark, str(tmp_path / "sigs"))
+    spark.createDataFrame([(1, 0)], "doc_id long, __del_batch int").write \
+        .partitionBy("__del_batch").parquet(path + ".__deletes")
+    calls = (
+        lambda: load_signature_store(spark, path),
+        lambda: read_signature_deletes(spark, path),
+        lambda: delete_from_signature_store(spark, path, [2], batch_id=0),
+        lambda: apply_signature_deletes(spark, path, up_to_batch=0),
+    )
+    for call in calls:
+        with pytest.raises(ValueError, match=r"sigs\.__deletes"):
+            call()
 
 
 def test_non_local_compaction_fails_before_any_change(spark, monkeypatch):

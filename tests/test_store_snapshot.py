@@ -206,6 +206,86 @@ def test_probe_takes_at_most_four_jobs_and_no_schema_inference(
         ), (name, jobs)
 
 
+def test_probe_over_tombstones_takes_at_most_three_jobs(
+    spark, tmp_path, engine_aqe
+):
+    """The pending tombstones exclude their ids with a literal
+    predicate, not an anti-join whose broadcast is a job of its own: a
+    BM25 and a phrase probe over a store with pending tombstones each
+    launch at most 3 jobs under adaptive execution, and the deleted
+    document is gone from both answers."""
+    from docker_etl_spark.operators.search import (
+        delete_from_search_index,
+        phrase_search_topk,
+        search_bm25_topk,
+    )
+
+    path = _search_store(spark, str(tmp_path / "pin3"), positional=True)
+    delete_from_search_index(spark, path, [3], batch_id=1)
+    probes = {
+        "bm25": lambda: search_bm25_topk(
+            spark, path, ("spark", "join"), k=10
+        ).collect(),
+        "phrase": lambda: phrase_search_topk(
+            spark, path, ("spark", "shuffle"), k=10
+        ).collect(),
+    }
+    for name, probe in probes.items():
+        assert 3 not in {r["doc_id"] for r in probe()}, name
+        jobs = _stage_names(spark, probe)
+        assert 0 < len(jobs) <= 3, (name, jobs)
+
+
+@pytest.mark.parametrize(
+    "id_type, ids", [("bigint", [1, None, 3]), ("string", ["a", None, "c"])]
+)
+def test_tombstone_predicate_equals_anti_join(spark, id_type, ids):
+    """``drop_tombstoned`` answers as the anti-join it replaced: a null
+    tombstone id matches nothing and a row with a null id survives."""
+    from docker_etl_spark.sources.stores import drop_tombstoned
+
+    vals = [1, 2, 3, 4] if id_type == "bigint" else ["a", "b", "c", "d"]
+    df = spark.createDataFrame(
+        [(v, i) for i, v in enumerate([*vals, None])], f"id {id_type}, n int"
+    )
+    tomb = spark.createDataFrame([(v,) for v in ids], f"id {id_type}")
+    want = sorted(df.join(tomb, "id", "left_anti").collect(), key=lambda r: r.n)
+    got = sorted(drop_tombstoned(df, ids, "id").collect(), key=lambda r: r.n)
+    assert got == want
+    assert [n for _v, n in got] == [1, 3, 4]
+
+
+def test_string_id_ledger_live_read_equals_anti_join(spark, tmp_path):
+    """A signature ledger keyed by string ids: the live read equals the
+    raw read anti-joined with its pending tombstones."""
+    from docker_etl_spark.operators.text_dedup import (
+        delete_from_signature_store,
+        load_signature_store,
+        minhash_signature,
+        read_signature_deletes,
+        word_shingles,
+        write_signature_store,
+    )
+
+    path = str(tmp_path / "sigs")
+    sigs = spark.createDataFrame(
+        [(f"d{i}", t) for i, t in _ROWS], "doc_id string, text string"
+    ).select(
+        "doc_id",
+        minhash_signature(word_shingles("text", 3), 12, "md5").alias("sig"),
+    )
+    write_signature_store(sigs, path, bands=3, num_perm=12)
+    delete_from_signature_store(spark, path, ["d2", "d5", "nope"], batch_id=0)
+    raw = load_signature_store(spark, path, apply_deletes=False)
+    dels = read_signature_deletes(spark, path).select("doc_id")
+    want = sorted(tuple(r) for r in raw.join(dels, "doc_id", "left_anti")
+                  .select("doc_id", "band", "bkey").collect())
+    got = sorted(tuple(r) for r in load_signature_store(spark, path)
+                 .select("doc_id", "band", "bkey").collect())
+    assert got == want
+    assert {r[0] for r in got} == {"d1", "d3", "d4", "d6"}
+
+
 def test_shared_snapshot_ignores_a_later_append(spark, tmp_path):
     """Two probes sharing one snapshot answer as the store stood when
     it was taken, even when an append commits between them; a fresh
@@ -325,16 +405,9 @@ _INFERRING_READS = {
     ("docker_etl_spark/sources/stores.py", "read_sidecar_rows"):
         "Spark arm of a bounded sidecar with no declared schema (meta, "
         "horizon, stats, deletes, quantizer); local stores read pyarrow",
-    ("docker_etl_spark/sources/stores.py", "compact_partitioned_store"):
-        "apply_signature_deletes compacts the signature store and its "
-        "tombstone sidecar without a schema; every other caller passes one",
     ("docker_etl_spark/operators/text_dedup.py", "load_signature_store"):
         "public reader with no batch to type the id column from; the "
         "streaming ledger sink reads with signature_store_schema",
-    ("docker_etl_spark/operators/text_dedup.py",
-     "_read_signature_deletes_raw"):
-        "the tombstone sidecar's id column is named by the deleting "
-        "caller; it is read only while a purge is pending",
 }
 
 

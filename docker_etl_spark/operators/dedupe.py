@@ -477,20 +477,21 @@ def incremental_content_dedup(
     ``digest_prefix`` column (the :func:`write_digest_store` layout),
     the batch's distinct prefixes — at most ``16^prefix_chars``
     values, collected in one single-task job over the (small by
-    definition) batch, which also materializes the lazy local
-    checkpoint pinning it — are pushed as a static IN predicate on the
-    store's partition column, so the scan reads only the matching
-    directories (plan-pinned in
+    definition) batch, pinned first by an eager local checkpoint that
+    runs the md5 on all of its partitions — are pushed as a static IN
+    predicate on the store's partition column, so the scan reads only
+    the matching directories (plan-pinned in
     ``tests/test_physical_plans.py::test_digest_store_partition_pruning``).
     The store probe then runs large-side-probe/small-side-build: the
-    pruned store is semi-joined against the broadcast batch digests,
-    and only those (bounded) matches feed the final anti-join.
+    pruned store is semi-joined against the broadcast batch digests
+    (read from the pin, so the window runs once), and only those
+    (bounded) matches feed the final anti-join.
     """
     d = new_docs.withColumn(digest_col, F.md5(F.col(text_col)))
     fast = "digest_prefix" in store.columns
     if fast:
         # the prefixes and the probe must see the same batch rows
-        d = d.localCheckpoint(eager=False)
+        d = d.localCheckpoint(eager=True)
     w = Window.partitionBy(digest_col).orderBy(id_col)
     batch_unique = (
         d.withColumn("__rn", F.row_number().over(w))
@@ -503,15 +504,15 @@ def incremental_content_dedup(
             for r in d.select(
                 F.substring(F.col(digest_col), 1, prefix_chars).alias("p")
             )
-            # one partition: the distinct needs no shuffle, so the
-            # collect is one job
+            # one task over the pinned rows: the distinct needs no
+            # shuffle, so the collect is one job
             .coalesce(1)
             .distinct()
             .collect()
         )
         pruned = store.filter(F.col("digest_prefix").isin(prefixes))
         matches = pruned.join(
-            F.broadcast(batch_unique.select(digest_col).distinct()),
+            F.broadcast(d.select(digest_col).distinct()),
             digest_col,
             "left_semi",
         ).select(digest_col)

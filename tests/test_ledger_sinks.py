@@ -192,9 +192,10 @@ def test_ledger_declared_schemas_equal_inferred(spark, tmp_path, ledger):
 
 def test_content_dedup_prefix_path_jobs(spark, tmp_path, engine_aqe):
     """The prefix fast path of ``incremental_content_dedup`` launches
-    one job while it builds its frame — the distinct-prefix collect,
-    which needs no shuffle — and no eager checkpoint of the window
-    dedup; the answer is unchanged."""
+    two jobs while it builds its frame, and no checkpoint of the
+    window dedup: the batch's pin, one task per batch partition so the
+    md5 runs on all cores, then the distinct-prefix collect over the
+    pinned rows, one task with no shuffle. The answer is unchanged."""
     from docker_etl_spark.operators.dedupe import (
         incremental_content_dedup,
         load_digest_store,
@@ -212,10 +213,16 @@ def test_content_dedup_prefix_path_jobs(spark, tmp_path, engine_aqe):
     batch = spark.createDataFrame(
         [(1, _TEXTS[0]), (2, _TEXTS[3]), (3, _TEXTS[3]), (4, _TEXTS[4])],
         "doc_id long, text string",
-    ).localCheckpoint()
+    ).repartition(2).localCheckpoint()
     built = []
     jobs = _jobs_in(spark, lambda: built.append(incremental_content_dedup(
         batch, load_digest_store(spark, path), prefix_chars=1,
     )))
-    assert len(jobs) == 1, jobs
+    tracker = spark.sparkContext.statusTracker()
+    tasks = [
+        [tracker.getStageInfo(s).numTasks
+         for s in tracker.getJobInfo(j).stageIds]
+        for j in sorted(jobs)
+    ]
+    assert tasks == [[2], [1]], tasks
     assert sorted(r["doc_id"] for r in built[0].collect()) == [2, 4]

@@ -236,14 +236,21 @@ def test_probe_over_tombstones_takes_at_most_three_jobs(
         assert 0 < len(jobs) <= 3, (name, jobs)
 
 
+@pytest.mark.parametrize("literal_ids", [100, 0], ids=["literal", "join"])
 @pytest.mark.parametrize(
     "id_type, ids", [("bigint", [1, None, 3]), ("string", ["a", None, "c"])]
 )
-def test_tombstone_predicate_equals_anti_join(spark, id_type, ids):
-    """``drop_tombstoned`` answers as the anti-join it replaced: a null
-    tombstone id matches nothing and a row with a null id survives."""
+def test_tombstone_predicate_equals_anti_join(
+    spark, monkeypatch, id_type, ids, literal_ids
+):
+    """``drop_tombstoned`` answers as an anti-join on both of its arms
+    (a literal predicate up to ``_TOMBSTONE_LITERAL_IDS`` ids, an
+    anti-join past it): a null tombstone id matches nothing and a row
+    with a null id survives."""
+    from docker_etl_spark.sources import stores
     from docker_etl_spark.sources.stores import drop_tombstoned
 
+    monkeypatch.setattr(stores, "_TOMBSTONE_LITERAL_IDS", literal_ids)
     vals = [1, 2, 3, 4] if id_type == "bigint" else ["a", "b", "c", "d"]
     df = spark.createDataFrame(
         [(v, i) for i, v in enumerate([*vals, None])], f"id {id_type}, n int"
@@ -253,6 +260,47 @@ def test_tombstone_predicate_equals_anti_join(spark, id_type, ids):
     got = sorted(drop_tombstoned(df, ids, "id").collect(), key=lambda r: r.n)
     assert got == want
     assert [n for _v, n in got] == [1, 3, 4]
+
+
+def test_probes_and_compaction_agree_past_the_literal_bound(
+    spark, tmp_path, monkeypatch
+):
+    """Past ``_TOMBSTONE_LITERAL_IDS`` pending ids, reads and the
+    compaction fold exclude the tombstones with an anti-join; probes,
+    a compaction and the census answer as under the literal
+    predicate, and only the join arm plans a join."""
+    from docker_etl_spark.operators.search import (
+        compact_search_index,
+        delete_from_search_index,
+        phrase_search_topk,
+        search_bm25_topk,
+        search_index_census,
+    )
+    from docker_etl_spark.sources import stores
+
+    def run(literal_ids):
+        monkeypatch.setattr(stores, "_TOMBSTONE_LITERAL_IDS", literal_ids)
+        path = _search_store(
+            spark, str(tmp_path / f"arm{literal_ids}"), positional=True
+        )
+        delete_from_search_index(spark, path, [3, 6, 99], batch_id=1)
+        bm25 = search_bm25_topk(spark, path, ("spark", "join"), k=10)
+        plan = bm25._jdf.queryExecution().optimizedPlan().toString()
+        got = (
+            sorted(map(tuple, bm25.collect())),
+            sorted(map(tuple, phrase_search_topk(
+                spark, path, ("spark", "window"), k=10).collect())),
+        )
+        compact_search_index(spark, path, up_to_batch=1)
+        census = tuple(search_index_census(spark, path).collect()[0])
+        return plan.count("LeftAnti"), got, census
+
+    lit_anti, lit, lit_census = run(100)
+    join_anti, joined, join_census = run(2)
+    assert (joined, join_census) == (lit, lit_census)
+    assert {r[0] for r in lit[0]}.isdisjoint({3, 6})
+    assert lit_census[1] == 4  # n_docs
+    assert join_anti > lit_anti
 
 
 def test_string_id_ledger_live_read_equals_anti_join(spark, tmp_path):

@@ -47,7 +47,9 @@ frame — ranked by orderBy+limit and returned without the query
 column. Every probe reads the store through one
 :class:`~docker_etl_spark.sources.stores.StoreSnapshot` (declared
 read schemas, pinned batches and tombstones) and takes one in place
-of the path, so a query running several probes opens it once.
+of the path, so a query running several probes opens it once. The
+snapshot also answers the store's facts — its id column, build
+parameters and batch — so no probe takes an argument repeating them.
 
 Integer BM25 (the cross-engine discipline): with k1 = 5/4 and
 b = 3/4 (exact binary fractions) the saturation term
@@ -392,7 +394,6 @@ def _terms_pred(prefixes, terms):
 def read_search_dictionary(
     spark,
     path,
-    as_of_batch: int | None = None,
     prefixes: list[str] | None = None,
     terms: list[str] | None = None,
 ) -> DataFrame | None:
@@ -403,9 +404,8 @@ def read_search_dictionary(
     named ``__pfx`` directories / terms BEFORE the fold (the probe
     shape: a bounded term lookup reads a few directories of
     vocab-scale rows, never the corpus). ``path`` is a store path or
-    a :class:`~docker_etl_spark.sources.stores.StoreSnapshot`;
-    ``as_of_batch`` snapshot-reads like every store surface."""
-    snap = as_snapshot(spark, path, as_of_batch)
+    a :class:`~docker_etl_spark.sources.stores.StoreSnapshot`."""
+    snap = as_snapshot(spark, path)
     if not snap.batches["dict"]:
         return None
     return _term_dictionary(snap, _terms_pred(prefixes, terms))
@@ -472,12 +472,11 @@ def _resolve_search_meta(
     path: str,
     min_token_len: int | None,
     prefix_len: int | None,
-    caller: str,
 ) -> tuple[int, int]:
-    """Resolve (min_token_len, prefix_len) from the store's meta,
-    validating any EXPLICITLY-passed value against it — a probe or
-    append running with a different prefix_len than the build would
-    silently miss every stored ``__pfx`` directory, and a different
+    """Resolve an append's (min_token_len, prefix_len) from the store's
+    meta, validating any EXPLICITLY-passed value against it — an
+    append with a different prefix_len than the build would land
+    postings in ``__pfx`` directories no probe reads, and a different
     min_token_len makes dl/tf inconsistent across batches (r8
     ADVICE). None means "use the stored value"."""
     for name, passed in (
@@ -486,11 +485,11 @@ def _resolve_search_meta(
         stored = int(meta[name])
         if passed is not None and passed != stored:
             raise ValueError(
-                f"{caller}: {name}={passed} conflicts with the store's "
-                f"recorded build parameter {name}={stored} at {path} — "
-                "postings were tokenized/partitioned with the stored "
-                "value; pass None (the default) to use it, or rebuild "
-                "the index at a fresh path to change it"
+                f"append_search_index: {name}={passed} conflicts with "
+                f"the store's recorded build parameter {name}={stored} "
+                f"at {path} — postings were tokenized/partitioned with "
+                "the stored value; pass None (the default) to use it, or "
+                "rebuild the index at a fresh path to change it"
             )
     return int(meta["min_token_len"]), int(meta["prefix_len"])
 
@@ -531,9 +530,9 @@ def write_search_index(
     The build parameters (``prefix_len``, ``min_token_len``,
     ``positional``) and the read schemas of ``postings`` and ``dict``
     persist in a 1-row meta sidecar at ``{path}/meta`` the first time
-    a store is written; probes and appends default from it and REJECT
-    conflicting explicit values, and every read declares its schema
-    from it (no schema-inference job). They must match how
+    a store is written; probes read them from it, appends default from
+    it and REJECT conflicting explicit values, and every read declares
+    its schema from it (no schema-inference job). They must match how
     ``postings`` was actually built — pass the same values given to
     :func:`build_postings`.
 
@@ -721,7 +720,7 @@ def append_search_index(
         meta, schemas = got
         positional = bool(meta["positional"])
         min_token_len, prefix_len = _resolve_search_meta(
-            meta, path, min_token_len, prefix_len, "append_search_index"
+            meta, path, min_token_len, prefix_len
         )
         if not assume_new_ids and parquet_path_exists(
             spark, path + "/postings"
@@ -770,7 +769,7 @@ def _store_totals(snap: StoreSnapshot) -> tuple[int, int]:
 
 
 def _collect_term_stats(
-    snap: StoreSnapshot, terms: list[str], prefix_len: int
+    snap: StoreSnapshot, terms: list[str]
 ) -> dict[str, tuple[int, int]]:
     """Per-term (df, max_tf) for a bounded query-term set as a driver
     dict (≤ |terms| rows), folded from the dictionary vocab-scale: on
@@ -788,6 +787,7 @@ def _collect_term_stats(
 
     if not terms:
         return {}
+    _mtl, prefix_len = _probe_meta(snap)
     prefixes = sorted({t[:prefix_len] for t in terms})
     raw = None
     if snap.batches["dict"]:
@@ -921,34 +921,34 @@ def _top_k(
     )
 
 
-def _pruned_postings(
-    snap: StoreSnapshot, terms, prefix_len: int, id_col: str
-) -> DataFrame:
+def _pruned_postings(snap: StoreSnapshot, terms) -> DataFrame:
     """The live postings of ``terms`` — the scan every term-keyed
     probe shares: a static ``__pfx`` IN partition filter (directory
     pruning), a term IN pushed filter, the snapshot's batches and its
     tombstone filter."""
+    _mtl, prefix_len = _probe_meta(snap)
     terms = sorted(set(terms))
     p = snap.read(
         "postings",
         F.col("__pfx").isin(sorted({t[:prefix_len] for t in terms}))
         & F.col("term").isin(terms),
     )
-    return snap.live(p, id_col)
+    return snap.live(p, _doc_id(snap))
 
 
-def _probe_meta(
-    snap: StoreSnapshot, prefix_len: int | None, caller: str
-) -> tuple[int, int]:
-    """(min_token_len, prefix_len) of the store a probe reads — the
-    recorded values, an explicit ``prefix_len`` validated against
-    them."""
-    return _resolve_search_meta(snap.meta, snap.path, None, prefix_len, caller)
+def _probe_meta(snap: StoreSnapshot) -> tuple[int, int]:
+    """(min_token_len, prefix_len): the build parameters of the store a
+    probe reads, from its meta sidecar."""
+    return int(snap.meta["min_token_len"]), int(snap.meta["prefix_len"])
 
 
-def _positional_meta(
-    snap: StoreSnapshot, prefix_len: int | None, caller: str
-) -> tuple[int, int]:
+def _doc_id(snap: StoreSnapshot) -> str:
+    """The document-id column of the store a probe reads, named by its
+    postings schema (the build's ``id_col``)."""
+    return _doc_id_column(snap.schemas["postings"].names)
+
+
+def _positional_meta(snap: StoreSnapshot, caller: str) -> tuple[int, int]:
     """:func:`_probe_meta` of a store a positional probe reads; raises
     when the meta sidecar records a non-positional layout."""
     if not snap.meta["positional"]:
@@ -958,7 +958,7 @@ def _positional_meta(
             "write_search_index(positional=True)) to enable positional "
             "probes"
         )
-    return _probe_meta(snap, prefix_len, caller)
+    return _probe_meta(snap)
 
 
 def _reject_short(caller: str, terms, min_token_len: int) -> None:
@@ -979,14 +979,13 @@ _ONE_QUERY = StructField("__query_id", IntegerType())
 
 def _query_set(
     queries: DataFrame,
-    query_id_col: str,
     cols: list[str],
     caller: str,
     max_queries: int | None,
     max_query_terms: int | None = None,
 ) -> tuple[StructField, list[tuple]]:
     """The batch probes' shared front: the query frame → a driver-side
-    query set, i.e. the ``query_id_col`` field and one tuple
+    query set, i.e. the ``query_id`` field and one tuple
     (query_id, *cols) per query, read with ONE bounded collect.
 
     That collect is the read-once barrier: the guards, the term set
@@ -999,7 +998,7 @@ def _query_set(
     filters of the pruned scan. A single-query probe has no front:
     its query is already a Python value, so it launches no job for
     it."""
-    q = queries.select(query_id_col, *cols)
+    q = queries.select("query_id", *cols)
     if max_queries is not None:
         # a driver-local frame collects with no job; any other is read
         # as ONE partition: a bounded take over many near-empty ones (a
@@ -1020,20 +1019,18 @@ def _query_set(
                 f"{max_query_terms}; the term set drives partition "
                 "pruning and must stay driver-bounded"
             )
-    return queries.schema[query_id_col], rows
+    return queries.schema["query_id"], rows
 
 
 def _bm25_scored(
     snap: StoreSnapshot,
     pairs: list[tuple],
     qfield: StructField,
-    id_col: str,
-    prefix_len: int,
     skip_zero_weight_terms: bool = False,
 ) -> DataFrame:
     """Exact-integer BM25 of a driver-side query set: ``pairs`` are
     its distinct (query_id, term) pairs (``qfield`` types the id) →
-    (query_id, id_col, n_terms, score_scaled) for every (query,
+    (query_id, doc id, n_terms, score_scaled) for every (query,
     document) sharing a term. Per-term df and the corpus totals are
     bounded driver reads (dictionary sidecar, else one aggregate over
     the pruned postings); the pairs ride the broadcast df table, so
@@ -1042,9 +1039,7 @@ def _bm25_scored(
     store (and, with ``skip_zero_weight_terms``, zero-idf terms)
     leave the scan."""
     nd, sdl = _store_totals(snap)
-    present = _collect_term_stats(
-        snap, sorted({t for _q, t in pairs}), prefix_len
-    )
+    present = _collect_term_stats(snap, sorted({t for _q, t in pairs}))
     keep = {
         t for t, (df, _m) in present.items()
         if not skip_zero_weight_terms or _lw_py(nd, df) > 0
@@ -1054,11 +1049,9 @@ def _bm25_scored(
         [(q, t, present[t][0], nd, sdl) for q, t in pairs if t in keep],
         StructType([qfield, *_DF_FIELDS]),
     )
+    id_col = _doc_id(snap)
     scored = _integer_term_scores(
-        _pruned_postings(snap, keep, prefix_len, id_col),
-        table,
-        id_col,
-        extra=(qfield.name,),
+        _pruned_postings(snap, keep), table, id_col, extra=(qfield.name,)
     )
     return _bm25_sum(scored, [qfield.name, id_col])
 
@@ -1066,12 +1059,7 @@ def _bm25_scored(
 def search_bm25_topk_batch(
     queries: DataFrame,
     path: str,
-    query_id_col: str = "query_id",
-    terms_col: str = "terms",
-    id_col: str = "doc_id",
     k: int = 10,
-    prefix_len: int | None = None,
-    as_of_batch: int | None = None,
     max_query_terms: int = 4096,
     max_queries: int | None = 4096,
     skip_zero_weight_terms: bool = False,
@@ -1109,45 +1097,35 @@ def search_bm25_topk_batch(
     rather than the default (pinned oracles replay whichever arm
     they declare).
 
-    Output: (query_id, id_col, n_terms, score_scaled, rank) —
+    Output: (query_id, doc id, n_terms, score_scaled, rank) —
     score_scaled is the exact bigint Σ(lw·sat) at the 1e6 ln
     quantizer; ties break on the lower document id. A query whose
     terms match no document is absent (left-join against the query
     set to surface zeros, the x93 eval recipe). Duplicate terms
     within a query count once (a repeated term must not double its
-    score). ``as_of_batch`` snapshot-reads both postings and stats,
-    reproducing the ranking as it stood after that batch.
-    ``prefix_len`` defaults from the store's meta sidecar (an
-    explicit value is validated against it — probing with the wrong
-    prefix length would silently miss every stored directory).
-    ``path`` is a store path or a
+    score). ``path`` is a store path or a
     :class:`~docker_etl_spark.sources.stores.StoreSnapshot` (every
     probe takes either: a query running several probes opens one
     snapshot and passes it to each).
     """
-    snap = as_snapshot(queries.sparkSession, path, as_of_batch)
-    _mtl, prefix_len = _probe_meta(snap, prefix_len, "search_bm25_topk_batch")
+    snap = as_snapshot(queries.sparkSession, path)
     qfield, rows = _query_set(
-        queries, query_id_col, [terms_col], "search_bm25_topk_batch",
-        max_queries, max_query_terms,
+        queries, ["terms"], "search_bm25_topk_batch", max_queries,
+        max_query_terms,
     )
     pairs = list(dict.fromkeys((q, t) for q, ts in rows for t in ts or ()))
-    scored = _bm25_scored(
-        snap, pairs, qfield, id_col, prefix_len, skip_zero_weight_terms
-    )
+    scored = _bm25_scored(snap, pairs, qfield, skip_zero_weight_terms)
+    id_col = _doc_id(snap)
     return _top_k(
-        scored, [F.desc("score_scaled"), F.asc(id_col)], k, by=query_id_col
-    ).select(query_id_col, id_col, "n_terms", "score_scaled", "rank")
+        scored, [F.desc("score_scaled"), F.asc(id_col)], k, by="query_id"
+    ).select("query_id", id_col, "n_terms", "score_scaled", "rank")
 
 
 def search_bm25_topk(
     spark,
     path: str,
     query_terms: tuple[str, ...],
-    id_col: str = "doc_id",
     k: int = 10,
-    prefix_len: int | None = None,
-    as_of_batch: int | None = None,
     skip_zero_weight_terms: bool = False,
 ) -> DataFrame:
     """BM25 top-k for ONE query: :func:`search_bm25_topk_batch` over a
@@ -1155,28 +1133,23 @@ def search_bm25_topk(
     ``skip_zero_weight_terms`` contract (see there) — ranked by
     orderBy+limit and returned without the query column.
 
-    Output: (id_col, n_terms, score_scaled, rank)."""
-    snap = as_snapshot(spark, path, as_of_batch)
-    _mtl, prefix_len = _probe_meta(snap, prefix_len, "search_bm25_topk")
+    Output: (doc id, n_terms, score_scaled, rank)."""
+    snap = as_snapshot(spark, path)
     scored = _bm25_scored(
-        snap, [(0, t) for t in dict.fromkeys(query_terms)],
-        _ONE_QUERY, id_col, prefix_len, skip_zero_weight_terms,
+        snap, [(0, t) for t in dict.fromkeys(query_terms)], _ONE_QUERY,
+        skip_zero_weight_terms,
     )
+    id_col = _doc_id(snap)
     return _top_k(scored, [F.desc("score_scaled"), F.asc(id_col)], k).select(
         id_col, "n_terms", "score_scaled", "rank"
     )
 
 
 def _phrase_scored(
-    snap: StoreSnapshot,
-    phrases: list[tuple],
-    qfield: StructField,
-    id_col: str,
-    prefix_len: int | None,
-    caller: str,
+    snap: StoreSnapshot, phrases: list[tuple], qfield: StructField, caller: str
 ) -> DataFrame:
     """Exact phrase matches of a driver-side phrase set: ``phrases``
-    are (query_id, phrase) pairs → (query_id, id_col, phrase_tf,
+    are (query_id, phrase) pairs → (query_id, doc id, phrase_tf,
     match_starts) for every document holding the phrase. ONE pruned
     positional scan joined to ONE broadcast table of (query_id, term,
     slot, phrase length) rows. Per (query, doc) each slot's positions
@@ -1186,10 +1159,10 @@ def _phrase_scored(
     array_intersect over the shifted lists (associative and
     commutative, so the unordered collect is safe) holds the 1-based
     match starts: phrase_tf is its size, ``match_starts`` it sorted."""
-    mtl, prefix_len = _positional_meta(snap, prefix_len, caller)
+    mtl, _pl = _positional_meta(snap, caller)
     terms = {t for _q, ph in phrases for t in ph}
     _reject_short(caller, terms, mtl)
-    qcol = qfield.name
+    qcol, id_col = qfield.name, _doc_id(snap)
     slots = _local_frame(
         snap.spark,
         [(q, t, i, len(ph)) for q, ph in phrases for i, t in enumerate(ph)],
@@ -1202,7 +1175,7 @@ def _phrase_scored(
             ]
         ),
     )
-    p = _pruned_postings(snap, terms, prefix_len, id_col)
+    p = _pruned_postings(snap, terms)
     g = p.join(F.broadcast(slots), "term").groupBy(qcol, id_col).agg(
         F.count("*").alias("__ns"),
         F.first("__len").alias("__len"),
@@ -1228,24 +1201,19 @@ def _phrase_scored(
 
 
 def phrase_search_topk(
-    spark,
-    path: str,
-    phrase: tuple[str, ...],
-    id_col: str = "doc_id",
-    k: int = 10,
-    prefix_len: int | None = None,
-    as_of_batch: int | None = None,
+    spark, path: str, phrase: tuple[str, ...], k: int = 10
 ) -> DataFrame:
     """Exact phrase search for ONE phrase: :func:`phrase_search_topk_batch`
     over a batch of one (see there for the positional-intersection
     algorithm and its guards), ranked by orderBy+limit and returned
     without the query column.
 
-    Output: (id_col, phrase_tf, rank)."""
+    Output: (doc id, phrase_tf, rank)."""
+    snap = as_snapshot(spark, path)
     scored = _phrase_scored(
-        as_snapshot(spark, path, as_of_batch), [(0, tuple(phrase))],
-        _ONE_QUERY, id_col, prefix_len, "phrase_search_topk",
+        snap, [(0, tuple(phrase))], _ONE_QUERY, "phrase_search_topk"
     )
+    id_col = _doc_id(snap)
     return _top_k(scored, [F.desc("phrase_tf"), F.asc(id_col)], k).select(
         id_col, "phrase_tf", "rank"
     )
@@ -1254,12 +1222,7 @@ def phrase_search_topk(
 def phrase_search_topk_batch(
     queries: DataFrame,
     path: str,
-    query_id_col: str = "query_id",
-    phrase_col: str = "phrase",
-    id_col: str = "doc_id",
     k: int = 10,
-    prefix_len: int | None = None,
-    as_of_batch: int | None = None,
     max_queries: int | None = 4096,
     max_query_terms: int = 4096,
 ) -> DataFrame:
@@ -1282,27 +1245,26 @@ def phrase_search_topk_batch(
     corpus-scale data concentrates anywhere even for stopword-grade
     phrase terms.
 
-    Output: (query_id, id_col, phrase_tf, rank) ranked by
+    Output: (query_id, doc id, phrase_tf, rank) ranked by
     exact-integer phrase frequency, ties → lower id; a phrase
     matching no document is absent (left-join the query set
-    downstream to surface zeros, the x93 eval recipe).
-    ``as_of_batch`` snapshot-reads the pruned postings. Raises on
+    downstream to surface zeros, the x93 eval recipe). Raises on
     non-positional stores (the meta sidecar records the layout) and
     on phrase terms shorter than the store's min_token_len (never
     indexed — the phrase cannot match; filter such phrases out
     upstream)."""
-    snap = as_snapshot(queries.sparkSession, path, as_of_batch)
+    snap = as_snapshot(queries.sparkSession, path)
+    caller = "phrase_search_topk_batch"
     qfield, rows = _query_set(
-        queries, query_id_col, [phrase_col], "phrase_search_topk_batch",
-        max_queries, max_query_terms,
+        queries, ["phrase"], caller, max_queries, max_query_terms
     )
     scored = _phrase_scored(
-        snap, [(q, tuple(ph or ())) for q, ph in rows], qfield,
-        id_col, prefix_len, "phrase_search_topk_batch",
+        snap, [(q, tuple(ph or ())) for q, ph in rows], qfield, caller
     )
+    id_col = _doc_id(snap)
     return _top_k(
-        scored, [F.desc("phrase_tf"), F.asc(id_col)], k, by=query_id_col
-    ).select(query_id_col, id_col, "phrase_tf", "rank")
+        scored, [F.desc("phrase_tf"), F.asc(id_col)], k, by="query_id"
+    ).select("query_id", id_col, "phrase_tf", "rank")
 
 
 def _min_span_sweep(pls_col, n_col):
@@ -1452,8 +1414,6 @@ def _span_scored(
     snap: StoreSnapshot,
     queries: list[tuple],
     qfield: StructField,
-    id_col: str,
-    prefix_len: int | None,
     max_positions_per_term: int,
     sweep,
     out: str,
@@ -1461,7 +1421,7 @@ def _span_scored(
 ) -> DataFrame:
     """Proximity of a driver-side query set: ``queries`` are
     (query_id, terms, slop) with 2-16 distinct terms each (callers
-    validate with :func:`_check_span_terms`) → (query_id, id_col,
+    validate with :func:`_check_span_terms`) → (query_id, doc id,
     ``out``) for every document holding all of a query's terms
     within ``len(terms) + slop`` raw positions, ``out`` being the
     ``sweep``'s measure. ONE pruned positional scan joined to ONE
@@ -1471,10 +1431,10 @@ def _span_scored(
     measures them: :func:`_min_span_sweep` (unordered MinSpan — slot
     order is irrelevant to it) or :func:`_ordered_window_sweep` (the
     terms as a subsequence in query order)."""
-    mtl, prefix_len = _positional_meta(snap, prefix_len, caller)
+    mtl, _pl = _positional_meta(snap, caller)
     terms = {t for _q, ts, _s in queries for t in ts}
     _reject_short(caller, terms, mtl)
-    qcol = qfield.name
+    qcol, id_col = qfield.name, _doc_id(snap)
     qt = _local_frame(
         snap.spark,
         [
@@ -1492,7 +1452,7 @@ def _span_scored(
             ]
         ),
     )
-    p = _pruned_postings(snap, terms, prefix_len, id_col)
+    p = _pruned_postings(snap, terms)
     g = p.join(F.broadcast(qt), "term").groupBy(qcol, id_col).agg(
         F.count("*").alias("__nt"),
         F.first("__len").alias("__len"),
@@ -1531,10 +1491,7 @@ def proximity_search_topk(
     path: str,
     terms: tuple[str, ...],
     slop: int = 0,
-    id_col: str = "doc_id",
     k: int = 10,
-    prefix_len: int | None = None,
-    as_of_batch: int | None = None,
     max_positions_per_term: int = 128,
 ) -> DataFrame:
     """Unordered proximity search for ONE term bag:
@@ -1542,14 +1499,15 @@ def proximity_search_topk(
     there for the MinSpan measure, ``slop`` and the guards), ranked
     by orderBy+limit and returned without the query column.
 
-    Output: (id_col, min_span, rank)."""
+    Output: (doc id, min_span, rank)."""
     caller = "proximity_search_topk"
     _check_span_terms(caller, terms)
+    snap = as_snapshot(spark, path)
     scored = _span_scored(
-        as_snapshot(spark, path, as_of_batch), [(0, tuple(terms), slop)],
-        _ONE_QUERY, id_col, prefix_len, max_positions_per_term,
+        snap, [(0, tuple(terms), slop)], _ONE_QUERY, max_positions_per_term,
         _min_span_sweep, "min_span", caller,
     )
+    id_col = _doc_id(snap)
     return _top_k(scored, [F.asc("min_span"), F.asc(id_col)], k).select(
         id_col, "min_span", "rank"
     )
@@ -1560,10 +1518,7 @@ def ordered_window_search_topk(
     path: str,
     terms: tuple[str, ...],
     slop: int = 0,
-    id_col: str = "doc_id",
     k: int = 10,
-    prefix_len: int | None = None,
-    as_of_batch: int | None = None,
     max_positions_per_term: int = 128,
 ) -> DataFrame:
     """Ordered proximity search for ONE term sequence:
@@ -1571,14 +1526,15 @@ def ordered_window_search_topk(
     there for the in-order window measure and the guards), ranked by
     orderBy+limit and returned without the query column.
 
-    Output: (id_col, min_window, rank)."""
+    Output: (doc id, min_window, rank)."""
     caller = "ordered_window_search_topk"
     _check_span_terms(caller, terms)
+    snap = as_snapshot(spark, path)
     scored = _span_scored(
-        as_snapshot(spark, path, as_of_batch), [(0, tuple(terms), slop)],
-        _ONE_QUERY, id_col, prefix_len, max_positions_per_term,
+        snap, [(0, tuple(terms), slop)], _ONE_QUERY, max_positions_per_term,
         _ordered_window_sweep, "min_window", caller,
     )
+    id_col = _doc_id(snap)
     return _top_k(scored, [F.asc("min_window"), F.asc(id_col)], k).select(
         id_col, "min_window", "rank"
     )
@@ -1587,14 +1543,9 @@ def ordered_window_search_topk(
 def _span_search_batch(
     queries: DataFrame,
     path: str,
-    query_id_col: str,
-    terms_col: str,
     slop_col: str | None,
     slop: int,
-    id_col: str,
     k: int,
-    prefix_len: int | None,
-    as_of_batch: int | None,
     max_queries: int | None,
     max_query_terms: int,
     max_positions_per_term: int,
@@ -1605,10 +1556,10 @@ def _span_search_batch(
     """The two proximity batch probes: the query-set front, the
     per-query term guard, :func:`_span_scored` and the per-query
     top-k."""
-    snap = as_snapshot(queries.sparkSession, path, as_of_batch)
-    cols = [terms_col] + ([slop_col] if slop_col is not None else [])
+    snap = as_snapshot(queries.sparkSession, path)
+    cols = ["terms"] + ([slop_col] if slop_col is not None else [])
     qfield, rows = _query_set(
-        queries, query_id_col, cols, caller, max_queries, max_query_terms
+        queries, cols, caller, max_queries, max_query_terms
     )
     qs = []
     for r in rows:
@@ -1616,25 +1567,20 @@ def _span_search_batch(
         _check_span_terms(caller, ts, query_id=r[0])
         qs.append((r[0], ts, r[2] if slop_col is not None else slop))
     scored = _span_scored(
-        snap, qs, qfield, id_col, prefix_len, max_positions_per_term, sweep,
-        out, caller,
+        snap, qs, qfield, max_positions_per_term, sweep, out, caller
     )
+    id_col = _doc_id(snap)
     return _top_k(
-        scored, [F.asc(out), F.asc(id_col)], k, by=query_id_col
-    ).select(query_id_col, id_col, out, "rank")
+        scored, [F.asc(out), F.asc(id_col)], k, by="query_id"
+    ).select("query_id", id_col, out, "rank")
 
 
 def ordered_window_search_topk_batch(
     queries: DataFrame,
     path: str,
-    query_id_col: str = "query_id",
-    terms_col: str = "terms",
     slop_col: str | None = None,
     slop: int = 0,
-    id_col: str = "doc_id",
     k: int = 10,
-    prefix_len: int | None = None,
-    as_of_batch: int | None = None,
     max_queries: int | None = 4096,
     max_query_terms: int = 4096,
     max_positions_per_term: int = 128,
@@ -1659,14 +1605,13 @@ def ordered_window_search_topk_batch(
     top-k is ``row_number() <= k`` partitioned by query
     (WindowGroupLimit).
 
-    Output: (query_id, id_col, min_window, rank), window ascending,
+    Output: (query_id, doc id, min_window, rank), window ascending,
     ties on lower id. Raises on non-positional stores, on a query
     with duplicate terms or a term count outside 2-16 (naming its
     query_id), and on terms shorter than the store's
     min_token_len."""
     return _span_search_batch(
-        queries, path, query_id_col, terms_col, slop_col, slop, id_col, k,
-        prefix_len, as_of_batch, max_queries, max_query_terms,
+        queries, path, slop_col, slop, k, max_queries, max_query_terms,
         max_positions_per_term, _ordered_window_sweep, "min_window",
         "ordered_window_search_topk_batch",
     )
@@ -1675,14 +1620,9 @@ def ordered_window_search_topk_batch(
 def proximity_search_topk_batch(
     queries: DataFrame,
     path: str,
-    query_id_col: str = "query_id",
-    terms_col: str = "terms",
     slop_col: str | None = None,
     slop: int = 0,
-    id_col: str = "doc_id",
     k: int = 10,
-    prefix_len: int | None = None,
-    as_of_batch: int | None = None,
     max_queries: int | None = 4096,
     max_query_terms: int = 4096,
     max_positions_per_term: int = 128,
@@ -1711,27 +1651,20 @@ def proximity_search_topk_batch(
     Per-query top-k is ``row_number() <= k`` partitioned by query
     (WindowGroupLimit — map-side).
 
-    Output: (query_id, id_col, min_span, rank) — span ascending (a
+    Output: (query_id, doc id, min_span, rank) — span ascending (a
     tighter cluster of the terms ranks higher), ties on lower id.
     Raises on non-positional stores, on a query with duplicate terms
     or a term count outside 2-16 (naming its query_id), and on terms
     shorter than the store's min_token_len."""
     return _span_search_batch(
-        queries, path, query_id_col, terms_col, slop_col, slop, id_col, k,
-        prefix_len, as_of_batch, max_queries, max_query_terms,
+        queries, path, slop_col, slop, k, max_queries, max_query_terms,
         max_positions_per_term, _min_span_sweep, "min_span",
         "proximity_search_topk_batch",
     )
 
 
 def phrase_match_positions(
-    spark,
-    path: str,
-    phrase: tuple[str, ...],
-    id_col: str = "doc_id",
-    k: int | None = 10,
-    prefix_len: int | None = None,
-    as_of_batch: int | None = None,
+    spark, path: str, phrase: tuple[str, ...], k: int | None = 10
 ) -> DataFrame:
     """:func:`phrase_search_topk` that also returns WHERE the phrase
     matched: the sorted 1-based start positions of every occurrence —
@@ -1743,7 +1676,7 @@ def phrase_match_positions(
     the match starts, sorted here since intersect order follows its
     first argument, not position order after the shifts).
 
-    Output: (id_col, phrase_tf, match_starts array<int>) for the top
+    Output: (doc id, phrase_tf, match_starts array<int>) for the top
     ``k`` documents by exact-integer phrase frequency (ties → lower
     id), via orderBy+limit (TakeOrderedAndProject — map-side).
     ``k=None`` returns EVERY matching document unranked (no rank
@@ -1752,10 +1685,11 @@ def phrase_match_positions(
     Raises on non-positional stores and below-min_token_len terms,
     like every positional probe. The probe is
     :func:`phrase_search_topk_batch`'s over a batch of one."""
+    snap = as_snapshot(spark, path)
     scored = _phrase_scored(
-        as_snapshot(spark, path, as_of_batch), [(0, tuple(phrase))],
-        _ONE_QUERY, id_col, prefix_len, "phrase_match_positions",
+        snap, [(0, tuple(phrase))], _ONE_QUERY, "phrase_match_positions"
     )
+    id_col = _doc_id(snap)
     if k is None:
         return scored.select(id_col, "phrase_tf", "match_starts")
     return _top_k(scored, [F.desc("phrase_tf"), F.asc(id_col)], k).select(
@@ -1764,21 +1698,16 @@ def phrase_match_positions(
 
 
 def bm25_topk_batch_from_postings(
-    postings: DataFrame,
-    stats: DataFrame,
-    query_terms: DataFrame,
-    query_id_col: str = "query_id",
-    id_col: str = "doc_id",
-    k: int = 10,
+    postings: DataFrame, stats: DataFrame, query_terms: DataFrame, k: int = 10
 ) -> DataFrame:
     """Batch BM25 top-k over UN-persisted postings — the brute-force
     ground-truth arm of the retrieval-quality eval: feed it
     :func:`build_postings` output straight from the corpus (no store,
     no pruning) and the same exact-integer chain ranks against the
     full tokenization. ``query_terms`` is the exploded (query_id,
-    term) pair frame. The postings stream is bounded to matched terms
-    behind a lazy barrier so the tokenize pass is not re-evaluated by
-    the df subtree.
+    term) pair frame; the output's id column is the postings'. The
+    postings stream is bounded to matched terms behind a lazy barrier
+    so the tokenize pass is not re-evaluated by the df subtree.
 
     ``stats`` may carry MULTIPLE delta rows (e.g. un-folded
     ``{path}/stats`` reads): it is SUM-folded to one (n_docs, sum_dl)
@@ -1806,22 +1735,18 @@ def bm25_topk_batch_from_postings(
                 )
             )
         )
+    id_col = _doc_id_column(postings.columns)
     scored = _integer_term_scores(pf, dfreq, id_col)
     per_query = scored.join(F.broadcast(query_terms), "term")
     return _top_k(
-        _bm25_sum(per_query, [query_id_col, id_col]),
+        _bm25_sum(per_query, ["query_id", id_col]),
         [F.desc("score_scaled"), F.asc(id_col)],
         k,
-        by=query_id_col,
-    ).select(query_id_col, id_col, "n_terms", "score_scaled", "rank")
+        by="query_id",
+    ).select("query_id", id_col, "n_terms", "score_scaled", "rank")
 
 
-def search_index_census(
-    spark,
-    path: str,
-    id_col: str = "doc_id",
-    as_of_batch: int | None = None,
-) -> DataFrame:
+def search_index_census(spark, path: str) -> DataFrame:
     """Index observability as ONE aggregate row — the health numbers
     an operator watches to size compactions and catch ingest
     anomalies (df skew from a stopword leak, dl drift from a
@@ -1841,10 +1766,10 @@ def search_index_census(
     n_batches) read the postings; the TERM-side facts (n_terms,
     max_df, max_df_term) read the dictionary sidecar — vocab-scale
     rows instead of a corpus-scale per-term aggregate (r10 judge item
-    #1). ``as_of_batch`` snapshot-reads. All exact integers —
-    cross-engine replayable.
+    #1). All exact integers — cross-engine replayable.
     """
-    snap = as_snapshot(spark, path, as_of_batch)
+    snap = as_snapshot(spark, path)
+    id_col = _doc_id(snap)
     p = snap.live(snap.read("postings"), id_col)
     per_term = _term_dictionary(snap).select("term", "df")
     term_stats = per_term.agg(
@@ -1919,10 +1844,7 @@ def prefix_search_topk(
     spark,
     path: str,
     term_prefix: str,
-    id_col: str = "doc_id",
     k: int = 10,
-    prefix_len: int | None = None,
-    as_of_batch: int | None = None,
     max_expanded_terms: int = 4096,
 ) -> DataFrame:
     """Prefix (wildcard) search — ``wind*`` — over the persisted
@@ -1941,13 +1863,14 @@ def prefix_search_topk(
     Scoring is the module's exact-integer BM25 chain summed over a
     document's MATCHED terms (rarer expansions weigh more via idf —
     Lucene's scoring rewrite, not the constant-score one); top-k via
-    orderBy+limit (TakeOrderedAndProject). Output: (id_col, n_terms,
+    orderBy+limit (TakeOrderedAndProject). Output: (doc id, n_terms,
     score_scaled, rank) — :func:`search_bm25_topk`'s shape.
     """
     if not term_prefix:
         raise ValueError("prefix_search_topk: empty term_prefix")
-    snap = as_snapshot(spark, path, as_of_batch)
-    _mtl, prefix_len = _probe_meta(snap, prefix_len, "prefix_search_topk")
+    snap = as_snapshot(spark, path)
+    _mtl, prefix_len = _probe_meta(snap)
+    id_col = _doc_id(snap)
     pred = _prefix_pred(term_prefix, prefix_len)
     p = snap.live(snap.read("postings", pred), id_col)
     n_terms = _expansion_count(snap, pred, max_expanded_terms)
@@ -1972,10 +1895,7 @@ def phrase_prefix_search_topk(
     path: str,
     phrase: tuple[str, ...],
     last_prefix: str,
-    id_col: str = "doc_id",
     k: int = 10,
-    prefix_len: int | None = None,
-    as_of_batch: int | None = None,
     max_expanded_terms: int = 4096,
 ) -> DataFrame:
     """Phrase-prefix search — Elasticsearch's ``match_phrase_prefix``,
@@ -1994,7 +1914,7 @@ def phrase_prefix_search_topk(
     directory pruning). A term may serve both roles ("dat" expanding
     to a fixed term is legal).
 
-    Output: (id_col, phrase_tf, rank) — phrase_tf counts completed
+    Output: (doc id, phrase_tf, rank) — phrase_tf counts completed
     occurrences (any expansion term at the final slot), ranked like
     :func:`phrase_search_topk`. Raises on non-positional stores,
     empty phrase/prefix, short fixed terms, or a prefix shorter than
@@ -2002,10 +1922,9 @@ def phrase_prefix_search_topk(
     terms."""
     from functools import reduce
 
-    snap = as_snapshot(spark, path, as_of_batch)
-    mtl, prefix_len = _positional_meta(
-        snap, prefix_len, "phrase_prefix_search_topk"
-    )
+    snap = as_snapshot(spark, path)
+    mtl, prefix_len = _positional_meta(snap, "phrase_prefix_search_topk")
+    id_col = _doc_id(snap)
     if not phrase:
         raise ValueError(
             "phrase_prefix_search_topk: empty fixed phrase — use "
@@ -2135,12 +2054,7 @@ def _fuzzy_scored(
 
 
 def fuzzy_term_suggest(
-    spark,
-    path: str,
-    term: str,
-    max_dist: int = 1,
-    k: int = 5,
-    as_of_batch: int | None = None,
+    spark, path: str, term: str, max_dist: int = 1, k: int = 5
 ) -> DataFrame:
     """Did-you-mean for ONE (likely misspelled) term:
     :func:`fuzzy_term_suggest_batch` over a batch of one (see there),
@@ -2149,9 +2063,7 @@ def fuzzy_term_suggest(
     Output: (term, df, dist, rank)."""
     if not term:
         raise ValueError("fuzzy_term_suggest: empty term")
-    cand = _fuzzy_scored(
-        as_snapshot(spark, path, as_of_batch), [(0, term)], max_dist
-    )
+    cand = _fuzzy_scored(as_snapshot(spark, path), [(0, term)], max_dist)
     return _top_k(
         cand, [F.desc("df"), F.asc("dist"), F.asc("term")], k
     ).select("term", "df", "dist", "rank")
@@ -2163,10 +2075,7 @@ def search_boolean_topk(
     must: tuple[str, ...] = (),
     should: tuple[str, ...] = (),
     must_not: tuple[str, ...] = (),
-    id_col: str = "doc_id",
     k: int = 10,
-    prefix_len: int | None = None,
-    as_of_batch: int | None = None,
 ) -> DataFrame:
     """Boolean retrieval over the persisted index — Lucene's
     BooleanQuery: a document qualifies when it contains EVERY ``must``
@@ -2185,7 +2094,7 @@ def search_boolean_topk(
     exclusion must see every occurrence; that is the operator's
     documented cost, same as Lucene's.
 
-    Output: (id_col, n_terms, score_scaled, rank) — n_terms counts
+    Output: (doc id, n_terms, score_scaled, rank) — n_terms counts
     matched SCORING terms (must + should). Raises when a term appears
     in more than one role (ambiguous semantics).
     """
@@ -2202,11 +2111,11 @@ def search_boolean_topk(
         raise ValueError(
             "search_boolean_topk: needs at least one must or should term"
         )
-    snap = as_snapshot(spark, path, as_of_batch)
-    _mtl, prefix_len = _probe_meta(snap, prefix_len, "search_boolean_topk")
+    snap = as_snapshot(spark, path)
+    id_col = _doc_id(snap)
     all_terms = sorted(set(must) | set(should) | set(must_not))
     scoring_terms = sorted(set(must) | set(should))
-    p = _pruned_postings(snap, all_terms, prefix_len, id_col)
+    p = _pruned_postings(snap, all_terms)
     sp = p.filter(F.col("term").isin(scoring_terms))
     dfreq = sp.groupBy("term").agg(F.count("*").cast("long").alias("df"))
     scored = _integer_term_scores(
@@ -2233,11 +2142,8 @@ def search_boolean_topk(
 def fuzzy_term_suggest_batch(
     queries: DataFrame,
     path: str,
-    query_id_col: str = "query_id",
-    term_col: str = "term",
     max_dist: int = 1,
     k: int = 5,
-    as_of_batch: int | None = None,
     max_queries: int | None = 4096,
 ) -> DataFrame:
     """Did-you-mean over the index DICTIONARY for a SET of (likely
@@ -2261,11 +2167,10 @@ def fuzzy_term_suggest_batch(
     all exact integers, cross-engine replayable."""
     spark = queries.sparkSession
     qfield, rows = _query_set(
-        queries, query_id_col, [term_col], "fuzzy_term_suggest_batch",
-        max_queries,
+        queries, ["term"], "fuzzy_term_suggest_batch", max_queries
     )
     cand = _fuzzy_scored(
-        as_snapshot(spark, path, as_of_batch),
+        as_snapshot(spark, path),
         [(i, t) for i, (_q, t) in enumerate(rows) if t is not None],
         max_dist,
     )
@@ -2278,7 +2183,7 @@ def fuzzy_term_suggest_batch(
         cand, [F.desc("df"), F.asc("dist"), F.asc("term")], k, by="__qi"
     )
     return top.join(F.broadcast(ids), "__qi").select(
-        query_id_col, "term", "df", "dist", "rank"
+        "query_id", "term", "df", "dist", "rank"
     )
 
 
@@ -2398,12 +2303,7 @@ def _compact_dict_driver_direct(
     )
 
 
-def compact_search_index(
-    spark,
-    path: str,
-    up_to_batch: int,
-    target_rows_per_file: int = 1_000_000,
-) -> dict:
+def compact_search_index(spark, path: str, up_to_batch: int) -> dict:
     """Fold the index's batch deltas with ``__batch_id <=
     up_to_batch`` into the base partition (``__batch_id = -1``) and
     right-size the files — after N streaming appends every term-
@@ -2526,7 +2426,6 @@ def compact_search_index(
         spark,
         path + "/postings",
         ("__pfx", "__batch_id"),
-        target_rows_per_file=target_rows_per_file,
         owner=owner,
         transform=lambda df: fold_below_horizon(
             df, up_to_batch, del_ids, _doc_id_column(df.columns)
@@ -2611,7 +2510,6 @@ def compact_search_index(
                 spark,
                 path + "/dict",
                 ("__pfx", "__batch_id"),
-                target_rows_per_file=target_rows_per_file,
                 owner=owner,
                 transform=fold_dict,
                 lock_path=path,
@@ -2627,6 +2525,12 @@ def _doc_id_column(columns) -> str:
     that is not a posting fact or a layout column."""
     facts = {"term", "tf", "dl", "pos", "__pfx", "__batch_id"}
     return next(c for c in columns if c not in facts)
+
+
+#: MaxScore's split: a query term whose score ceiling is at most this
+#: share of the query's largest ceiling is NON-ESSENTIAL (see
+#: :func:`search_bm25_topk_batch_pruned`).
+_NONESSENTIAL_UB_RATIO = 0.5
 
 
 def _ts_upper_bound(lw: int, max_tf: int, sum_dl: int, n_docs: int) -> int:
@@ -2647,15 +2551,12 @@ def _bm25_pruned_scored(
     snap: StoreSnapshot,
     pairs: list[tuple],
     qfield: StructField,
-    id_col: str,
     k: int,
-    prefix_len: int,
-    nonessential_ub_ratio: float,
     diag: dict,
     count_rows: bool = False,
 ) -> DataFrame:
     """MaxScore-pruned twin of :func:`_bm25_scored`: the same
-    (query_id, id_col, n_terms, score_scaled) rows for every document
+    (query_id, doc id, n_terms, score_scaled) rows for every document
     that can reach its query's top ``k`` (the algorithm is
     :func:`search_bm25_topk_batch_pruned`'s). ``diag`` receives the
     per-query record: valid / exhaustive_queries, the essential /
@@ -2665,19 +2566,17 @@ def _bm25_pruned_scored(
     aggregate job, diagnostic only)."""
     from pyspark.sql import Window
 
-    qcol = qfield.name
+    qcol, id_col = qfield.name, _doc_id(snap)
 
     def exhaustive(reason: str) -> DataFrame:
         diag["mode"] = "exhaustive"
         diag["reason"] = reason
-        return _bm25_scored(snap, pairs, qfield, id_col, prefix_len)
+        return _bm25_scored(snap, pairs, qfield)
 
     nd, sdl = _store_totals(snap)
     if nd <= 0 or sdl <= 0:
         return exhaustive("empty stats")
-    present = _collect_term_stats(
-        snap, sorted({t for _q, t in pairs}), prefix_len
-    )
+    present = _collect_term_stats(snap, sorted({t for _q, t in pairs}))
     ub = {
         t: _ts_upper_bound(_lw_py(nd, df), max_tf, sdl, nd)
         for t, (df, max_tf) in present.items()
@@ -2692,7 +2591,7 @@ def _bm25_pruned_scored(
     s_c: dict = {}
     for q, tp in per_q.items():
         m = max(ub[t] for t in tp)
-        cset = [t for t in tp if ub[t] <= nonessential_ub_ratio * m]
+        cset = [t for t in tp if ub[t] <= _NONESSENTIAL_UB_RATIO * m]
         eset = [t for t in tp if t not in set(cset)]
         if not cset or not eset:
             # No essential/non-essential split exists (single-term,
@@ -2723,7 +2622,7 @@ def _bm25_pruned_scored(
             StructType([qfield, *_DF_FIELDS, *extra]),
         )
         return _integer_term_scores(
-            _pruned_postings(snap, {r[1] for r in rows}, prefix_len, id_col),
+            _pruned_postings(snap, {r[1] for r in rows}),
             table,
             id_col,
             extra=(qcol, *(f.name for f in extra)),
@@ -2807,11 +2706,7 @@ def search_bm25_topk_pruned(
     spark,
     path: str,
     query_terms: tuple[str, ...],
-    id_col: str = "doc_id",
     k: int = 10,
-    prefix_len: int | None = None,
-    as_of_batch: int | None = None,
-    nonessential_ub_ratio: float = 0.5,
     _diag: dict | None = None,
 ) -> DataFrame:
     """MaxScore-pruned BM25 top-k for ONE query — bit-identical output
@@ -2828,14 +2723,13 @@ def search_bm25_topk_pruned(
     (``c_rows_total``) against those the pruned plan scores
     (``c_rows_scored``) — an extra aggregate job, so the production
     path passes no ``_diag``."""
-    snap = as_snapshot(spark, path, as_of_batch)
-    _mtl, prefix_len = _probe_meta(snap, prefix_len, "search_bm25_topk_pruned")
+    snap = as_snapshot(spark, path)
     rec: dict = {}
     full = _bm25_pruned_scored(
-        snap, [(0, t) for t in dict.fromkeys(query_terms)],
-        _ONE_QUERY, id_col, k, prefix_len, nonessential_ub_ratio, rec,
-        count_rows=_diag is not None,
+        snap, [(0, t) for t in dict.fromkeys(query_terms)], _ONE_QUERY, k,
+        rec, count_rows=_diag is not None,
     )
+    id_col = _doc_id(snap)
     if _diag is not None:
         pruned = "0" in rec.get("valid", ())
         _diag["mode"] = "pruned" if pruned else "exhaustive"
@@ -2855,11 +2749,8 @@ def search_bm25_proximity_topk(
     spark,
     path: str,
     terms: tuple[str, ...],
-    id_col: str = "doc_id",
     k: int = 10,
     boost_scale: int = 1_000_000,
-    prefix_len: int | None = None,
-    as_of_batch: int | None = None,
     max_positions_per_term: int = 512,
 ) -> DataFrame:
     """Proximity-boosted BM25 ranking — Lucene's sloppy-phrase
@@ -2884,7 +2775,7 @@ def search_bm25_proximity_topk(
     comes from the bounded dictionary collect (the single-scan probe
     discipline); tombstones are honored like every probe.
 
-    Output: (id_col, n_terms, bm25_scaled, boost_scaled,
+    Output: (doc id, n_terms, bm25_scaled, boost_scaled,
     score_scaled, rank), top-k by boosted score desc / id asc via
     orderBy+limit (TakeOrderedAndProject). Raises on non-positional
     stores, duplicate/short terms, or arity outside 2-16
@@ -2893,20 +2784,21 @@ def search_bm25_proximity_topk(
     sweep only — an IO/precision knob for term-stuffed documents;
     BM25 always sees every row."""
     caller = "search_bm25_proximity_topk"
-    snap = as_snapshot(spark, path, as_of_batch)
-    mtl, prefix_len = _positional_meta(snap, prefix_len, caller)
+    snap = as_snapshot(spark, path)
+    mtl, _pl = _positional_meta(snap, caller)
+    id_col = _doc_id(snap)
     _check_span_terms(caller, terms)
     _reject_short(caller, terms, mtl)
     tlist = sorted(terms)
     n = len(tlist)
     nd, sdl = _store_totals(snap)
-    present = _collect_term_stats(snap, tlist, prefix_len)
+    present = _collect_term_stats(snap, tlist)
     dfreq = _local_frame(
         spark,
         [(t, present[t][0], nd, sdl) for t in tlist if t in present],
         StructType(_DF_FIELDS),
     )
-    p = _pruned_postings(snap, present, prefix_len, id_col)
+    p = _pruned_postings(snap, present)
     scored = _integer_term_scores(p, dfreq, id_col, extra=("pos",))
     by_doc = scored.groupBy(id_col).agg(
         F.count("*").cast("long").alias("n_terms"),
@@ -2949,12 +2841,9 @@ def bm25_term_snippets(
     docs: DataFrame,
     path: str,
     terms: tuple[str, ...],
-    id_col: str = "doc_id",
     text_col: str = "text",
     k: int = 10,
     window: int = 3,
-    prefix_len: int | None = None,
-    as_of_batch: int | None = None,
 ) -> DataFrame:
     """Term-hit highlighting for BM25 results — cp07's twin for
     non-phrase queries (r11 judge item #5), i.e. what a search-
@@ -2970,20 +2859,20 @@ def bm25_term_snippets(
     slices context map-side from the documents scan. One row per
     (document, matched term).
 
-    Output: (id_col, rank, score_scaled, term, pos, snip_start,
-    snip_end, snippet) — ``pos`` is the term's first occurrence
-    (1-based raw-token position, the store's position convention).
-    Raises on non-positional stores (no positions to locate hits)."""
+    ``docs`` carries the store's id column. Output: (doc id, rank,
+    score_scaled, term, pos, snip_start, snip_end, snippet) — ``pos``
+    is the term's first occurrence (1-based raw-token position, the
+    store's position convention). Raises on non-positional stores (no
+    positions to locate hits)."""
     from docker_etl_spark.operators.corpus import extract_snippets_at
 
     spark = docs.sparkSession
     caller = "bm25_term_snippets"
-    snap = as_snapshot(spark, path, as_of_batch)
-    _mtl, prefix_len = _positional_meta(snap, prefix_len, caller)
-    top = search_bm25_topk(
-        spark, snap, terms, id_col=id_col, k=k, prefix_len=prefix_len,
-    ).localCheckpoint()
-    p = _pruned_postings(snap, terms, prefix_len, id_col)
+    snap = as_snapshot(spark, path)
+    _positional_meta(snap, caller)
+    id_col = _doc_id(snap)
+    top = search_bm25_topk(spark, snap, terms, k=k).localCheckpoint()
+    p = _pruned_postings(snap, terms)
     hits = p.join(
         F.broadcast(top.select(id_col)), id_col, "left_semi"
     ).select(
@@ -3009,15 +2898,9 @@ def bm25_term_snippets(
 def search_bm25_topk_batch_pruned(
     queries: DataFrame,
     path: str,
-    query_id_col: str = "query_id",
-    terms_col: str = "terms",
-    id_col: str = "doc_id",
     k: int = 10,
-    prefix_len: int | None = None,
-    as_of_batch: int | None = None,
     max_query_terms: int = 4096,
     max_queries: int | None = 4096,
-    nonessential_ub_ratio: float = 0.5,
     _diag: dict | None = None,
 ) -> DataFrame:
     """MaxScore-pruned BATCH retrieval — bit-identical output to
@@ -3035,7 +2918,7 @@ def search_bm25_topk_batch_pruned(
        term set; each term's exact-integer score CEILING is
        :func:`_ts_upper_bound` (the stored ``max_tf`` at dl = 1).
        Within each query, terms whose ceiling is at most
-       ``nonessential_ub_ratio ×`` its largest form the NON-ESSENTIAL
+       :data:`_NONESSENTIAL_UB_RATIO` × its largest form the NON-ESSENTIAL
        set C (typically the common/stopword-grade terms); the rest
        are ESSENTIAL (E).
     2. Phase 1 is ONE pruned scan over the union of all queries'
@@ -3069,19 +2952,16 @@ def search_bm25_topk_batch_pruned(
     once into the driver (:func:`_query_set`). ``_diag`` (a dict)
     records the per-query record for tests/ops without launching a
     job."""
-    snap = as_snapshot(queries.sparkSession, path, as_of_batch)
-    _mtl, prefix_len = _probe_meta(
-        snap, prefix_len, "search_bm25_topk_batch_pruned"
-    )
+    snap = as_snapshot(queries.sparkSession, path)
     qfield, rows = _query_set(
-        queries, query_id_col, [terms_col], "search_bm25_topk_batch_pruned",
-        max_queries, max_query_terms,
+        queries, ["terms"], "search_bm25_topk_batch_pruned", max_queries,
+        max_query_terms,
     )
     pairs = list(dict.fromkeys((q, t) for q, ts in rows for t in ts or ()))
     full = _bm25_pruned_scored(
-        snap, pairs, qfield, id_col, k, prefix_len, nonessential_ub_ratio,
-        _diag if _diag is not None else {},
+        snap, pairs, qfield, k, _diag if _diag is not None else {}
     )
+    id_col = _doc_id(snap)
     return _top_k(
-        full, [F.desc("score_scaled"), F.asc(id_col)], k, by=query_id_col
-    ).select(query_id_col, id_col, "n_terms", "score_scaled", "rank")
+        full, [F.desc("score_scaled"), F.asc(id_col)], k, by="query_id"
+    ).select("query_id", id_col, "n_terms", "score_scaled", "rank")

@@ -2483,26 +2483,22 @@ def delete_from_ivfpq_store(
 
 
 def load_ivfpq_store(
-    spark,
-    path,
-    as_of_batch: int | None = None,
-    apply_deletes: bool = True,
+    spark, path, apply_deletes: bool = True
 ) -> tuple[DataFrame, list[list[int]], list[list[list[int]]], dict]:
     """Reload a :func:`write_ivfpq_store` index →
     (index frame (id, __cell, pq_code), coarse, codebooks, meta).
 
     ``path`` is a store path or a
-    :class:`~docker_etl_spark.sources.stores.StoreSnapshot`. The
+    :class:`~docker_etl_spark.sources.stores.StoreSnapshot` (a snapshot
+    opened at a batch reads the store as of that batch). The
     quantizer sidecar is a bounded collect (n_cells·dim +
     m·k·(dim/m) integer rows); the codes frame is the lazily-scanned
     store, read with its declared schema — cell pruning happens at
-    probe time (``ivfpq_topk(..., prune_index_partitions=True)``), and
-    ``as_of_batch`` is the partition-pruned snapshot read
-    (``__batch_id <= N``, the load_cms_store convention).
+    probe time (``ivfpq_topk(..., prune_index_partitions=True)``).
     """
     from docker_etl_spark.sources.stores import as_snapshot, read_sidecar_rows
 
-    snap = as_snapshot(spark, path, as_of_batch)
+    snap = as_snapshot(spark, path)
     q = read_sidecar_rows(spark, snap.path + "/quantizer")
     meta_row = next(r for r in q if r["part"] == "meta")
     n_cells, m, k, d, quant_scale = (int(x) for x in meta_row["vals"])
@@ -2694,12 +2690,7 @@ def ivfpq_topk_refined(
     )
 
 
-def compact_ivfpq_store(
-    spark,
-    path: str,
-    up_to_batch: int,
-    target_rows_per_file: int = 1_000_000,
-) -> dict:
+def compact_ivfpq_store(spark, path: str, up_to_batch: int) -> dict:
     """Fold an IVF-PQ store's batch deltas with ``__batch_id <=
     up_to_batch`` into the base partition (``__batch_id = -1``) and
     right-size the files — after N streaming appends a cell probe
@@ -2715,7 +2706,7 @@ def compact_ivfpq_store(
     against concurrent ingest. Local stores only: any other path
     raises ``ValueError`` before anything is written.
 
-    Trade (explicit): ``as_of_batch`` snapshot reads remain exact
+    Trade (explicit): snapshots opened at a batch remain exact
     for horizons >= ``up_to_batch``; below it the per-batch
     granularity is intentionally collapsed into the base — pick the
     horizon as "older than any snapshot you still replay AND any
@@ -2750,7 +2741,6 @@ def compact_ivfpq_store(
         spark,
         path + "/codes",
         ("__cell", "__batch_id"),
-        target_rows_per_file=target_rows_per_file,
         owner=owner,
         transform=lambda df: fold_below_horizon(
             df,

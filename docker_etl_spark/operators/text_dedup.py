@@ -683,9 +683,7 @@ def _ledger_schema(path: str) -> str:
     )
 
 
-def apply_signature_deletes(
-    spark, path: str, up_to_batch: int, target_rows_per_file: int = 1_000_000
-) -> dict | None:
+def apply_signature_deletes(spark, path: str, up_to_batch: int) -> dict | None:
     """Physically drop the ledger's tombstones at or below
     ``up_to_batch`` through the shared lifecycle: record the horizon
     FIRST, rewrite the band layout without the pinned ids through the
@@ -710,7 +708,7 @@ def apply_signature_deletes(
         return None
     res = compact_partitioned_store(
         spark, path, ("band",), _ledger_schema(path),
-        target_rows_per_file=target_rows_per_file, owner=owner,
+        owner=owner,
         transform=lambda df: drop_tombstoned(df, ids, df.columns[0]),
     )
     clear_tombstones(spark, root, up_to_batch, owner)

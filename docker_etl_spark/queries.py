@@ -2441,15 +2441,10 @@ def s05_json_lines_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     The aggregate over the roundtripped data must match the oracle
     over the original parquet — i.e. the sink/source pair is
     lossless for these types."""
-    import os
-    import tempfile
-
     from docker_etl_spark.sources.io import write_table
 
     n = load_table(spark, sf_dir, "nation")
-    path = os.path.join(
-        tempfile.gettempdir(), f"docker_etl_spark_s05_{os.getpid()}"
-    )
+    path = _x90_store_path("s05", sf_dir)
     write_table(n, path, mode="overwrite", fmt="json")
     back = spark.read.schema(n.schema).json(path)
     return back.groupBy("n_regionkey").agg(
@@ -2472,13 +2467,8 @@ def s07_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     104-112) and the Tranco CSV fetch (etl/siterank.py:138-150).
     Tab separator, header off, explicit schema — inference is never
     trusted at scale."""
-    import os
-    import tempfile
-
     s = load_table(spark, sf_dir, "supplier")
-    path = os.path.join(
-        tempfile.gettempdir(), f"docker_etl_spark_s07_{os.getpid()}"
-    )
+    path = _x90_store_path("s07", sf_dir)
     s.write.mode("overwrite").option("sep", "\t").option("header", "false").csv(path)
     back = spark.read.schema(s.schema).option("sep", "\t").csv(path)
     return back.groupBy("s_nationkey").agg(
@@ -10027,15 +10017,29 @@ def x89_theil_sen_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
+#: the store paths this process has handed out, each removed at exit
+_STORE_PATHS: set[str] = set()
+
+
 def _x90_store_path(tag: str, sf_dir: str) -> str:
+    """The pid-keyed temp path a registry query writes its store (or
+    roundtrip files) to. The query returns a lazy frame that still
+    reads them, so they cannot go at return: the process removes the
+    path at exit."""
+    import atexit
     import hashlib
     import os
+    import shutil
     import tempfile
 
     h = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    return os.path.join(
+    path = os.path.join(
         tempfile.gettempdir(), f"docker_etl_spark_{tag}_{os.getpid()}_{h}"
     )
+    if path not in _STORE_PATHS:
+        _STORE_PATHS.add(path)
+        atexit.register(shutil.rmtree, path, ignore_errors=True)
+    return path
 
 
 @register("x90_ivfpq_store_probe", oracle=_X82_ORACLE)
@@ -10560,7 +10564,7 @@ def x96_bm25_index_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = _x90_store_path("x96", sf_dir)
     shutil.rmtree(path, ignore_errors=True)
     write_search_index(postings, stats, path)
-    return search_bm25_topk(spark, path, _X25_TERMS, id_col="doc_id", k=10)
+    return search_bm25_topk(spark, path, _X25_TERMS, k=10)
 
 
 @register("x97_bm25_index_append", oracle=_X96_ORACLE)
@@ -10586,7 +10590,7 @@ def x97_bm25_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
         d.filter(F.col("doc_id") % 2 == 1), path, batch_id=1,
         text_col="text", id_col="doc_id",
     )
-    return search_bm25_topk(spark, path, _X25_TERMS, id_col="doc_id", k=10)
+    return search_bm25_topk(spark, path, _X25_TERMS, k=10)
 
 
 # ---------------------------------------------------------------------------
@@ -11661,7 +11665,7 @@ def cp05_pmi_expanded_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
         wait([partners_f, store_f], return_when=FIRST_EXCEPTION)
         partners, path = partners_f.result(), store_f.result()
     expanded = tuple(sorted(set(_CP05_BASE) | {r["w2"] for r in partners}))
-    return search_bm25_topk(spark, path, expanded, id_col="doc_id", k=10)
+    return search_bm25_topk(spark, path, expanded, k=10)
 
 
 # ---------------------------------------------------------------------------

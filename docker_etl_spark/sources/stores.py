@@ -66,7 +66,10 @@ from the frame it writes and records them in ``{path}/meta``, so a
 read is ``spark.read.schema(...).parquet(...)`` — no footer read and
 no schema-inference job on either arm. Partition columns are pinned
 to one type (``__pfx`` string, ``__batch_id`` and ``__cell`` int)
-whatever their directory values look like.
+whatever their directory values look like. The snapshot is also the
+only way to time-travel: ``open_store(spark, path, as_of_batch=N)``
+reads the store as it stood after batch N, and every probe and load
+takes that snapshot in place of the path.
 
 COMPACTION IS LOCAL-ONLY. The two-rename swap needs a POSIX rename;
 :func:`compact_partitioned_store`, :func:`compact_sidecar_partitioned`
@@ -910,10 +913,10 @@ class StoreSnapshot:
     path: str
     meta: dict  # build parameters (none for IVF-PQ)
     horizon: int | None
-    as_of_batch: int | None
     batches: dict  # directory → committed __batch_id values, ascending
-    #: the newest batch every read sees: ``as_of_batch``, else the
-    #: newest batch committed when the snapshot was taken
+    #: the newest batch every read sees: :func:`open_store`'s
+    #: ``as_of_batch``, else the newest batch committed when the
+    #: snapshot was taken
     upto: int | None
     tombstones: tuple | None  # tombstone_ids: the pending ids
     schemas: dict  # data directory → read schema
@@ -968,25 +971,18 @@ def open_store(
         (b[-1] for b in batches.values() if b), default=None
     )
     return StoreSnapshot(
-        spark, path, meta, read_horizon(spark, path), as_of_batch, batches,
-        upto, tombstone_ids(spark, path, as_of_batch), schemas,
+        spark, path, meta, read_horizon(spark, path), batches, upto,
+        tombstone_ids(spark, path, as_of_batch), schemas,
     )
 
 
-def as_snapshot(spark, store, as_of_batch: int | None = None) -> StoreSnapshot:
+def as_snapshot(spark, store) -> StoreSnapshot:
     """``store`` when it already is a :class:`StoreSnapshot` (a query
     passing one snapshot to each of its probes), else
-    :func:`open_store` of the path. A snapshot fixes its own
-    ``as_of_batch``; a different explicit one raises."""
-    if not isinstance(store, StoreSnapshot):
-        return open_store(spark, store, as_of_batch)
-    if as_of_batch not in (None, store.as_of_batch):
-        raise ValueError(
-            f"as_of_batch={as_of_batch} conflicts with the snapshot's "
-            f"as_of_batch={store.as_of_batch} — open a snapshot at that "
-            "batch instead"
-        )
-    return store
+    :func:`open_store` of the path."""
+    if isinstance(store, StoreSnapshot):
+        return store
+    return open_store(spark, store)
 
 
 def fold_below_horizon(
@@ -1157,12 +1153,15 @@ def compact_sidecar_partitioned(
     }
 
 
+#: The most rows a compaction writes per file (``maxRecordsPerFile``).
+_TARGET_ROWS_PER_FILE = 1_000_000
+
+
 def compact_partitioned_store(
     spark,
     path: str,
     partition_cols: tuple[str, ...],
     schema: StructType | str,
-    target_rows_per_file: int = 1_000_000,
     owner: str | None = None,
     transform=None,
     lock_path: str | None = None,
@@ -1220,7 +1219,7 @@ def compact_partitioned_store(
             write_repartition(df, partition_cols)
             .write.mode("overwrite")
             .partitionBy(*partition_cols)
-            .option("maxRecordsPerFile", target_rows_per_file)
+            .option("maxRecordsPerFile", _TARGET_ROWS_PER_FILE)
             .parquet(tmp)
         )
         _swap_compacted(local, tmp, bak)

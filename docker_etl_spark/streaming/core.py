@@ -766,7 +766,7 @@ def ivfpq_index_stream(
     partition set is a deterministic function of its rows). The
     index must have been built and persisted once (the train step);
     this sink is the ingest half. Probes read the merged store
-    (:func:`load_ivfpq_store`, optionally ``as_of_batch``) with cell
+    (:func:`load_ivfpq_store`, optionally of a snapshot) with cell
     partition pruning — per-batch ingest cost and probe cost are
     both independent of how many batches have landed.
     """

@@ -804,6 +804,7 @@ def test_search_index_census_counts_and_asof(spark, tmp_path):
         search_index_census,
         write_search_index,
     )
+    from docker_etl_spark.sources.stores import open_store
 
     df = spark.createDataFrame(
         [
@@ -829,7 +830,9 @@ def test_search_index_census_counts_and_asof(spark, tmp_path):
         "max_dl": 3,
         "n_batches": 2,
     }
-    asof = search_index_census(spark, path, as_of_batch=0).collect()[0]
+    asof = search_index_census(
+        spark, open_store(spark, path, as_of_batch=0)
+    ).collect()[0]
     assert (asof["n_docs"], asof["n_postings"], asof["n_batches"]) == (2, 4, 1)
 
 

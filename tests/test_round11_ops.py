@@ -246,6 +246,7 @@ def test_dictionary_fold_matches_postings_across_lifecycle(spark, tmp_path):
         read_search_dictionary,
         write_search_index,
     )
+    from docker_etl_spark.sources.stores import open_store
 
     store = str(tmp_path / "dict")
     b0 = _docs(spark, [(1, "alpha beta alpha"), (2, "beta gamma")])
@@ -267,10 +268,10 @@ def test_dictionary_fold_matches_postings_across_lifecycle(spark, tmp_path):
             .collect()
         }
 
-    def dict_view(**kw):
+    def dict_view(src=store, **kw):
         return {
             r["term"]: (r["df"], r["sum_tf"], r["max_tf"])
-            for r in read_search_dictionary(spark, store, **kw).collect()
+            for r in read_search_dictionary(spark, src, **kw).collect()
         }
 
     truth = postings_truth()
@@ -280,7 +281,7 @@ def test_dictionary_fold_matches_postings_across_lifecycle(spark, tmp_path):
     b0_truth = {
         "alpha": (1, 2, 2), "beta": (2, 2, 1), "gamma": (1, 1, 1),
     }
-    assert dict_view(as_of_batch=0) == b0_truth
+    assert dict_view(open_store(spark, store, as_of_batch=0)) == b0_truth
     # compaction folds the deltas; the folded view is unchanged
     res = compact_search_index(spark, store, up_to_batch=1)
     assert "dict" in res

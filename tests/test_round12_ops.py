@@ -126,13 +126,14 @@ def test_delete_snapshot_read_replays_history(spark, tmp_path):
         delete_from_search_index,
         search_bm25_topk,
     )
+    from docker_etl_spark.sources.stores import open_store
 
     path = _store(spark, tmp_path)
     delete_from_search_index(spark, path, [2], batch_id=5)
     now = search_bm25_topk(spark, path, ("spark",), k=10).collect()
     assert 2 not in {r["doc_id"] for r in now}
     snap = search_bm25_topk(
-        spark, path, ("spark",), k=10, as_of_batch=1
+        spark, open_store(spark, path, as_of_batch=1), ("spark",), k=10
     ).collect()
     assert 2 in {r["doc_id"] for r in snap}
 

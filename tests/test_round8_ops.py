@@ -174,6 +174,7 @@ def test_search_index_prunes_prefix_partitions_and_is_idempotent(
         search_bm25_topk,
         write_search_index,
     )
+    from docker_etl_spark.sources.stores import open_store
 
     rows = [
         (1, "hash join window hash"),
@@ -222,7 +223,8 @@ def test_search_index_prunes_prefix_partitions_and_is_idempotent(
         map(
             tuple,
             search_bm25_topk(
-                spark, path, ("hash", "join"), k=10, as_of_batch=0
+                spark, open_store(spark, path, as_of_batch=0),
+                ("hash", "join"), k=10,
             ).collect(),
         )
     )
@@ -252,6 +254,7 @@ def test_compact_ivfpq_store_folds_deltas_and_preserves_reads(
         load_ivfpq_store,
         write_ivfpq_store,
     )
+    from docker_etl_spark.sources.stores import open_store
 
     df = _toy_vectors(spark, n=150, dim=8)
     base = df.filter(F.col("vec_id") < 50)
@@ -271,9 +274,9 @@ def test_compact_ivfpq_store_folds_deltas_and_preserves_reads(
     before_full = sorted(
         map(tuple, load_ivfpq_store(spark, store)[0].collect())
     )
-    before_asof1 = sorted(
-        map(tuple, load_ivfpq_store(spark, store, as_of_batch=1)[0].collect())
-    )
+    before_asof1 = sorted(map(tuple, load_ivfpq_store(
+        spark, open_store(spark, store, as_of_batch=1)
+    )[0].collect()))
     dirs_before = len(glob.glob(store + "/codes/__cell=*/__batch_id=*"))
     stats = compact_ivfpq_store(spark, store, up_to_batch=1)
     dirs_after = len(glob.glob(store + "/codes/__cell=*/__batch_id=*"))
@@ -282,9 +285,9 @@ def test_compact_ivfpq_store_folds_deltas_and_preserves_reads(
     after_full = sorted(
         map(tuple, load_ivfpq_store(spark, store)[0].collect())
     )
-    after_asof1 = sorted(
-        map(tuple, load_ivfpq_store(spark, store, as_of_batch=1)[0].collect())
-    )
+    after_asof1 = sorted(map(tuple, load_ivfpq_store(
+        spark, open_store(spark, store, as_of_batch=1)
+    )[0].collect()))
     assert after_full == before_full
     assert after_asof1 == before_asof1
     # appends keep working after the swap
@@ -468,6 +471,7 @@ def test_ivfpq_stream_matches_batch_append(spark, tmp_path):
         load_ivfpq_store,
         write_ivfpq_store,
     )
+    from docker_etl_spark.sources.stores import open_store
     from docker_etl_spark.streaming import ivfpq_index_stream
 
     df = _toy_vectors(spark, n=150, dim=8)
@@ -488,7 +492,9 @@ def test_ivfpq_stream_matches_batch_append(spark, tmp_path):
     assert idx.count() == 150
     assert c2 == coarse and b2books == books
     # snapshot read as of batch 1 excludes batch 2's rows
-    idx1, *_ = load_ivfpq_store(spark, store, as_of_batch=1)
+    idx1, *_ = load_ivfpq_store(
+        spark, open_store(spark, store, as_of_batch=1)
+    )
     assert idx1.count() == 100
 
 
@@ -694,6 +700,7 @@ def test_ivfpq_append_encodes_without_retraining_and_is_idempotent(
         load_ivfpq_store,
         write_ivfpq_store,
     )
+    from docker_etl_spark.sources.stores import open_store
 
     df = _toy_vectors(spark, n=120, dim=8)
     first = df.filter(F.col("vec_id") < 60)
@@ -721,7 +728,9 @@ def test_ivfpq_append_encodes_without_retraining_and_is_idempotent(
     idx_after, *_ = load_ivfpq_store(spark, path)
     assert sorted(map(tuple, idx_after.collect())) == before
     # as-of-batch snapshot read: batch 0 only
-    idx_b0, *_ = load_ivfpq_store(spark, path, as_of_batch=0)
+    idx_b0, *_ = load_ivfpq_store(
+        spark, open_store(spark, path, as_of_batch=0)
+    )
     assert idx_b0.count() == 60
 
 

@@ -81,9 +81,9 @@ def test_search_index_meta_sidecar_defaults_and_rejects_conflicts(
     spark, tmp_path
 ):
     """Non-default build parameters persist in the meta sidecar;
-    probes/appends default from it and REJECT conflicting explicit
-    values (r8 ADVICE: a probe with the wrong prefix_len silently
-    misses every stored directory)."""
+    probes read them from it, appends default from it and REJECT
+    conflicting explicit values (r8 ADVICE: a wrong prefix_len
+    silently misses every stored directory)."""
     from docker_etl_spark.operators.search import (
         append_search_index,
         build_postings,
@@ -103,7 +103,7 @@ def test_search_index_meta_sidecar_defaults_and_rejects_conflicts(
         "prefix_len": 1, "min_token_len": 5, "positional": False,
         "has_dict": True,
     }
-    # probe with NO prefix_len: resolves 1 from the sidecar and finds docs
+    # the probe reads prefix_len=1 from the sidecar and finds docs
     out = {
         r["doc_id"]: r
         for r in search_bm25_topk(
@@ -111,9 +111,6 @@ def test_search_index_meta_sidecar_defaults_and_rejects_conflicts(
         ).collect()
     }
     assert set(out) == {1, 2, 3}
-    # probe with a conflicting explicit prefix_len raises
-    with pytest.raises(ValueError, match="prefix_len=2 conflicts"):
-        search_bm25_topk(spark, path, ("window",), k=10, prefix_len=2)
     # append with conflicting explicit params raises; default params resolve
     with pytest.raises(ValueError, match="min_token_len=3 conflicts"):
         append_search_index(
@@ -234,6 +231,7 @@ def test_compact_search_index_folds_and_preserves_reads(spark, tmp_path):
         search_bm25_topk,
         write_search_index,
     )
+    from docker_etl_spark.sources.stores import open_store
 
     rows = [
         (i, ["hash join window", "vector probe scan", "join join hash",
@@ -254,7 +252,8 @@ def test_compact_search_index_folds_and_preserves_reads(spark, tmp_path):
         map(
             tuple,
             search_bm25_topk(
-                spark, path, ("hash", "join"), k=30, as_of_batch=1
+                spark, open_store(spark, path, as_of_batch=1),
+                ("hash", "join"), k=30,
             ).collect(),
         )
     )
@@ -273,7 +272,8 @@ def test_compact_search_index_folds_and_preserves_reads(spark, tmp_path):
         map(
             tuple,
             search_bm25_topk(
-                spark, path, ("hash", "join"), k=30, as_of_batch=1
+                spark, open_store(spark, path, as_of_batch=1),
+                ("hash", "join"), k=30,
             ).collect(),
         )
     )
@@ -552,6 +552,7 @@ def test_search_bm25_topk_batch_as_of_snapshot(spark, tmp_path):
         search_bm25_topk_batch,
         write_search_index,
     )
+    from docker_etl_spark.sources.stores import open_store
 
     rows = [
         (i, ["hash join window", "vector probe scan", "join join hash",
@@ -577,7 +578,7 @@ def test_search_bm25_topk_batch_as_of_snapshot(spark, tmp_path):
         map(
             tuple,
             search_bm25_topk_batch(
-                queries, path, k=20, as_of_batch=0
+                queries, open_store(spark, path, as_of_batch=0), k=20
             ).collect(),
         )
     )

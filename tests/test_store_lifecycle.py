@@ -404,3 +404,30 @@ def test_spark_dict_fold_matches_driver_fold(
         # "shuffle" only in doc 3
         assert ("spark", 3, 4, 2) in direct
         assert ("shuffle", 1, 1, 1) in direct
+
+
+def test_registry_store_paths_are_removed_at_exit(tmp_path):
+    """A store-backed registry query's store outlives the query (the
+    frame it returns is lazy) but not the process that made it."""
+    import subprocess
+    import sys
+    from pathlib import Path
+
+    code = (
+        "import os\n"
+        "from docker_etl_spark.queries import _x90_store_path\n"
+        "p = _x90_store_path('atexit', 'sf')\n"
+        "os.makedirs(os.path.join(p, 'postings'))\n"
+        "print(p)\n"
+    )
+    out = subprocess.run(
+        [sys.executable, "-c", code],
+        cwd=Path(__file__).resolve().parents[1],
+        env={**os.environ, "TMPDIR": str(tmp_path)},
+        capture_output=True,
+        text=True,
+        check=True,
+    )
+    path = out.stdout.strip().splitlines()[-1]
+    assert path.startswith(str(tmp_path))
+    assert not os.path.exists(path)

@@ -371,14 +371,57 @@ def test_shared_snapshot_ignores_a_later_append(spark, tmp_path):
     assert after != before and after[2][1] == 8  # n_docs
 
 
-def test_snapshot_fixes_its_own_as_of_batch(spark, tmp_path):
-    from docker_etl_spark.operators.search import search_bm25_topk
-    from docker_etl_spark.sources.stores import open_store
+def test_probes_return_the_stores_own_id_column(spark, tmp_path):
+    """A store built with a non-``doc_id`` id column: each probe names
+    the column from the snapshot's postings schema, with no id
+    argument, returns it and drops its tombstoned ids by it."""
+    from docker_etl_spark.operators.search import (
+        bm25_term_snippets,
+        build_positional_postings,
+        delete_from_search_index,
+        fuzzy_term_suggest,
+        phrase_search_topk,
+        proximity_search_topk,
+        search_bm25_topk,
+        search_bm25_topk_batch,
+        search_bm25_topk_pruned,
+        search_index_census,
+        write_search_index,
+    )
 
-    path = _search_store(spark, str(tmp_path / "asof"))
-    with pytest.raises(ValueError, match="as_of_batch"):
-        search_bm25_topk(spark, open_store(spark, path), ("spark",),
-                         as_of_batch=3)
+    docs = spark.createDataFrame(_ROWS, "url_id long, text string")
+    path = str(tmp_path / "url")
+    p, s = build_positional_postings(docs, "text", "url_id")
+    write_search_index(p, s, path, batch_id=0, positional=True)
+    delete_from_search_index(spark, path, [6], batch_id=1, id_col="url_id")
+    queries = spark.createDataFrame(
+        [(1, ["spark", "join"])], "query_id int, terms array<string>"
+    )
+    probes = {
+        "bm25": search_bm25_topk(spark, path, ("spark", "join")),
+        "batch": search_bm25_topk_batch(queries, path),
+        "pruned": search_bm25_topk_pruned(spark, path, ("spark", "join")),
+        "phrase": phrase_search_topk(spark, path, ("join", "join")),
+        "proximity": proximity_search_topk(
+            spark, path, ("join", "window"), slop=1
+        ),
+        "snippets": bm25_term_snippets(docs, path, ("sentinel",)),
+    }
+    got = {
+        name: {r["url_id"] for r in df.collect()}
+        for name, df in probes.items()
+    }
+    assert got == {
+        "bm25": {1, 2, 3, 4, 5},
+        "batch": {1, 2, 3, 4, 5},
+        "pruned": {1, 2, 3, 4, 5},
+        "phrase": {1},
+        "proximity": {1, 4},
+        "snippets": {5},
+    }
+    assert search_index_census(spark, path).collect()[0]["n_docs"] == 5
+    assert [r["term"] for r in fuzzy_term_suggest(
+        spark, path, "sparc").collect()] == ["spark"]
 
 
 def test_batch_id_must_fit_the_declared_int(spark, tmp_path):

@@ -132,14 +132,15 @@ def build_postings(
     row per (document, distinct indexed term); dl is the document's
     indexed-token count (every posting of a doc carries it, so
     probes never re-read the corpus). stats_delta: 1 row
-    (n_docs, sum_dl) — mergeable by sum across append batches.
+    (n_docs, sum_dl, n_searchable, max_dl) — mergeable by sum (max
+    for max_dl) across append batches (:func:`_stats_aggs`).
 
     The postings frame additionally carries an OBSERVATION of the
-    same two stats aggregates (``_stats_observation``, a
+    same stats aggregates (``_stats_observation``, a
     CollectMetrics node over the tokenized docs): collecting the
     stats frame separately costs a SECOND full tokenize pass over
     the batch, while the observation yields the identical
-    (n_docs, sum_dl) as a side effect of whatever action evaluates
+    row as a side effect of whatever action evaluates
     the postings — :func:`write_search_index` reads it after the
     postings write, so a store write tokenizes the batch exactly
     once (guide §1.2: don't compute things twice). Stats stays a
@@ -169,10 +170,7 @@ def build_postings(
         F.col("p.tf").alias("tf"),
         "dl",
     )
-    stats = docs.agg(
-        F.count("*").cast("long").alias("n_docs"),
-        F.sum("dl").cast("long").alias("sum_dl"),
-    )
+    stats = docs.agg(*_stats_aggs())
     postings._stats_observation = obs
     return postings, stats
 
@@ -267,10 +265,7 @@ def build_positional_postings(
             F.col("p.pos").alias("pos"),
         )
     )
-    stats = docs.agg(
-        F.count("*").cast("long").alias("n_docs"),
-        F.sum("dl").cast("long").alias("sum_dl"),
-    )
+    stats = docs.agg(*_stats_aggs())
     postings._stats_observation = obs
     return postings, stats
 
@@ -315,20 +310,29 @@ def _exploded_term_tf(docs: DataFrame, id_col: str) -> DataFrame:
     return d3.select(F.col(id_col), "dl", F.explode(pairs).alias("p"))
 
 
+def _stats_aggs() -> list:
+    """A batch's stats delta over its tokenized docs (one row each, dl
+    its indexed-token count), as the columns of
+    :data:`~docker_etl_spark.sources.stores.STATS_FIELDS`: n_docs,
+    sum_dl, n_searchable (documents with dl > 0, i.e. with a posting)
+    and max_dl, the last two the census's doc-side facts. An empty
+    batch reads 0 on each."""
+    dl = F.col("dl")
+    return [
+        F.count(F.lit(1)).cast("long").alias("n_docs"),
+        F.coalesce(F.sum(dl), F.lit(0)).cast("long").alias("sum_dl"),
+        F.count(F.when(dl > 0, 1)).cast("long").alias("n_searchable"),
+        F.coalesce(F.max(dl), F.lit(0)).cast("long").alias("max_dl"),
+    ]
+
+
 def _observe_stats(docs: DataFrame):
-    """Attach a CollectMetrics observation of (n_docs, sum_dl) to the
-    tokenized-docs frame — see :func:`build_postings`."""
+    """Attach a CollectMetrics observation of :func:`_stats_aggs` to
+    the tokenized-docs frame — see :func:`build_postings`."""
     from pyspark.sql import Observation
 
     obs = Observation()
-    return (
-        docs.observe(
-            obs,
-            F.count(F.lit(1)).cast("long").alias("n_docs"),
-            F.coalesce(F.sum("dl"), F.lit(0)).cast("long").alias("sum_dl"),
-        ),
-        obs,
-    )
+    return docs.observe(obs, *_stats_aggs()), obs
 
 
 def read_search_index_meta(spark, path: str) -> dict | None:
@@ -552,13 +556,19 @@ def write_search_index(
     their folded copies, double-counting postings and stats
     (r9 ADVICE). Redelivery above the horizon stays idempotent.
 
-    STATS SOURCE: when ``postings`` carries the builder's
-    ``_stats_observation`` (every :func:`build_postings` /
-    :func:`build_positional_postings` frame does), the stats delta is
-    read from that observation and the ``stats`` argument is IGNORED
-    — pass the builder's own stats frame, or postings built elsewhere
-    (no observation) so that ``stats`` is collected."""
+    STATS CONTRACT: each batch lands one ``{path}/stats`` row of four
+    bigints — n_docs, sum_dl, n_searchable (documents with dl > 0) and
+    max_dl (0 for an empty batch); :func:`search_index_census` folds
+    the last two instead of scanning the postings. When ``postings``
+    carries the builder's ``_stats_observation`` (every
+    :func:`build_postings` / :func:`build_positional_postings` frame
+    does), the row is read from that observation and the ``stats``
+    argument is IGNORED — pass the builder's own stats frame, or
+    postings built elsewhere (no observation) so that ``stats`` is
+    collected. A ``stats`` frame without the n_searchable and max_dl
+    columns writes them null, and the census then scans."""
     from docker_etl_spark.sources.stores import (
+        STATS_FIELDS,
         read_schema,
         read_store_meta,
         reject_at_or_below_horizon,
@@ -625,24 +635,29 @@ def write_search_index(
         # The stats delta is 1 row by construction (one aggregate over
         # the batch). When the postings carry the builder's stats
         # OBSERVATION (build_postings attaches it), the identical
-        # (n_docs, sum_dl) was collected as a side effect of the
-        # postings write above — no second tokenize pass over the
-        # batch. Frames built elsewhere collect the stats aggregate.
-        # Either way the row lands under its __batch_id partition as a
-        # bounded sidecar write.
+        # row was collected as a side effect of the postings write
+        # above — no second tokenize pass over the batch. Frames built
+        # elsewhere collect the stats aggregate. Either way the row
+        # lands under its __batch_id partition as a bounded sidecar
+        # write.
+        names = [n for n, _t in STATS_FIELDS]
         obs = getattr(postings, "_stats_observation", None)
         if obs is not None:
             m = obs.get
-            srow = [(int(m["n_docs"]), int(m["sum_dl"]))]
+            srow = [tuple(int(m[n]) for n in names)]
         else:
             srow = stats.select(
-                F.col("n_docs").cast("long"), F.col("sum_dl").cast("long")
+                *(
+                    F.col(n).cast("long") if n in stats.columns
+                    else F.lit(None).cast("long").alias(n)
+                    for n in names
+                )
             ).collect()
         write_sidecar_rows(
             spark,
             path + "/stats",
             [tuple(r) for r in srow],
-            [("n_docs", "int64"), ("sum_dl", "int64")],
+            STATS_FIELDS,
             partition={"__batch_id": bid},
         )
         # Dictionary delta (the Lucene terms-dictionary analogue):
@@ -752,20 +767,16 @@ def append_search_index(
 
 
 def _store_totals(snap: StoreSnapshot) -> tuple[int, int]:
-    """(Σ n_docs, Σ sum_dl) across the stats sidecar's batch deltas in
-    the snapshot — one bounded row per batch by construction, summed
-    on the driver."""
-    from docker_etl_spark.sources.stores import read_sidecar_rows
-
-    sel = [
-        r
-        for r in read_sidecar_rows(snap.spark, snap.path + "/stats")
-        if snap.upto is None or int(r["__batch_id"]) <= snap.upto
-    ]
+    """(Σ n_docs, Σ sum_dl) across the snapshot's stats rows — one per
+    batch, read once by ``open_store`` and summed on the driver."""
     return (
-        sum(int(r["n_docs"] or 0) for r in sel),
-        sum(int(r["sum_dl"] or 0) for r in sel),
+        sum(int(r["n_docs"] or 0) for r in snap.stats),
+        sum(int(r["sum_dl"] or 0) for r in snap.stats),
     )
+
+
+#: The most dictionary rows a read folds on the driver.
+_DICT_DRIVER_ROWS = 100_000
 
 
 def _collect_term_stats(
@@ -792,7 +803,7 @@ def _collect_term_stats(
     raw = None
     if snap.batches["dict"]:
         raw = read_sidecar_rows(
-            snap.spark, snap.path + "/dict", max_rows=100_000,
+            snap.spark, snap.path + "/dict", max_rows=_DICT_DRIVER_ROWS,
             partition_filter={"__pfx": set(prefixes)},
             schema=snap.schemas["dict"],
         )
@@ -1746,44 +1757,124 @@ def bm25_topk_batch_from_postings(
     ).select("query_id", id_col, "n_terms", "score_scaled", "rank")
 
 
+#: The census row: COUNTs read 0 on an empty corpus, SUMs and MAXes
+#: null (the SQL semantics of the x105 oracle).
+_CENSUS_SCHEMA = StructType(
+    [
+        StructField(n, StringType() if n == "max_df_term" else LongType())
+        for n in (
+            "n_terms", "n_docs", "n_postings", "max_df", "max_df_term",
+            "sum_dl", "max_dl", "n_batches",
+        )
+    ]
+)
+
+
+def _census_fold(snap: StoreSnapshot) -> tuple | None:
+    """The census row folded on the driver from the snapshot's stats
+    rows and the dictionary sidecar, or None when a fold cannot be
+    exact: tombstones are pending (the stats and the dictionary still
+    count their documents), the postings and dict batches differ or a
+    postings batch has no stats row (a crash window: postings are
+    written before stats, stats before dict), a stats row lacks
+    n_searchable/max_dl (written from a foreign stats frame), or the
+    dictionary exceeds :data:`_DICT_DRIVER_ROWS`. A batch whose
+    documents indexed no token has a stats row but no postings or dict
+    partition, and folds exactly (n_searchable 0)."""
+    from docker_etl_spark.sources.stores import read_sidecar_rows
+
+    b = snap.batches
+    if (
+        snap.tombstones is not None
+        or b["postings"] != b["dict"]
+        or not set(b["postings"]) <= set(b["stats"])
+    ):
+        return None
+    if any(
+        r.get("n_searchable") is None or r.get("max_dl") is None
+        for r in snap.stats
+    ):
+        return None
+    rows = []
+    if b["dict"]:
+        rows = read_sidecar_rows(
+            snap.spark, snap.path + "/dict", max_rows=_DICT_DRIVER_ROWS,
+            schema=snap.schemas["dict"],
+        )
+        if rows is None:
+            return None
+    df: dict[str, int] = {}
+    for r in rows:
+        if int(r["__batch_id"]) <= snap.upto:
+            df[r["term"]] = df.get(r["term"], 0) + int(r["df"])
+    max_df_term, max_df = min(
+        df.items(), key=lambda kv: (-kv[1], kv[0]), default=(None, None)
+    )
+    n_terms, n_postings = len(df), sum(df.values())
+    n_docs = sum(int(r["n_searchable"]) for r in snap.stats)
+    sum_dl = max_dl = None
+    if n_docs:
+        sum_dl = sum(int(r["sum_dl"]) for r in snap.stats)
+        max_dl = max(int(r["max_dl"]) for r in snap.stats)
+    return (
+        n_terms, n_docs, n_postings, max_df, max_df_term, sum_dl, max_dl,
+        len(b["postings"]),
+    )
+
+
 def search_index_census(spark, path: str) -> DataFrame:
-    """Index observability as ONE aggregate row — the health numbers
-    an operator watches to size compactions and catch ingest
-    anomalies (df skew from a stopword leak, dl drift from a
-    tokenizer change, batch-count growth from a stuck compactor):
+    """Index observability as ONE row — the health numbers an operator
+    watches to size compactions and catch ingest anomalies (df skew
+    from a stopword leak, dl drift from a tokenizer change, batch-count
+    growth from a stuck compactor):
 
     - n_terms / n_docs / n_postings — vocabulary, corpus, and index
-      cardinalities (n_docs from distinct posting ids, so it counts
-      exactly the SEARCHABLE documents);
-    - max_df and its term — the stopword-leak probe;
-    - sum_dl / max_dl — token mass (exact ints, from per-doc firsts
-      so multi-posting docs count once);
-    - n_batches — physical ``__batch_id`` partitions on disk
-      (compaction debt; counts batches whose every document is
-      tombstoned but not yet compacted away).
+      cardinalities (n_docs counts exactly the SEARCHABLE documents,
+      those with at least one live posting);
+    - max_df and its term (ties to the lower term) — the stopword-leak
+      probe;
+    - sum_dl / max_dl — token mass of the searchable documents;
+    - n_batches — physical ``__batch_id`` partitions of the postings,
+      from the snapshot's listing (compaction debt; counts batches
+      whose every document is tombstoned but not yet compacted away).
 
-    The doc-side facts (n_docs, sum_dl, max_dl, n_postings,
-    n_batches) read the postings; the TERM-side facts (n_terms,
-    max_df, max_df_term) read the dictionary sidecar — vocab-scale
-    rows instead of a corpus-scale per-term aggregate (r10 judge item
-    #1). All exact integers — cross-engine replayable.
+    On an empty corpus the COUNTs read 0 and the SUMs and MAXes null.
+    All exact integers — cross-engine replayable.
+
+    FOLD (the common case, no Spark job on a local store): with no
+    pending tombstones, the same batches in postings and dict, a stats
+    row for each, n_searchable/max_dl on every stats row and at most
+    :data:`_DICT_DRIVER_ROWS` dictionary rows, the doc-side facts fold
+    from the snapshot's stats rows (n_docs = Σ n_searchable, sum_dl =
+    Σ sum_dl, max_dl = MAX max_dl) and the term-side facts from the
+    dictionary sidecar read on the driver (n_terms, max_df,
+    max_df_term, and n_postings = Σ df, exact by
+    :func:`_term_dictionary`'s argument).
+
+    SCAN (any other state: pending tombstones, a crash window, stats
+    written from a foreign frame, a larger dictionary): the
+    doc-side facts aggregate the live postings per document, and the
+    term-side facts aggregate :func:`_term_dictionary` — MAX does not
+    fold under deletion, so a store with pending deletes needs it.
     """
     snap = as_snapshot(spark, path)
+    folded = _census_fold(snap)
+    if folded is not None:
+        return _local_frame(spark, [folded], _CENSUS_SCHEMA)
     id_col = _doc_id(snap)
     p = snap.live(snap.read("postings"), id_col)
-    per_term = _term_dictionary(snap).select("term", "df")
-    term_stats = per_term.agg(
+    term_stats = _term_dictionary(snap).agg(
         F.count("*").cast("long").alias("n_terms"),
         F.max("df").cast("long").alias("max_df"),
-    )
-    top_term = (
-        per_term.orderBy(F.desc("df"), F.asc("term"))
-        .limit(1)
-        .select(F.col("term").alias("max_df_term"))
+        # the max-df term, df ties to the lower term
+        F.min(
+            F.struct((-F.col("df")).alias("d"), F.col("term").alias("t"))
+        )["t"].alias("max_df_term"),
     )
     # n_postings rides the per-doc aggregate (sum of per-doc posting
     # counts) so the doc-side facts need ONE scan, not two (r11
-    # judge note)
+    # judge note); the dictionary's Σ df would still count the
+    # pending tombstones' postings
     per_doc = p.groupBy(id_col).agg(
         F.first("dl").cast("long").alias("dl"),
         F.count("*").cast("long").alias("np"),
@@ -1792,7 +1883,7 @@ def search_index_census(spark, path: str) -> DataFrame:
         F.count("*").cast("long").alias("n_docs"),
         F.sum("dl").cast("long").alias("sum_dl"),
         F.max("dl").cast("long").alias("max_dl"),
-        F.sum("np").cast("long").alias("n_postings"),
+        F.coalesce(F.sum("np"), F.lit(0)).cast("long").alias("n_postings"),
     )
     # n_batches describes PHYSICAL layout (compaction debt), so it
     # counts the raw pre-tombstone batches (r12 ADVICE: a batch whose
@@ -1805,12 +1896,8 @@ def search_index_census(spark, path: str) -> DataFrame:
     )
     return (
         glob.crossJoin(F.broadcast(term_stats))
-        .crossJoin(F.broadcast(top_term))
         .crossJoin(F.broadcast(doc_stats))
-        .select(
-            "n_terms", "n_docs", "n_postings", "max_df", "max_df_term",
-            "sum_dl", "max_dl", "n_batches",
-        )
+        .select(*_CENSUS_SCHEMA.names)
     )
 
 
@@ -2188,7 +2275,7 @@ def fuzzy_term_suggest_batch(
 
 
 def _compact_dict_driver_direct(
-    snap: StoreSnapshot, up_to_batch: int, cap: int = 100_000
+    snap: StoreSnapshot, up_to_batch: int
 ) -> dict | None:
     """Driver-direct dictionary fold for :func:`compact_search_index`
     (see the call site): tiered copy of above-horizon delta files +
@@ -2214,10 +2301,10 @@ def _compact_dict_driver_direct(
             _dict_delta(
                 snap.read("postings", F.col("__batch_id") == -1), -1
             )
-            .limit(cap + 1)
+            .limit(_DICT_DRIVER_ROWS + 1)
             .collect()
         )
-        if len(rows) > cap:
+        if len(rows) > _DICT_DRIVER_ROWS:
             return None
         by_pfx = {}
         for r in rows:
@@ -2297,10 +2384,22 @@ def _compact_dict_driver_direct(
         up_to_batch,
         fold,
         group_levels=1,
-        max_rows=cap,
+        max_rows=_DICT_DRIVER_ROWS,
         owner="compact_search_index",
         lock_path=path,
     )
+
+
+def _fold_stat(name: str, vals: list):
+    """One stats column folded over a compaction's batch rows: MAX for
+    max_dl, SUM otherwise (0 over no rows). n_docs and sum_dl count a
+    null as 0; n_searchable and max_dl fold to null when any row lacks
+    them, which keeps the census on its scan arm."""
+    if name in ("n_docs", "sum_dl"):
+        return sum(v or 0 for v in vals)
+    if any(v is None for v in vals):
+        return None
+    return max(vals, default=0) if name == "max_dl" else sum(vals)
 
 
 def compact_search_index(spark, path: str, up_to_batch: int) -> dict:
@@ -2325,9 +2424,10 @@ def compact_search_index(spark, path: str, up_to_batch: int) -> dict:
     - postings: relabel ``__batch_id`` ≤ horizon to -1, keep the
       (``__pfx``, ``__batch_id``) layout — prefix-pruned probe plans
       are untouched;
-    - stats: SUM-fold the (n_docs, sum_dl) rows at or below the
-      horizon — the deltas are mergeable by construction, so
-      below-horizon history collapses to one exact row;
+    - stats: SUM-fold the n_docs, sum_dl and n_searchable rows at or
+      below the horizon and MAX-fold max_dl — the deltas are mergeable
+      by construction, so below-horizon history collapses to one exact
+      row;
     - dict (stores with the r11 dictionary sidecar): relabel then
       SUM-fold df/sum_tf and MAX-fold max_tf per (prefix, term) — a
       term's below-horizon deltas collapse to one dictionary row.
@@ -2374,6 +2474,7 @@ def compact_search_index(spark, path: str, up_to_batch: int) -> dict:
     before / after per store half).
     """
     from docker_etl_spark.sources.stores import (
+        STATS_FIELDS,
         clear_tombstones,
         compact_partitioned_store,
         compact_sidecar_partitioned,
@@ -2439,44 +2540,32 @@ def compact_search_index(spark, path: str, up_to_batch: int) -> dict:
     # pure scheduling for a handful of rows. It folds on the driver
     # instead (tiered: above-horizon delta files are copied
     # byte-for-byte, only the at-or-below-horizon rows are read):
-    # SUM when no tombstones apply; the base row recomputed from the
-    # just-folded base postings (one aggregate job, 2 longs
-    # collected) when they do.
-    recomputed_base: tuple[int, int] | None = None
+    # SUM (MAX for max_dl) when no tombstones apply; the base row
+    # recomputed from the just-folded base postings (one aggregate
+    # job, 4 longs collected) when they do — every surviving document
+    # has a posting, so n_searchable = n_docs there.
+    names = [n for n, _t in STATS_FIELDS]
+    recomputed_base: tuple | None = None
     if del_ids is not None:
         base = snap.read("postings", F.col("__batch_id") == -1)
-        rb = (
+        recomputed_base = tuple(
             base.groupBy(_doc_id_column(base.columns))
             .agg(F.first("dl").cast("long").alias("dl"))
-            .agg(
-                F.count("*").cast("long").alias("n_docs"),
-                F.coalesce(F.sum("dl"), F.lit(0)).cast("long").alias("sum_dl"),
-            )
+            .agg(*_stats_aggs())
             .collect()[0]
         )
-        recomputed_base = (int(rb["n_docs"]), int(rb["sum_dl"]))
 
     def _fold_stats_tables(_gk, tables):
         import pyarrow as pa
 
-        if recomputed_base is not None:
-            nd, sdl = recomputed_base
-        else:
-            nd = sum(
-                sum(v or 0 for v in t.column("n_docs").to_pylist())
-                for t in tables
+        row = recomputed_base
+        if row is None:
+            rows = [r for t in tables for r in t.to_pylist()]
+            row = tuple(
+                _fold_stat(n, [r.get(n) for r in rows]) for n in names
             )
-            sdl = sum(
-                sum(v or 0 for v in t.column("sum_dl").to_pylist())
-                for t in tables
-            )
-        schema = (
-            tables[0].select(["n_docs", "sum_dl"]).schema
-            if tables
-            else pa.schema([("n_docs", pa.int64()), ("sum_dl", pa.int64())])
-        )
         return pa.table(
-            {"n_docs": [int(nd)], "sum_dl": [int(sdl)]}, schema=schema
+            {n: pa.array([v], pa.int64()) for n, v in zip(names, row)}
         )
 
     stats_res = compact_sidecar_partitioned(

@@ -56,12 +56,14 @@ column types.
 STORE SNAPSHOT. A probe, a census, a load or a compaction reads a
 delta store through one :class:`StoreSnapshot` (:func:`open_store`),
 taken once per call, or once per query and passed to each of its
-probes. It pins the store's build parameters and horizon, the
-committed ``__batch_id`` values (every read keeps to the newest of
-them, so a batch committed after the snapshot stays invisible), the
-pending tombstone ids on the driver, and the Spark read
-schema of each data directory (``postings`` and ``dict``, or
-``codes``). The schemas are declared: the store's writer derives them
+probes. It pins the store's build parameters, the committed
+``__batch_id`` values (every read keeps to the newest of them, so a
+batch committed after the snapshot stays invisible), the pending
+tombstone ids on the driver, the rows of a search store's bounded
+``{path}/stats`` sidecar (one per batch: :data:`STATS_FIELDS`), read
+once so that corpus totals and the census fold need no further read,
+and the Spark read schema of each data directory (``postings`` and
+``dict``, or ``codes``). The schemas are declared: the store's writer derives them
 from the frame it writes and records them in ``{path}/meta``, so a
 read is ``spark.read.schema(...).parquet(...)`` — no footer read and
 no schema-inference job on either arm. Partition columns are pinned
@@ -96,6 +98,7 @@ from pyspark.sql.types import (
     ArrayType,
     IntegerType,
     IntegralType,
+    LongType,
     MapType,
     StructField,
     StructType,
@@ -904,6 +907,24 @@ def read_store_meta(spark, path: str) -> tuple[dict, dict] | None:
     return row, {d: StructType.fromJson(t) for d, t in doc.items()}
 
 
+#: The columns of a search store's ``{path}/stats`` sidecar, one row
+#: per ``__batch_id``: the batch's document count, its indexed-token
+#: mass, its searchable documents (``dl > 0``: those with a posting)
+#: and its longest document. A row written from a stats frame that
+#: lacks the last two carries them null.
+STATS_FIELDS = [
+    ("n_docs", "int64"),
+    ("sum_dl", "int64"),
+    ("n_searchable", "int64"),
+    ("max_dl", "int64"),
+]
+
+_STATS_SCHEMA = StructType(
+    [StructField(n, LongType()) for n, _t in STATS_FIELDS]
+    + [StructField("__batch_id", IntegerType())]
+)
+
+
 @dataclass(frozen=True)
 class StoreSnapshot:
     """What one query reads of a delta store, pinned once by
@@ -912,7 +933,6 @@ class StoreSnapshot:
     spark: object
     path: str
     meta: dict  # build parameters (none for IVF-PQ)
-    horizon: int | None
     batches: dict  # directory → committed __batch_id values, ascending
     #: the newest batch every read sees: :func:`open_store`'s
     #: ``as_of_batch``, else the newest batch committed when the
@@ -920,6 +940,9 @@ class StoreSnapshot:
     upto: int | None
     tombstones: tuple | None  # tombstone_ids: the pending ids
     schemas: dict  # data directory → read schema
+    #: the stats sidecar's rows (dicts) at or below ``upto``; empty
+    #: for a store without one
+    stats: tuple
 
     def read(self, d: str, where=None) -> DataFrame:
         """The rows of data directory ``d`` matching ``where``, read with
@@ -945,10 +968,10 @@ def open_store(
     spark, path: str, as_of_batch: int | None = None
 ) -> StoreSnapshot:
     """Pin the delta store at ``path`` for one query: its meta (build
-    parameters and declared schemas — required), horizon, pending
-    tombstones and the committed batch ids (at or below
-    ``as_of_batch``) of its data directories and of ``stats``, which
-    carries every search batch, one that indexed no posting too.
+    parameters and declared schemas — required), pending tombstones,
+    the committed batch ids (at or below ``as_of_batch``) of its data
+    directories and of ``stats``, which carries every search batch,
+    one that indexed no posting too, and those batches' stats rows.
     Driver-direct on a local path: pyarrow and the directory listing,
     no Spark job."""
     got = read_store_meta(spark, path)
@@ -970,9 +993,18 @@ def open_store(
     upto = as_of_batch if as_of_batch is not None else max(
         (b[-1] for b in batches.values() if b), default=None
     )
+    stats = ()
+    if batches["stats"]:
+        stats = tuple(
+            r
+            for r in read_sidecar_rows(
+                spark, f"{path}/stats", schema=_STATS_SCHEMA
+            )
+            if int(r["__batch_id"]) <= upto
+        )
     return StoreSnapshot(
-        spark, path, meta, read_horizon(spark, path), batches, upto,
-        tombstone_ids(spark, path, as_of_batch), schemas,
+        spark, path, meta, batches, upto,
+        tombstone_ids(spark, path, as_of_batch), schemas, stats,
     )
 
 

@@ -303,9 +303,12 @@ def test_fuzzy_suggest_and_census_read_dictionary_not_postings(
 ):
     """Plan pin: on a dictionary store, fuzzy_term_suggest scans ONLY
     {store}/dict, and search_index_census's plan no longer aggregates
-    postings per term (it still reads postings for doc-side facts)."""
+    postings per term: with no pending tombstones it plans no scan at
+    all (a driver-side fold of the stats and dict sidecars), and its
+    scan arm reads postings only for the doc-side facts."""
     from docker_etl_spark.operators.search import (
         build_postings,
+        delete_from_search_index,
         fuzzy_term_suggest,
         write_search_index,
     )
@@ -322,16 +325,22 @@ def test_fuzzy_suggest_and_census_read_dictionary_not_postings(
     # suggestions themselves are unchanged by the dictionary route
     got = fuzzy_term_suggest(spark, store, "alphc", max_dist=2, k=5)
     assert {r["term"] for r in got.collect()} == {"alpha", "alpne"}
-    # census still reads postings (doc-side facts) but its term-side
-    # aggregate now comes from the dictionary
     from docker_etl_spark.operators.search import search_index_census
 
+    census = search_index_census(spark, store)
+    assert census.inputFiles() == []
+    folded = census.collect()[0]
+    # the scan arm (a pending tombstone naming a never-ingested id)
+    # still reads postings (doc-side facts) but its term-side
+    # aggregate comes from the dictionary
+    delete_from_search_index(spark, store, [99], batch_id=0)
     census = search_index_census(spark, store)
     cfiles = census.inputFiles()
     assert any("/dict/" in f for f in cfiles)
     row = census.collect()[0]
     assert (row["n_terms"], row["n_postings"]) == (4, 4)
     assert row["max_df"] == 1
+    assert row == folded
 
 
 def test_bm25_stopword_skip_single_and_batch(spark, tmp_path):

@@ -69,6 +69,7 @@ def _sidecars(path, names):
 
 def _search_lifecycle(spark, path):
     from docker_etl_spark.operators.search import (
+        _census_fold,
         append_search_index,
         delete_from_search_index,
         fuzzy_term_suggest,
@@ -77,12 +78,17 @@ def _search_lifecycle(spark, path):
         search_bm25_topk_pruned,
         search_index_census,
     )
+    from docker_etl_spark.sources.stores import open_store
 
     _search_store(spark, path)
     append_search_index(
         _docs(spark, [r for r in _ROWS if r[0] >= 4]), path, batch_id=1,
         assume_new_ids=False,
     )
+    # no tombstone pending yet: the census folds the stats and dict
+    # sidecars instead of scanning the postings
+    assert _census_fold(open_store(spark, path)) is not None
+    folded = search_index_census(spark, path).collect()
     delete_from_search_index(spark, path, [2, 6], batch_id=2)
     delete_from_search_index(
         spark, path, spark.createDataFrame([(7,), (7,)], "doc_id long"),
@@ -98,8 +104,11 @@ def _search_lifecycle(spark, path):
         "census": search_index_census(spark, path),
     }
     return {
-        name: sorted(tuple(r) for r in df.collect())
-        for name, df in probes.items()
+        "folded_census": [tuple(r) for r in folded],
+        **{
+            name: sorted(tuple(r) for r in df.collect())
+            for name, df in probes.items()
+        },
     }, _sidecars(path, ("meta", "stats", "deletes"))
 
 

@@ -424,6 +424,237 @@ def test_probes_return_the_stores_own_id_column(spark, tmp_path):
         spark, path, "sparc").collect()] == ["spark"]
 
 
+# ---------------------------------------------------------------------------
+# Census: the metadata fold and its scan arm
+# ---------------------------------------------------------------------------
+
+#: the zero-token fixture of the round-10 census test: doc 3 indexes no
+#: token (every word shorter than min_token_len)
+_CENSUS_ROWS = [
+    (1, "aaa bbb aaa"),
+    (2, "bbb ccc"),
+    (3, "x y"),
+    (4, "aaa"),
+]
+
+#: a document id no store here ever ingests
+_NEVER = 10**6
+
+
+def _census(spark, store):
+    """The census of ``store`` as a dict, checking it is one row."""
+    from docker_etl_spark.operators.search import search_index_census
+
+    rows = search_index_census(spark, store).collect()
+    assert len(rows) == 1
+    return rows[0].asDict()
+
+
+def _two_batch_store(spark, path, rows=_CENSUS_ROWS):
+    """``rows`` with ids ≤ 2 as batch 0, the rest appended as batch 1."""
+    from docker_etl_spark.operators.search import append_search_index
+
+    _search_store(spark, path, rows=[r for r in rows if r[0] <= 2])
+    append_search_index(
+        _docs(spark, [r for r in rows if r[0] > 2]), path, batch_id=1
+    )
+    return path
+
+
+def _zero_token(spark, path):
+    return _two_batch_store(spark, path), None, 2
+
+
+def _sum_fold(spark, path):
+    from docker_etl_spark.operators.search import compact_search_index
+
+    _two_batch_store(spark, path)
+    compact_search_index(spark, path, up_to_batch=1)
+    return path, None, 2
+
+
+def _tombstone_fold(spark, path):
+    from docker_etl_spark.operators.search import (
+        compact_search_index,
+        delete_from_search_index,
+    )
+
+    _two_batch_store(spark, path)
+    delete_from_search_index(spark, path, [1], batch_id=2)
+    compact_search_index(spark, path, up_to_batch=2)
+    return path, None, 3
+
+
+def _as_of(spark, path):
+    return _two_batch_store(spark, path), 0, 0
+
+
+def _digits(spark, path):
+    rows = [
+        (1, "1234 5678 1234 9012"),
+        (2, "5678 9012 3456"),
+        (3, "1234 3457 7890 7890"),
+        (4, "9012 9013 1234"),
+    ]
+    return _two_batch_store(spark, path, rows), None, 2
+
+
+def _tokenless_batch(spark, path):
+    """A third batch whose only document indexes no token: stats gets
+    its row, postings and dict no partition."""
+    from docker_etl_spark.operators.search import append_search_index
+
+    _two_batch_store(spark, path)
+    append_search_index(_docs(spark, [(5, "a b c")]), path, batch_id=2)
+    return path, None, 3
+
+
+def _meta_only(spark, path):
+    """The crash window after the first write's meta: no batch of any
+    directory committed."""
+    _search_store(spark, path, rows=[])
+    shutil.rmtree(path + "/stats")
+    return path, None, 0
+
+
+@pytest.mark.parametrize(
+    "state",
+    [_zero_token, _sum_fold, _tombstone_fold, _as_of, _digits,
+     _tokenless_batch, _meta_only],
+    ids=["zero_token", "sum_fold", "tombstone_fold", "as_of", "digits",
+         "tokenless_batch", "meta_only"],
+)
+def test_census_fold_equals_scan(spark, tmp_path, state):
+    """The census folded from the stats and dict sidecars equals the
+    postings scan across store states. The reference scan is forced by
+    a pending tombstone that names a never-ingested id, which changes
+    no answer."""
+    from docker_etl_spark.operators.search import (
+        _census_fold,
+        delete_from_search_index,
+    )
+    from docker_etl_spark.sources.stores import open_store
+
+    path, as_of, tomb_batch = state(spark, str(tmp_path / "s"))
+    snap = open_store(spark, path, as_of_batch=as_of)
+    assert _census_fold(snap) is not None
+    folded = _census(spark, snap)
+    delete_from_search_index(spark, path, [_NEVER], batch_id=tomb_batch)
+    snap = open_store(spark, path, as_of_batch=as_of)
+    assert snap.tombstones == (_NEVER,)
+    assert _census_fold(snap) is None
+    assert _census(spark, snap) == folded
+
+
+def test_census_fold_counts_by_hand_and_takes_no_job(spark, tmp_path):
+    """With no pending tombstones the census launches no Spark job, and
+    answers the round-10 hand counts (doc 3 indexed no token, so it is
+    not a searchable document)."""
+    path = _two_batch_store(spark, str(tmp_path / "hand"))
+    want = {
+        "n_terms": 3, "n_docs": 3, "n_postings": 5, "max_df": 2,
+        "max_df_term": "aaa", "sum_dl": 6, "max_dl": 3, "n_batches": 2,
+    }
+    _census(spark, path)  # warm
+    got = {}
+    jobs = _stage_names(spark, lambda: got.update(_census(spark, path)))
+    assert jobs == []
+    assert got == want
+
+
+def _foreign_stats(spark, path):
+    """Stats written from a frame without n_searchable/max_dl (postings
+    built elsewhere carry no stats observation)."""
+    from docker_etl_spark.operators.search import (
+        append_search_index,
+        build_postings,
+        write_search_index,
+    )
+
+    p, s = build_postings(
+        _docs(spark, [r for r in _CENSUS_ROWS if r[0] <= 2]), "text", "doc_id"
+    )
+    write_search_index(
+        p.select("*"), s.select("n_docs", "sum_dl"), path, batch_id=0
+    )
+    append_search_index(
+        _docs(spark, [r for r in _CENSUS_ROWS if r[0] > 2]), path, batch_id=1
+    )
+
+
+def _two_column_stats(spark, path):
+    """Stats files with only the n_docs and sum_dl columns, as stores
+    written before n_searchable/max_dl existed have them."""
+    import pyarrow.parquet as pq
+
+    _two_batch_store(spark, path)
+    for f in Path(path, "stats").rglob("*.parquet"):
+        pq.write_table(pq.read_table(f, columns=["n_docs", "sum_dl"]), f)
+    # the Spark arm's writer left checksums of the old bytes
+    for f in Path(path, "stats").rglob(".*.crc"):
+        f.unlink()
+
+
+def _uncommitted_dict(spark, path):
+    _two_batch_store(spark, path)
+    shutil.rmtree(path + "/dict")
+
+
+@pytest.mark.parametrize("arm", ["direct", "spark"])
+@pytest.mark.parametrize(
+    "state",
+    [_foreign_stats, _two_column_stats, _uncommitted_dict],
+    ids=["foreign_stats", "two_column_stats", "uncommitted_dict"],
+)
+def test_census_scans_where_no_fold_is_exact(
+    spark, tmp_path, monkeypatch, state, arm
+):
+    """A stats row without the fold's facts (null, or a file without
+    the columns) and the uncommitted-dict crash window each take the
+    scan, which answers as the folded census of the intact store — on
+    the driver-direct sidecar arm and on the Spark arm an object-store
+    deployment runs."""
+    from docker_etl_spark.operators.search import _census_fold
+    from docker_etl_spark.sources import stores
+    from docker_etl_spark.sources.stores import open_store
+
+    if arm == "spark":
+        monkeypatch.setattr(stores, "_driver_direct", lambda path: None)
+    want = _census(spark, _two_batch_store(spark, str(tmp_path / "ok")))
+    path = str(tmp_path / "s")
+    state(spark, path)
+    snap = open_store(spark, path)
+    assert _census_fold(snap) is None
+    assert _census(spark, snap) == want
+
+
+def test_census_of_an_emptied_store_is_one_row(spark, tmp_path):
+    """Both documents deleted: the census is one row, pending (dict
+    term facts still count the deleted documents, the doc-side COUNTs
+    read 0 and its SUM/MAX null) and after the compaction that applies
+    the deletes (every COUNT 0, every SUM/MAX null)."""
+    from docker_etl_spark.operators.search import (
+        compact_search_index,
+        delete_from_search_index,
+    )
+
+    path = _search_store(
+        spark, str(tmp_path / "empty"), rows=_CENSUS_ROWS[:2]
+    )
+    delete_from_search_index(spark, path, [1, 2], batch_id=1)
+    assert _census(spark, path) == {
+        "n_terms": 3, "n_docs": 0, "n_postings": 0, "max_df": 2,
+        "max_df_term": "bbb", "sum_dl": None, "max_dl": None,
+        "n_batches": 1,
+    }
+    compact_search_index(spark, path, up_to_batch=1)
+    assert _census(spark, path) == {
+        "n_terms": 0, "n_docs": 0, "n_postings": 0, "max_df": None,
+        "max_df_term": None, "sum_dl": None, "max_dl": None,
+        "n_batches": 0,
+    }
+
+
 def test_batch_id_must_fit_the_declared_int(spark, tmp_path):
     """``__batch_id`` is declared int: a batch id past it is refused
     before anything is written, not read back as null."""
@@ -495,7 +726,7 @@ _SCANNED = (
 _INFERRING_READS = {
     ("docker_etl_spark/sources/stores.py", "read_sidecar_rows"):
         "Spark arm of a bounded sidecar with no declared schema (meta, "
-        "horizon, stats, deletes, quantizer); local stores read pyarrow",
+        "horizon, deletes, quantizer); local stores read pyarrow",
     ("docker_etl_spark/operators/text_dedup.py", "load_signature_store"):
         "public reader with no batch to type the id column from; the "
         "streaming ledger sink reads with signature_store_schema",
